@@ -1,79 +1,61 @@
 package graft
 
-import graft.functions.{CmsEstimate, CmsSketch, CosineSimilarity, HllSketch}
+import graft.functions.{CdcChunks, CmsEstimate, CmsSketch, CosineSimilarity, HllSketch, KGrams}
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 
-/** The engine's public integration point: a `SparkSessionExtensions`
-  * installer exposing every native graft function through the BLESSED
-  * extension API —
+/** The engine's public SQL integration point: a `SparkSessionExtensions`
+  * installer exposing the native graft functions to plain SQL —
   *
   *   SparkSession.builder()
   *     .config("spark.sql.extensions", "graft.GraftExtensions")  // or
   *     .withExtensions(new GraftExtensions)
   *
-  * — so a user (or Thrift/Connect server) gets `cosine_sim`, `hll_distinct`,
-  * `h60`, and the Bloom pair in plain SQL without touching internals. The
-  * in-repo operators keep their lazy per-session `register()` calls (they
-  * must work on an un-extended session, e.g. the driver harness's); this
-  * class is the front door for everyone else.
+  * — so a user (or Thrift/Connect server) gets `cosine_sim`,
+  * `hll_distinct`, `h60`, `cms_sketch`/`cms_estimate`, the Bloom pair
+  * (`graft_bloom_agg`/`graft_bloom_might_contain`), `kgrams` and
+  * `cdc_chunks` without touching internals. This is the only place that
+  * knows SQL names: the operators build the same expressions as Columns
+  * (`KGrams.col`, `vec.cosine`, … over `org.apache.spark.sql.NativeColumn`)
+  * and never write into a session's function registry.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
+  override def apply(ext: SparkSessionExtensions): Unit =
+    for ((name, (arity, build)) <- GraftExtensions.functions)
+      ext.injectFunction((
+        FunctionIdentifier(name),
+        new ExpressionInfo(classOf[GraftExtensions].getName, name),
+        (args: Seq[Expression]) => {
+          if (args.size != arity) throw new IllegalArgumentException(
+            s"$name expects $arity argument(s), got ${args.size}")
+          build(args)
+        }))
+}
 
-  private def info(clazz: Class[_], name: String): ExpressionInfo =
-    new ExpressionInfo(clazz.getName, name)
+object GraftExtensions {
+  /** SQL name → (arity, builder). */
+  private[graft] val functions: Map[String, (Int, Seq[Expression] => Expression)] = Map(
+    "cosine_sim" -> (2, a => CosineSimilarity(a(0), a(1))),
+    "hll_distinct" -> (1, a => HllSketch(a(0)).toAggregateExpression()),
+    // cross-engine md5-prefix hash, SQL-reachable for ad-hoc sketch work
+    "h60" -> (1, a => XHash.h60Expr(a(0))),
+    "cms_sketch" -> (1, a => CmsSketch(a(0)).toAggregateExpression()),
+    "cms_estimate" -> (2, a => CmsEstimate(a(0), a(1))),
+    "graft_bloom_agg" -> (3, a =>
+      new BloomFilterAggregate(a(0), a(1), a(2)).toAggregateExpression()),
+    "graft_bloom_might_contain" -> (2, a => BloomFilterMightContain(a(0), a(1))),
+    // the two scan-side text shredders: shingling and content-defined
+    // chunking for ad-hoc dedup work
+    "kgrams" -> (2, a => KGrams(a(0), intLit("kgrams", "k", a(1)))),
+    "cdc_chunks" -> (2, a => CdcChunks(a(0), intLit("cdc_chunks", "mask", a(1)))))
 
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("cosine_sim"),
-      info(classOf[CosineSimilarity], "cosine_sim"),
-      (exprs: Seq[Expression]) => CosineSimilarity(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("hll_distinct"),
-      info(classOf[HllSketch], "hll_distinct"),
-      (exprs: Seq[Expression]) => HllSketch(exprs.head).toAggregateExpression()))
-    ext.injectFunction((
-      FunctionIdentifier("h60"),
-      info(classOf[XHash.type], "h60"),
-      // cross-engine md5-prefix hash, SQL-reachable for ad-hoc sketch work
-      (exprs: Seq[Expression]) => XHash.h60Expr(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("cms_sketch"),
-      info(classOf[CmsSketch], "cms_sketch"),
-      (exprs: Seq[Expression]) => CmsSketch(exprs.head).toAggregateExpression()))
-    ext.injectFunction((
-      FunctionIdentifier("cms_estimate"),
-      info(classOf[CmsEstimate], "cms_estimate"),
-      (exprs: Seq[Expression]) => CmsEstimate(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_bloom_agg"),
-      info(classOf[BloomFilterAggregate], "graft_bloom_agg"),
-      (exprs: Seq[Expression]) =>
-        new BloomFilterAggregate(exprs(0), exprs(1), exprs(2)).toAggregateExpression()))
-    ext.injectFunction((
-      FunctionIdentifier("graft_bloom_might_contain"),
-      info(classOf[BloomFilterMightContain], "graft_bloom_might_contain"),
-      (exprs: Seq[Expression]) => BloomFilterMightContain(exprs(0), exprs(1))))
-    // the two scan-side text shredders (round 5): SQL-reachable shingling
-    // and content-defined chunking for ad-hoc dedup work
-    ext.injectFunction((
-      FunctionIdentifier("kgrams"),
-      info(classOf[graft.functions.KGrams], "kgrams"),
-      (exprs: Seq[Expression]) =>
-        graft.functions.KGrams(exprs(0), intLit(exprs(1), "kgrams k"))))
-    ext.injectFunction((
-      FunctionIdentifier("cdc_chunks"),
-      info(classOf[graft.functions.CdcChunks], "cdc_chunks"),
-      (exprs: Seq[Expression]) =>
-        graft.functions.CdcChunks(exprs(0), intLit(exprs(1), "cdc_chunks mask"))))
-  }
-
-  private def intLit(e: Expression, what: String): Int = e.eval() match {
-    case i: Int => i
-    case l: Long => l.toInt
-    case other => throw new IllegalArgumentException(
-      s"$what must be an integer literal, got $other")
-  }
+  private def intLit(fn: String, param: String, e: Expression): Int =
+    (if (e.foldable) e.eval() else null) match {
+      case i: Int => i
+      case l: Long if l.isValidInt => l.toInt
+      case _ => throw new IllegalArgumentException(
+        s"$fn: $param must be an integer literal, got ${e.sql}")
+    }
 }

@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, NativeColumn, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Cast, Expression}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -193,15 +194,10 @@ object XHash {
     * column formula paid per row on the per-shingle hot path.
     * [[h60Legacy]] keeps the original formula for the equivalence spec. */
   def h60(c: Column): Column =
-    org.apache.spark.sql.SparkSession.getActiveSession match {
-      case Some(s) =>
-        graft.functions.Registry.registerOnce(s, "graft_h60")(h60Expr _ compose (_.head))
-        org.apache.spark.sql.functions.call_function("graft_h60", c)
-      case None => h60Legacy(c) // plan built off-session: keep the slow-but-equal form
-    }
+    NativeColumn(h60Expr(NativeColumn.expression(c)))
 
   /** The round-1..12 column formula, retained as the spec's ground truth
-    * (XHashEquivalenceSpec pins h60 ≡ h60Legacy on edge-case strings). */
+    * (XHashSpec pins h60 ≡ h60Legacy on edge-case strings). */
   private[graft] def h60Legacy(c: Column): Column =
     conv(substring(md5(c.cast(BinaryType)), 1, 15), 16, 10).cast(LongType)
 
@@ -209,12 +205,10 @@ object XHash {
   def sqlH60(x: String): String =
     s"CAST(('0x' || substring(md5($x), 1, 15)) AS BIGINT)"
 
-  /** Raw-Expression form for [[graft.GraftExtensions]]' SQL `h60(expr)`. */
-  def h60Expr(e: org.apache.spark.sql.catalyst.expressions.Expression)
-      : org.apache.spark.sql.catalyst.expressions.Expression = {
-    import org.apache.spark.sql.catalyst.expressions.Cast
+  /** Expression form, shared by [[h60]] and the SQL `h60(expr)` of
+    * [[graft.GraftExtensions]]. */
+  def h60Expr(e: Expression): Expression =
     graft.functions.Md5Prefix60(Cast(e, BinaryType))
-  }
 }
 
 /** Determinism-contract helpers (SURVEY.md §2.5).

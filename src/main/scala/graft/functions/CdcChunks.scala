@@ -2,7 +2,7 @@ package graft.functions
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, NativeColumn}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -101,15 +101,7 @@ object CdcChunks {
     new GenericArrayData(out.toArray)
   }
 
-  /** Registers `cdc_chunks(text, mask)` in the session registry (once per
-    * session — [[Registry.registerOnce]]) so the expression is reachable
-    * from `expr` and SQL. */
-  def register(spark: SparkSession): Unit =
-    Registry.registerOnce(spark, "cdc_chunks")(
-      exprs => CdcChunks(exprs(0), exprs(1).eval() match {
-        case i: Int => i
-        case l: Long => l.toInt
-        case other => throw new IllegalArgumentException(
-          s"cdc_chunks mask must be an integer literal, got $other")
-      }))
+  /** `cdc_chunks(text, mask)` as a Column. */
+  def col(text: Column, mask: Int): Column =
+    NativeColumn(CdcChunks(NativeColumn.expression(text), mask))
 }

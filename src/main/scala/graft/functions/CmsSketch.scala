@@ -2,7 +2,7 @@ package graft.functions
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, NativeColumn}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -138,12 +138,11 @@ object CmsEstimate {
 }
 
 object cms {
-  /** Registers SQL `cms_sketch(expr)` + `cms_estimate(sketch, expr)`;
-    * once per session via [[Registry.registerOnce]]. */
-  def register(spark: SparkSession): Unit = {
-    Registry.registerOnce(spark, "cms_sketch")(
-      exprs => CmsSketch(exprs.head).toAggregateExpression())
-    Registry.registerOnce(spark, "cms_estimate")(
-      exprs => CmsEstimate(exprs(0), exprs(1)))
-  }
+  /** `cms_sketch(c)` as an aggregate Column. */
+  def sketch(c: Column): Column =
+    NativeColumn(CmsSketch(NativeColumn.expression(c)).toAggregateExpression())
+
+  /** `cms_estimate(sketch, c)` as a Column. */
+  def estimate(sketch: Column, c: Column): Column =
+    NativeColumn(CmsEstimate(NativeColumn.expression(sketch), NativeColumn.expression(c)))
 }

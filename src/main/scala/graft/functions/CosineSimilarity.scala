@@ -1,10 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, NativeColumn}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.{expr, lit, round}
+import org.apache.spark.sql.functions.{lit, round}
 import org.apache.spark.sql.types._
 
 /** Native Catalyst cosine-similarity over two `ArrayType(FloatType)` columns.
@@ -89,18 +89,9 @@ case class CosineSimilarity(left: Expression, right: Expression)
 }
 
 object vec {
-  /** Registers `cosine_sim` in the session's function registry (once per
-    * session — [[Registry.registerOnce]]) so the native expression is
-    * reachable from both the Column API and SQL. */
-  def register(spark: SparkSession): Unit =
-    Registry.registerOnce(spark, "cosine_sim")(
-      exprs => CosineSimilarity(exprs(0), exprs(1)))
-
-  /** Column-API entry point over attribute names: `vec.cosine(spark, "a", "b")`. */
-  def cosine(spark: SparkSession, a: String, b: String): Column = {
-    register(spark)
-    expr(s"cosine_sim(`$a`, `$b`)")
-  }
+  /** `cosine_sim(a, b)` as a Column. */
+  def cosine(a: Column, b: Column): Column =
+    NativeColumn(CosineSimilarity(NativeColumn.expression(a), NativeColumn.expression(b)))
 
   /** Round to `n` dp and normalize the IEEE signed zero (SURVEY §2.5 R8):
     * DuckDB's `ROUND` of a tiny negative value emits -0.0 where Spark's

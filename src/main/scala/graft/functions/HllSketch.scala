@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, NativeColumn}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -24,7 +24,7 @@ import org.apache.spark.sql.types._
   * of row count.
   *
   * Input is LongType (callers cast/hash other types first — see
-  * `hll.register` which exposes SQL `hll_distinct(expr)`).
+  * [[hll.distinct]], SQL `hll_distinct(expr)`).
   */
 case class HllSketch(
     child: Expression,
@@ -184,12 +184,7 @@ object HllSketch {
 }
 
 object hll {
-  /** Registers SQL `hll_distinct(expr)` (expr must be castable to BIGINT);
-    * once per session via [[Registry.registerOnce]]. */
-  def register(spark: SparkSession): Unit =
-    Registry.registerOnce(spark, "hll_distinct")(
-      exprs => {
-        require(exprs.length == 1, s"hll_distinct expects 1 argument, got ${exprs.length}")
-        HllSketch(exprs.head).toAggregateExpression()
-      })
+  /** `hll_distinct(c)` as an aggregate Column (`c` castable to BIGINT). */
+  def distinct(c: Column): Column =
+    NativeColumn(HllSketch(NativeColumn.expression(c)).toAggregateExpression())
 }

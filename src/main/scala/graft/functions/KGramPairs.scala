@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, NativeColumn}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -88,13 +88,7 @@ object KGramPairs {
     new GenericArrayData(out)
   }
 
-  /** Registers `gram_pairs(text, k)` once per session ([[Registry.registerOnce]]). */
-  def register(spark: SparkSession): Unit =
-    Registry.registerOnce(spark, "gram_pairs")(
-      exprs => KGramPairs(exprs(0), exprs(1).eval() match {
-        case i: Int => i
-        case l: Long => l.toInt
-        case other => throw new IllegalArgumentException(
-          s"gram_pairs k must be an integer literal, got $other")
-      }))
+  /** `gram_pairs(text, k)` as a Column. */
+  def col(text: Column, k: Int): Column =
+    NativeColumn(KGramPairs(NativeColumn.expression(text), k))
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, NativeColumn}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -69,15 +69,7 @@ object KGrams {
     new GenericArrayData(out)
   }
 
-  /** Registers `kgrams(text, k)` in the session registry (once per session —
-    * [[Registry.registerOnce]]) so the expression is reachable from the
-    * Column API (`expr`) and SQL. */
-  def register(spark: SparkSession): Unit =
-    Registry.registerOnce(spark, "kgrams")(
-      exprs => KGrams(exprs(0), exprs(1).eval() match {
-        case i: Int => i
-        case l: Long => l.toInt
-        case other => throw new IllegalArgumentException(
-          s"kgrams k must be an integer literal, got $other")
-      }))
+  /** `kgrams(text, k)` as a Column. */
+  def col(text: Column, k: Int): Column =
+    NativeColumn(KGrams(NativeColumn.expression(text), k))
 }

@@ -21,7 +21,7 @@ import org.apache.spark.sql.types._
   * replay). This expression computes the same MD5 digest and reads the
   * first 60 bits straight out of the digest bytes: no hex encode, no
   * substring, no string-to-number parse (guide §1.2 step 2). The digest
-  * instance is reused per thread. XHashEquivalenceSpec pins new ≡ old on
+  * instance is reused per thread. XHashSpec pins new ≡ old on
   * edge-case and fixture strings.
   */
 case class Md5Prefix60(child: Expression)

@@ -117,10 +117,10 @@ case class PqEncode(
 /** Asymmetric-distance (ADC) scorer over PQ codes, multi-query form
   * (round 7, VERDICT item 7): `Σ_m lut[q·M·Ks + m·Ks + code_m]`, an exact
   * integer sum of the per-subspace quantized distances each query
-  * precomputed against every codeword — ONE registered function for ANY
-  * number of queries, replacing the round-4 shape that registered
-  * `pq_adc_$qi` per query (a linear session-registry leak) and carried
-  * each query's LUT as a separate plan reference. The stacked lookup
+  * precomputed against every codeword — ONE expression for ANY number of
+  * queries, replacing the round-4 shape that registered `pq_adc_$qi` per
+  * query (a linear session-registry leak) and carried each query's LUT as
+  * a separate plan reference. The stacked lookup
   * table — query-major slabs, then subspace-major — travels as ONE
   * BROADCAST (the [[TopCells]] round-6 contract), the queries travel as a
   * broadcast RELATION carrying their slab index, and scoring is
@@ -143,7 +143,7 @@ case class PqAdcMulti(
   override def prettyName: String = "pq_adc_multi"
 
   // round 8 (ADVICE): a qidx outside the stacked LUT's slab range — a
-  // mis-built query relation or a stale registered factory paired with a
+  // mis-built query relation or a stale factory paired with a
   // wider qidx column — must fail with the CONTRACT named, not as a raw
   // ArrayIndexOutOfBoundsException from inside generated code (or a silent
   // wrong-slab read if negative arithmetic ever fed the index).
@@ -215,51 +215,5 @@ object PqAdcMulti {
         s"= ${nQueries.toLong * numSubspaces * ks} entries, got ${lut.size}")
     val bc = spark.sparkContext.broadcast(lut.toArray)
     (codes, qidx) => PqAdcMulti(codes, qidx, bc, numSubspaces, ks)
-  }
-}
-
-/** Registry front door for the PQ expressions: the codebook/lookup-table is
-  * plan-build data (collected seeds / trained codewords), so the Column API
-  * can't take it as a SQL argument — instead each plan registers a temp
-  * function whose BUILDER captures the instance, then reaches it via
-  * `call_function` (the [[vec.register]] pattern; createOrReplace semantics,
-  * and Verify/Bench drive one query at a time on a session, so the last
-  * registration is always the live plan's). */
-object pq {
-  import org.apache.spark.sql.SparkSession
-  import org.apache.spark.sql.classic.ClassicConversions.castToImpl
-
-  def register(
-      spark: SparkSession,
-      name: String,
-      builder: Seq[Expression] => Expression): Unit =
-    castToImpl(spark).sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, builder, "built-in")
-
-  private val uniq = new java.util.concurrent.atomic.AtomicLong(0L)
-
-  /** Bound on live `_uN` registrations (round 9, ADVICE): names cycle
-    * through a ring of this many slots instead of growing forever, so a
-    * long-lived serving session that builds thousands of assign/probe
-    * plans holds a BOUNDED FunctionRegistry. Uniqueness only has to cover
-    * the window between a plan's registration and its eager analysis
-    * (microseconds on the building thread) — a collision needs RingSize
-    * interleaved registrations inside that window. */
-  private val RingSize = 1024L
-
-  /** Register under a per-call UNIQUE name (`base_uN`, N cycling through a
-    * bounded ring) and return it — for plan-build-time registrations on a
-    * SHARED session (round 8, ADVICE): two plans built concurrently with a
-    * fixed name could resolve each other's factory between register and
-    * eager analysis; a unique name makes the registration private to the
-    * plan being built. Plan pins are unaffected — plans print the resolved
-    * expression's prettyName, not the registry key. */
-  def registerUnique(
-      spark: SparkSession,
-      base: String,
-      builder: Seq[Expression] => Expression): String = {
-    val name = s"${base}_u${uniq.incrementAndGet() % RingSize}"
-    register(spark, name, builder)
-    name
   }
 }

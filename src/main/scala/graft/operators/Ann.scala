@@ -1,9 +1,10 @@
 package graft.operators
 
-import graft.functions.{pq, vec, PqEncode, TopCells, VectorCentroid}
+import graft.functions.{vec, PqEncode, TopCells, VectorCentroid}
 import graft.{GQ, Tables}
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, NativeColumn}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -193,28 +194,25 @@ object Ann {
     * that contract) — and keeps planning O(1) in k, which matters now that
     * k SCALES WITH CORPUS SIZE ([[CellTarget]]): at k in the hundreds the
     * struct tree would hit the wide-tree planning trap [[PqEncode]]
-    * documents. Each call registers a temp function capturing the centroid
-    * set (analysis binds the builder at Dataset creation, so sequential
-    * re-registrations never cross plans). Still a pure projection: no
-    * crossJoin, no window, no exchange. */
+    * documents. Still a pure projection: no crossJoin, no window, no
+    * exchange. */
   private def cellsOf(
       s: SparkSession,
       cents: Seq[(Int, Array[Float])],
-      topN: Int,
-      name: String): Column = {
+      topN: Int): Column = {
     require(cents.zipWithIndex.forall { case ((cid, _), i) => cid == i },
       "centroid ids must be contiguous from 0 (cid == position)")
     val m = cents.map(_._2.toVector).toVector
     // round 6: the codebook travels as ONE broadcast relation — the plan
     // holds a handle (O(1) size at any k = N/125), executors fetch the
     // matrix once per JVM, and the k·dim doubles are never serialized into
-    // task binaries or plan constants again. Round 8 (ADVICE): the
-    // registration name is uniquified per call — concurrent plan builds on
-    // the shared session can no longer resolve each other's factory.
-    val factory = TopCells.broadcastOf(s, m, topN, CosQuantScale)
-    val fn = pq.registerUnique(s, name, exprs => factory(exprs.head))
-    call_function(fn, col("embedding"))
+    // task binaries or plan constants again.
+    onEmbedding(TopCells.broadcastOf(s, m, topN, CosQuantScale))
   }
+
+  /** A native expression over the `embedding` column, as a Column. */
+  private def onEmbedding(build: Expression => Expression): Column =
+    NativeColumn(build(NativeColumn.expression(col("embedding"))))
 
   private[graft] def assignTo(
       s: SparkSession,
@@ -222,7 +220,7 @@ object Ann {
       cents: Seq[(Int, Array[Float])]): DataFrame =
     e.select(
       col("vec_id"), col("embedding"),
-      element_at(cellsOf(s, cents, 1, "ann_assign"), 1)
+      element_at(cellsOf(s, cents, 1), 1)
         .cast("bigint").as("cid"))
 
   /** Query-side multi-cell probe: one row per (vector, probed cid) for the
@@ -237,7 +235,7 @@ object Ann {
       nprobe: Int): DataFrame =
     e.select(
       col("vec_id"), col("embedding"),
-      explode(cellsOf(s, cents, nprobe, "ann_probe")).as("p"))
+      explode(cellsOf(s, cents, nprobe)).as("p"))
       .select(
         col("vec_id"), col("embedding"), col("p").cast("bigint").as("cid"))
 
@@ -395,22 +393,20 @@ object Ann {
         bc
       }
 
-    private def cellsCol(s: SparkSession, topN: Int, base: String): Column = {
+    private def cellsCol(s: SparkSession, topN: Int): Column = {
       val (h, dim) = (handle(s), cents.head._2.length)
-      val fn = pq.registerUnique(s, base, exprs =>
-        TopCells(exprs.head, h, cents.size, dim, topN, CosQuantScale))
-      call_function(fn, col("embedding"))
+      onEmbedding(TopCells(_, h, cents.size, dim, topN, CosQuantScale))
     }
 
     def assign(s: SparkSession, e: DataFrame): DataFrame =
       e.select(
         col("vec_id"), col("embedding"),
-        element_at(cellsCol(s, 1, "ann_assign"), 1)
+        element_at(cellsCol(s, 1), 1)
           .cast("bigint").as("cid"))
     def probe(s: SparkSession, e: DataFrame, nprobe: Int): DataFrame =
       e.select(
         col("vec_id"), col("embedding"),
-        explode(cellsCol(s, nprobe, "ann_probe")).as("p"))
+        explode(cellsCol(s, nprobe)).as("p"))
         .select(
           col("vec_id"), col("embedding"), col("p").cast("bigint").as("cid"))
   }
@@ -445,25 +441,22 @@ object Ann {
         bc
       }
 
-    private def cellsCol(
-        s: SparkSession, topN: Int, name: String): Column = {
+    private def cellsCol(s: SparkSession, topN: Int): Column = {
       val (topBc, subBc) = handles(s)
-      val fn = pq.registerUnique(s, name, exprs =>
-        graft.functions.TwoLevelCells(exprs.head, topBc, subBc, top.size,
-          subK, top.head.size, TopProbe, topN, CosQuantScale))
-      call_function(fn, col("embedding"))
+      onEmbedding(graft.functions.TwoLevelCells(_, topBc, subBc, top.size,
+        subK, top.head.size, TopProbe, topN, CosQuantScale))
     }
 
     def assign(s: SparkSession, e: DataFrame): DataFrame =
       e.select(
         col("vec_id"), col("embedding"),
-        element_at(cellsCol(s, 1, "ann_assign2"), 1)
+        element_at(cellsCol(s, 1), 1)
           .cast("bigint").as("cid"))
 
     def probe(s: SparkSession, e: DataFrame, nprobe: Int): DataFrame =
       e.select(
         col("vec_id"), col("embedding"),
-        explode(cellsCol(s, nprobe, "ann_probe2")).as("p"))
+        explode(cellsCol(s, nprobe)).as("p"))
         .select(
           col("vec_id"), col("embedding"), col("p").cast("bigint").as("cid"))
   }
@@ -621,19 +614,16 @@ object Ann {
         bc
       }
 
-    private def cellsCol(
-        s: SparkSession, topN: Int, pSide: Int, name: String): Column = {
+    private def cellsCol(s: SparkSession, topN: Int, pSide: Int): Column = {
       val (aBc, bBc) = handles(s)
-      val fn = pq.registerUnique(s, name, exprs =>
-        graft.functions.ProductCells(exprs.head, aBc, bBc, a.size, b.size,
-          dim, pSide, topN, D2QuantScale))
-      call_function(fn, col("embedding"))
+      onEmbedding(graft.functions.ProductCells(_, aBc, bBc, a.size, b.size,
+        dim, pSide, topN, D2QuantScale))
     }
 
     def assign(s: SparkSession, e: DataFrame): DataFrame =
       e.select(
         col("vec_id"), col("embedding"),
-        element_at(cellsCol(s, 1, 1, "ann_assignp"), 1)
+        element_at(cellsCol(s, 1, 1), 1)
           .cast("bigint").as("cid"))
 
     // probe emits a pSide²-cell multi-sequence frontier; since round 11
@@ -656,7 +646,7 @@ object Ann {
       val pSide = probeSide(nprobe)
       e.select(
         col("vec_id"), col("embedding"),
-        explode(cellsCol(s, pSide * pSide, pSide * pSide, "ann_probep")).as("p"))
+        explode(cellsCol(s, pSide * pSide, pSide * pSide)).as("p"))
         .select(
           col("vec_id"), col("embedding"), col("p").cast("bigint").as("cid"))
     }
@@ -737,8 +727,7 @@ object Ann {
     * top-[[TopK]]. On a cid-bucketed source the self-join is
     * exchange-free; the only shuffle left is the per-vector ranking
     * window (pinned in IndexLifecycleSpec). */
-  private[graft] def knnJoinFrom(s: SparkSession, asg: DataFrame): DataFrame = {
-    vec.register(s)
+  private[graft] def knnJoinFrom(asg: DataFrame): DataFrame = {
     val a = asg.select(col("cid"), col("vec_id"), col("embedding").as("ea"))
     val b = asg.select(col("cid"), col("vec_id").as("neighbor_id"),
       col("embedding").as("eb"))
@@ -746,7 +735,7 @@ object Ann {
       .orderBy(col("cq").desc, col("neighbor_id"))
     a.join(b, "cid").filter(col("vec_id") =!= col("neighbor_id"))
       .select(col("vec_id"), col("neighbor_id"),
-        call_function("cosine_sim", col("ea"), col("eb")).as("c"))
+        vec.cosine(col("ea"), col("eb")).as("c"))
       .select(col("vec_id"), col("neighbor_id"),
         vec.roundz(col("c"), 3).as("cos_sim"), quant(col("c")).as("cq"))
       .withColumn("rn", row_number().over(wTop).cast("bigint"))
@@ -760,16 +749,14 @@ object Ann {
     * global top-20 by quantized cosine. On a cid-bucketed source the plan
     * is exchange-FREE (the global top-20 is a TakeOrderedAndProject, not a
     * sort exchange). */
-  private[graft] def semanticDedupFrom(
-      s: SparkSession, asg: DataFrame): DataFrame = {
-    vec.register(s)
+  private[graft] def semanticDedupFrom(asg: DataFrame): DataFrame = {
     val a = asg.select(col("cid"), col("vec_id").as("a_id"),
       col("embedding").as("ea"))
     val b = asg.select(col("cid"), col("vec_id").as("b_id"),
       col("embedding").as("eb"))
     a.join(b, "cid").filter(col("a_id") < col("b_id"))
       .select(col("cid"), col("a_id"), col("b_id"),
-        call_function("cosine_sim", col("ea"), col("eb")).as("c"))
+        vec.cosine(col("ea"), col("eb")).as("c"))
       .select(col("cid"), col("a_id"), col("b_id"),
         vec.roundz(col("c"), 3).as("cos_sim"), quant(col("c")).as("cq"))
       .orderBy(col("cq").desc, col("a_id"), col("b_id"))
@@ -782,23 +769,21 @@ object Ann {
     * — the q_sim_ann_ivf chain factored for the served path (probe through
     * a quantizer REBUILT from the written codebook, candidates from the
     * bucketed cells artifact — zero retraining). */
-  private[graft] def annSearchFrom(
-      s: SparkSession, q: DataFrame, cand: DataFrame): DataFrame =
-    topkPerQuery(s, q.join(cand, "cid"))
+  private[graft] def annSearchFrom(q: DataFrame, cand: DataFrame): DataFrame =
+    topkPerQuery(q.join(cand, "cid"))
 
   /** R7 top-k: rank on the floor-quantized cosine with unique id
     * tie-break — quantization kills last-ulp cross-engine drift without the
     * round-2 artifact where ranking on the 3-dp DISPLAY value let a
     * genuinely-worse neighbor win a display-tie on id (costing measured
     * recall). Display stays 3 dp. */
-  private def topkPerQuery(s: SparkSession, pairs: DataFrame): DataFrame = {
-    vec.register(s)
+  private def topkPerQuery(pairs: DataFrame): DataFrame = {
     val wTop = Window.partitionBy(col("query_id"))
       .orderBy(col("cq").desc, col("neighbor_id"))
     pairs
       .filter(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"),
-        call_function("cosine_sim", col("qe"), col("ne")).as("c"))
+        vec.cosine(col("qe"), col("ne")).as("c"))
       .select(col("query_id"), col("neighbor_id"),
         vec.roundz(col("c"), 3).as("cos_sim"), quant(col("c")).as("cq"))
       .withColumn("rn", row_number().over(wTop))
@@ -916,7 +901,7 @@ object Ann {
           .select(col("vec_id").as("query_id"), col("embedding").as("qe"), col("cid"))
         val cand = qz.assign(s, e)
           .select(col("vec_id").as("neighbor_id"), col("embedding").as("ne"), col("cid"))
-        topkPerQuery(s, q.join(cand, "cid"))
+        topkPerQuery(q.join(cand, "cid"))
       },
       Some(sqlAnnIvf)
     ),
@@ -942,7 +927,7 @@ object Ann {
           .select(col("vec_id").as("query_id"), col("embedding").as("qe"), col("cid"))
         val cand = qz.assign(s, e)
           .select(col("vec_id").as("neighbor_id"), col("embedding").as("ne"), col("cid"))
-        topkPerQuery(s, q.join(cand, "cid"))
+        topkPerQuery(q.join(cand, "cid"))
       },
       Some {
         val kTop = 4; val subK = 4
@@ -1053,7 +1038,7 @@ object Ann {
           .select(col("vec_id").as("query_id"), col("embedding").as("qe"), col("cid"))
         val cand = qz.assign(s, e)
           .select(col("vec_id").as("neighbor_id"), col("embedding").as("ne"), col("cid"))
-        topkPerQuery(s, q.join(cand, "cid"))
+        topkPerQuery(q.join(cand, "cid"))
       },
       Some {
         val kSide = 4; val dimA = Dim / 2
@@ -1169,9 +1154,8 @@ object Ann {
     GQ(
       "q_sim_ann_lsh",
       (s, d) => {
-        vec.register(s)
         val bucket = hyperplanes.map { case (pid, plane) =>
-          when(quant(call_function("cosine_sim", col("embedding"), litVec(plane))) > 0,
+          when(quant(vec.cosine(col("embedding"), litVec(plane))) > 0,
             lit(1L << pid)).otherwise(lit(0L))
         }.reduce(_ + _)
         val bucketed = Tables.t(s, d, "embeddings")
@@ -1187,7 +1171,7 @@ object Ann {
         val cand = bucketed
           .select(col("vec_id").as("neighbor_id"), col("embedding").as("ne"),
             col("bucket"))
-        topkPerQuery(s, q.join(cand, "bucket")
+        topkPerQuery(q.join(cand, "bucket")
           .select(col("query_id"), col("qe"), col("neighbor_id"), col("ne")))
       },
       // Oracle: the 12 plane vectors are emitted as DOUBLE[] literals from
@@ -1235,7 +1219,7 @@ object Ann {
     GQ(
       "q_dedup_semantic",
       (s, d) =>
-        semanticDedupFrom(s,
+        semanticDedupFrom(
           quantizerFor(s, d).assign(s, Tables.t(s, d, "embeddings"))),
       Some(sqlSemanticDedup)
     ),
@@ -1254,7 +1238,7 @@ object Ann {
     GQ(
       "q_knn_join",
       (s, d) =>
-        knnJoinFrom(s,
+        knnJoinFrom(
           quantizerFor(s, d).assign(s, Tables.t(s, d, "embeddings"))),
       Some(sqlKnnJoin)
     ),
@@ -1330,7 +1314,6 @@ object Ann {
     GQ(
       "q_sim_ann_pq",
       (s, d) => {
-        import graft.functions.pq
         val seeds = firstVectors(s, d, PqCodebook)
         val dim = seeds.head._2.length
         val subDim = if (dim % NumSubspaces == 0) dim / NumSubspaces else 1
@@ -1342,11 +1325,8 @@ object Ann {
         // (measured at sf0.001 and sf0.1) — the expression is one node
         // holding the codebook as a reference object, same 1024 fused
         // multiply-adds per row, sub-second planning
-        def codesOf(cb: Vector[Vector[Float]], name: String): Column = {
-          val fn = pq.registerUnique(s, name,
-            exprs => PqEncode(exprs.head, cb, mCount, D2QuantScale))
-          call_function(fn, col("embedding"))
-        }
+        def codesOf(cb: Vector[Vector[Float]]): Column =
+          onEmbedding(PqEncode(_, cb, mCount, D2QuantScale))
         def d2qScala(a: Array[Float], cw: Int => Double, m: Int): Long = {
           var acc = 0.0
           var i = m * subDim
@@ -1372,7 +1352,7 @@ object Ann {
             + lit(0.5)).cast("bigint")).as(s"s$i")
         }
         val trained: Map[(Int, Int), Array[Float]] =
-          e.select(col("embedding"), codesOf(cb0, "pq_encode_seed").as("codes"))
+          e.select(col("embedding"), codesOf(cb0).as("codes"))
             .select(explode(array(subStructs: _*)).as("a"))
             .select(col("a")("m").as("m"), col("a")("code").as("code"),
               col("a")("sv").as("sv"))
@@ -1403,8 +1383,7 @@ object Ann {
         // item 7): query-major slabs of the same (m-major, Ks-entry)
         // per-query tables, folded with the same left-assoc op tree as
         // PqEncode and the SQL; travels as ONE broadcast behind ONE
-        // registered function — registry entries and plan references are
-        // constant in NumQueries
+        // expression — plan references are constant in NumQueries
         val lutAll: Vector[Long] = (for {
           (_, qe) <- qvecs.toVector
           m <- 0 until mCount
@@ -1412,8 +1391,6 @@ object Ann {
         } yield d2qScala(qe, i => cb1(k)(i).toDouble, m)).toVector
         val adcFactory = graft.functions.PqAdcMulti.broadcastOf(
           s, lutAll, mCount, seeds.size, qvecs.length)
-        val adcFn =
-          pq.registerUnique(s, "pq_adc_multi", ex => adcFactory(ex.head, ex(1)))
         // queries as a broadcast RELATION: (query_id, qidx slab key, qe)
         import s.implicits._
         val qdf = broadcast(
@@ -1428,11 +1405,12 @@ object Ann {
           .orderBy(col("ad2q"), col("neighbor_id"))
         val shortlist = e
           .select(col("vec_id").as("neighbor_id"),
-            codesOf(cb1, "pq_encode_trained").as("codes"))
+            codesOf(cb1).as("codes"))
           .join(qdf.select(col("query_id"), col("qidx")))
           .filter(col("query_id") =!= col("neighbor_id"))
           .select(col("query_id"), col("neighbor_id"),
-            call_function(adcFn, col("codes"), col("qidx")).as("ad2q"))
+            NativeColumn(adcFactory(NativeColumn.expression(col("codes")),
+              NativeColumn.expression(col("qidx")))).as("ad2q"))
           .withColumn("rcand", row_number().over(wCand))
           .filter(col("rcand") <= RescoreR)
         // stage 2 — exact rescore (round 7, VERDICT item 2): fetch the
@@ -1609,7 +1587,7 @@ object Ann {
       (s, d) => {
         import graft.sources.IndexLifecycle
         IndexLifecycle.writeAnnIndex(s, d, "served_knn", 8)
-        knnJoinFrom(s, s.table("served_knn_ann_cells"))
+        knnJoinFrom(s.table("served_knn_ann_cells"))
       },
       Some(sqlKnnJoin)
     ),
@@ -1623,7 +1601,7 @@ object Ann {
       (s, d) => {
         import graft.sources.IndexLifecycle
         IndexLifecycle.writeAnnIndex(s, d, "served_sem", 8)
-        semanticDedupFrom(s, s.table("served_sem_ann_cells"))
+        semanticDedupFrom(s.table("served_sem_ann_cells"))
       },
       Some(sqlSemanticDedup)
     )

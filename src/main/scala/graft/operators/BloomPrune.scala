@@ -1,8 +1,7 @@
 package graft.operators
 
 import graft.{GQ, Tables}
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, DataFrame, NativeColumn}
 import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.functions._
@@ -29,17 +28,21 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType}
   */
 object BloomPrune {
 
-  /** The underlying Catalyst expressions (`BloomFilterAggregate` /
-    * `BloomFilterMightContain`) power AQE's injected runtime filters and are
-    * NOT in the public function registry — this registers them under
-    * `graft_bloom_agg` / `graft_bloom_might_contain` through the same
-    * session bridge `graft.functions.vec` uses. */
-  def register(spark: SparkSession): Unit = {
-    graft.functions.Registry.registerOnce(spark, "graft_bloom_agg")(
-      exprs => new BloomFilterAggregate(exprs(0), exprs(1), exprs(2)))
-    graft.functions.Registry.registerOnce(spark, "graft_bloom_might_contain")(
-      exprs => BloomFilterMightContain(exprs(0), exprs(1)))
-  }
+  // The underlying Catalyst expressions power AQE's injected runtime
+  // filters and are NOT in the public function registry; these builders
+  // reach them as Columns (SQL: `graft_bloom_agg` /
+  // `graft_bloom_might_contain`, via graft.GraftExtensions).
+
+  /** Bloom filter over the LONG `key`, sized for `expectedItems` / `numBits`. */
+  def bloomAgg(key: Column, expectedItems: Long, numBits: Long): Column =
+    NativeColumn(new BloomFilterAggregate(NativeColumn.expression(key),
+      NativeColumn.expression(lit(expectedItems)),
+      NativeColumn.expression(lit(numBits))).toAggregateExpression())
+
+  /** Whether the LONG `key` may be in the serialized `filter`. */
+  def mightContain(filter: Column, key: Column): Column =
+    NativeColumn(BloomFilterMightContain(
+      NativeColumn.expression(filter), NativeColumn.expression(key)))
 
   /** `fact` reduced to rows whose `factKey` probably appears among
     * `build`'s `buildKey` values (exact: no key present in `build` is ever
@@ -59,7 +62,6 @@ object BloomPrune {
       buildKey: String,
       expectedKeys: Long = 1000000L,
       fpp: Double = 0.01): DataFrame = {
-    register(fact.sparkSession)
     val conf = fact.sparkSession.conf
     val maxItems = conf.get(
       "spark.sql.optimizer.runtime.bloomFilter.maxNumItems", "4000000").toLong
@@ -76,12 +78,9 @@ object BloomPrune {
     // materializes its runtime-filter subquery. `might_contain` requires a
     // constant/scalar-subquery filter, and a literal also keeps the fact
     // side a single scan with the probe inlined in codegen.
-    val bf = build.agg(
-      expr(s"graft_bloom_agg(xxhash64(`$buildKey`), " +
-        s"${expectedKeys}L, ${bloomBits(expectedKeys, fpp)}L)").as("bf"))
+    val bf = build.agg(bloomAgg(xxhash64(col(buildKey)), expectedKeys, bits).as("bf"))
       .head.getAs[Array[Byte]](0)
-    fact.filter(
-      call_function("graft_bloom_might_contain", lit(bf), xxhash64(col(factKey))))
+    fact.filter(mightContain(lit(bf), xxhash64(col(factKey))))
   }
 
   /** Standard Bloom sizing: m = -n ln(p) / (ln 2)^2 bits. */

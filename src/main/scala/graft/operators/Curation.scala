@@ -418,7 +418,6 @@ object Curation {
     GQ(
       "q_heavy_hitters",
       (s, d) => {
-        cms.register(s)
         // total + sketch come out of a SINGLE aggregate job; the exploded
         // relation is deliberately NOT cached — re-scanning parquet per pass
         // measured faster than cache write+read at sf0.1 (1.0 vs 1.2s,
@@ -428,11 +427,11 @@ object Curation {
         val words = Tables.t(s, d, "documents")
           .select(explode(split(col("text"), " ")).as("word"))
         val head = words.agg(
-          count(lit(1)).as("total"), expr("cms_sketch(word)").as("sk")).head
+          count(lit(1)).as("total"), cms.sketch(col("word")).as("sk")).head
         val threshold = head.getLong(0) / 100 // same integer floor as the oracle
         val sketch = head.getAs[Array[Byte]](1)
         val cands = words.distinct()
-          .filter(call_function("cms_estimate", lit(sketch), col("word")) >= threshold)
+          .filter(cms.estimate(lit(sketch), col("word")) >= threshold)
         words.join(broadcast(cands), Seq("word"), "leftsemi")
           .groupBy(col("word"))
           .agg(count(lit(1)).as("cnt"))
@@ -1331,8 +1330,7 @@ object Curation {
     GQ(
       "q_sample_coreset",
       (s, d) => {
-        import org.apache.spark.sql.functions.{call_function, typedLit}
-        graft.functions.vec.register(s)
+        import org.apache.spark.sql.functions.typedLit
         val e = Tables.t(s, d, "embeddings")
           .select(col("vec_id"), col("embedding"))
         // a corpus without the vec_id-0 seed (e.g. empty table) yields an
@@ -1352,8 +1350,7 @@ object Curation {
           while (r <= 7L && !exhausted) {
             val score = selected
               .map { case (_, v) =>
-                call_function("cosine_sim", col("embedding"),
-                  typedLit(v))
+                graft.functions.vec.cosine(col("embedding"), typedLit(v))
               }
               .reduce((a, b) => greatest(a, b))
             // bounded 1-row driver fetch (Lloyd pattern); empty on toy

@@ -1022,10 +1022,9 @@ object Dedup {
     GQ(
       "q_dedup_cdc",
       (s, d) => {
-        graft.functions.CdcChunks.register(s)
         val chunks = Tables.t(s, d, "documents")
           .select(col("doc_id"),
-            explode(expr("cdc_chunks(`text`, 7)")).as("ch"))
+            explode(graft.functions.CdcChunks.col(col("text"), 7)).as("ch"))
         val freq = chunks.select(col("doc_id"), col("ch")).distinct()
           .groupBy(col("ch")).agg(count(lit(1)).as("nd"))
         chunks.join(freq, "ch")
@@ -1153,7 +1152,7 @@ object Dedup {
         a.join(b, col("a_id") < col("b_id"))
           .select(
             col("a_id"), col("b_id"),
-            vec.roundz(vec.cosine(s, "ea", "eb"), 3).as("cos_sim"))
+            vec.roundz(vec.cosine(col("ea"), col("eb")), 3).as("cos_sim"))
           .orderBy(col("cos_sim").desc, col("a_id"), col("b_id"))
           .limit(20)
       },

@@ -711,10 +711,9 @@ object EventsOps {
     GQ(
       "q_approx_distinct_native",
       (s, d) => {
-        graft.functions.hll.register(s)
         Tables.events(s, d)
           .groupBy(col("event_type"))
-          .agg(expr("hll_distinct(user_id)").as("approx_users"))
+          .agg(graft.functions.hll.distinct(col("user_id")).as("approx_users"))
           .orderBy(col("event_type"))
       },
       Some(graft.functions.HllSketch.oracleSql("event_type", "user_id", "events")

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.functions.KGrams
+import graft.functions.{KGramPairs, KGrams}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -22,10 +22,9 @@ import org.apache.spark.sql.functions._
 object Grams {
 
   def kgramRows(docsWithText: DataFrame, k: Int, carry: Seq[String]): DataFrame = {
-    KGrams.register(docsWithText.sparkSession)
     docsWithText.select(
       col("doc_id") +: carry.map(col) :+
-        posexplode(expr(s"kgrams(`text`, $k)")).as(Seq("pos", "item")): _*)
+        posexplode(KGrams.col(col("text"), k)).as(Seq("pos", "item")): _*)
   }
 
   /** Adjacent word pairs `(w1, w2)` — the bigram collocation stream of
@@ -36,8 +35,7 @@ object Grams {
     * pairs are byte-identical (docs with < 2 words contribute nothing,
     * exactly as the old `size(split(item)) === 2` filter arranged). */
   def wordPairRows(docsWithText: DataFrame): DataFrame = {
-    graft.functions.KGramPairs.register(docsWithText.sparkSession)
-    docsWithText.select(explode(expr("gram_pairs(`text`, 1)")).as("z"))
+    docsWithText.select(explode(KGramPairs.col(col("text"), 1)).as("z"))
       .select(col("z.g1").as("w1"), col("z.g2").as("w2"))
   }
 }

@@ -23,8 +23,7 @@ object GraphOps {
     * byte-identical, the oracle SQL is untouched). */
   private[graft] def bigramPairEdges(
       docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    graft.functions.KGramPairs.register(docs.sparkSession)
-    docs.select(explode(expr("gram_pairs(`text`, 2)")).as("z"))
+    docs.select(explode(graft.functions.KGramPairs.col(col("text"), 2)).as("z"))
       .select(col("z.g1").as("g1"), col("z.g2").as("g2"))
       .filter(col("g1") =!= col("g2"))
   }

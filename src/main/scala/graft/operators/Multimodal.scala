@@ -217,7 +217,7 @@ object Multimodal {
         a.join(b, col("a_id") < col("b_id"))
           .select(
             col("a_id"), col("b_id"),
-            vec.roundz(vec.cosine(s, "fa", "fb"), 3).as("cos_sim"))
+            vec.roundz(vec.cosine(col("fa"), col("fb")), 3).as("cos_sim"))
           .orderBy(col("cos_sim").desc, col("a_id"), col("b_id"))
           .limit(10)
       },

@@ -462,7 +462,7 @@ object Retrieval {
         val vc = graft.Caches.persist(e.filter(col("vec_id") =!= 0)
           .crossJoin(broadcast(qv))
           .select(col("vec_id"),
-            vec.roundz(vec.cosine(s, "embedding", "q_embedding"), 3).as("cos"))
+            vec.roundz(vec.cosine(col("embedding"), col("q_embedding")), 3).as("cos"))
           .orderBy(col("cos").desc, col("vec_id"))
           .limit(100))
         val dn = graft.C.rankBounded(vc, "rk_vec",

@@ -32,7 +32,7 @@ object Similarity {
           .crossJoin(broadcast(query))
           .select(
             col("vec_id"),
-            vec.roundz(vec.cosine(s, "embedding", "q_embedding"), 3).as("cos_sim"))
+            vec.roundz(vec.cosine(col("embedding"), col("q_embedding")), 3).as("cos_sim"))
           .orderBy(col("cos_sim").desc, col("vec_id"))
           .limit(5)
       },

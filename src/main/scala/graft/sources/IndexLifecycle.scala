@@ -332,17 +332,17 @@ object IndexLifecycle {
         col("cid"))
     val cand = cells.select(col("vec_id").as("neighbor_id"),
       col("embedding").as("ne"), col("cid"))
-    Ann.annSearchFrom(s, q, cand)
+    Ann.annSearchFrom(q, cand)
   }
 
   /** Served k-NN join / SemDeDup: the cells artifact self-joined on its
     * own bucket key — zero-exchange pair generation, no quantizer, no
     * training ([[Ann.knnJoinFrom]] / [[Ann.semanticDedupFrom]]). */
   def servedKnnJoin(s: SparkSession, prefix: String): DataFrame =
-    Ann.knnJoinFrom(s, s.table(s"${prefix}_ann_cells"))
+    Ann.knnJoinFrom(s.table(s"${prefix}_ann_cells"))
 
   def servedSemanticDedup(s: SparkSession, prefix: String): DataFrame =
-    Ann.semanticDedupFrom(s, s.table(s"${prefix}_ann_cells"))
+    Ann.semanticDedupFrom(s.table(s"${prefix}_ann_cells"))
 
   /** BOTH BM25 rounds of q_retrieval_queryexp served from the written
     * postings index — identical math (the shared [[Retrieval.bm25FromIdx]]

@@ -1,6 +1,8 @@
 package graft.tools
 
-import graft.functions.{pq, TopCells, TwoLevelCells}
+import graft.functions.{TopCells, TwoLevelCells}
+import org.apache.spark.sql.NativeColumn
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.functions._
 
 /** Round-7 assignment-cost probe for the two-level IMI coarse quantizer
@@ -66,19 +68,18 @@ object ImiStress {
       val sub = matrix(kTop * subK, 0x5eed0003L * k)
 
       val flatFactory = TopCells.broadcastOf(spark, flatCents, 1, 1e12)
-      pq.register(spark, s"imistress_flat_$k", e => flatFactory(e.head))
       val imiFactory = TwoLevelCells.broadcastOf(
         spark, top, sub, subK, TopProbe, 1, 1e12)
-      pq.register(spark, s"imistress_imi_$k", e => imiFactory(e.head))
 
-      def run(fn: String): Unit = {
+      def run(factory: Expression => Expression): Unit = {
+        val cells = NativeColumn(factory(NativeColumn.expression(col("embedding"))))
         corpus
-          .select(element_at(call_function(fn, col("embedding")), 1).as("cid"))
+          .select(element_at(cells, 1).as("cid"))
           .agg(sum(col("cid"))).collect()
         ()
       }
-      val flatSec = timeIt(run(s"imistress_flat_$k"))
-      val imiSec = timeIt(run(s"imistress_imi_$k"))
+      val flatSec = timeIt(run(flatFactory))
+      val imiSec = timeIt(run(imiFactory))
       println(f"""{"probe":"imi_assign","k":$k,"kTop":$kTop,"subK":$subK,""" +
         f""""rows":$nRows,"flat_sec":$flatSec%.3f,"imi_sec":$imiSec%.3f,""" +
         f""""speedup":${flatSec / imiSec}%.2f}""")

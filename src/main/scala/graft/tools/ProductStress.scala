@@ -1,6 +1,8 @@
 package graft.tools
 
-import graft.functions.{pq, ProductCells, TwoLevelCells}
+import graft.functions.{vec, ProductCells, TwoLevelCells}
+import org.apache.spark.sql.NativeColumn
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.functions._
 
 /** Round-8 STATE-bound probe for the product-decomposition IMI quantizer
@@ -74,18 +76,17 @@ object ProductStress {
 
       val hierFactory = TwoLevelCells.broadcastOf(
         spark, top, sub, kSide, 3, 1, 1e12)
-      pq.register(spark, s"pstress_hier_$k", e => hierFactory(e.head))
       val prodFactory = ProductCells.broadcastOf(spark, aCb, bCb, 1, 1, 1e12)
-      pq.register(spark, s"pstress_prod_$k", e => prodFactory(e.head))
 
-      def run(fn: String): Unit = {
+      def run(factory: Expression => Expression): Unit = {
+        val cells = NativeColumn(factory(NativeColumn.expression(col("embedding"))))
         corpus
-          .select(element_at(call_function(fn, col("embedding")), 1).as("cid"))
+          .select(element_at(cells, 1).as("cid"))
           .agg(sum(col("cid"))).collect()
         ()
       }
-      val hierSec = timeIt(run(s"pstress_hier_$k"))
-      val prodSec = timeIt(run(s"pstress_prod_$k"))
+      val hierSec = timeIt(run(hierFactory))
+      val prodSec = timeIt(run(prodFactory))
       println(f"""{"probe":"product_state","k":${kSide * kSide},""" +
         f""""kSide":$kSide,"rows":$nRows,""" +
         f""""hier_state_mb":${hierDoubles * 8 / 1048576.0}%.2f,""" +
@@ -132,7 +133,6 @@ object ProductStress {
     val eDf = graft.Tables.t(spark, recallDir, "embeddings")
     val kRecall = (recallN / 125L).toInt // = 4096
     val nQ = 5; val topK = 3
-    graft.functions.vec.register(spark)
     val qs = eDf.filter(col("vec_id") < nQ)
       .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
     def topkOf(cand: org.apache.spark.sql.DataFrame): Map[Long, Set[Long]] = {
@@ -142,7 +142,7 @@ object ProductStress {
         .orderBy(col("cq").desc, col("neighbor_id"))
       cand.filter(col("query_id") =!= col("neighbor_id"))
         .select(col("query_id"), col("neighbor_id"),
-          floor(call_function("cosine_sim", col("qe"), col("ne")) * lit(1e12))
+          floor(vec.cosine(col("qe"), col("ne")) * lit(1e12))
             .cast("bigint").as("cq"))
         .withColumn("rn", row_number().over(w)).filter(col("rn") <= topK)
         .select(col("query_id"), col("neighbor_id")).collect()

@@ -24,7 +24,6 @@ object ProfileCdc {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.functions.CdcChunks.register(spark)
 
     def timed(label: String, dir: String)(body: => Long): Unit = {
       body // warm
@@ -36,7 +35,7 @@ object ProfileCdc {
 
     for (d <- dirs if new java.io.File(s"$d/documents.parquet").exists()) {
       val chunks = graft.Tables.t(spark, d, "documents")
-        .select(col("doc_id"), explode(expr("cdc_chunks(`text`, 7)")).as("ch"))
+        .select(col("doc_id"), explode(graft.functions.CdcChunks.col(col("text"), 7)).as("ch"))
       timed("scan-chunk", d)(chunks.count())
       val dedup = chunks.select(col("doc_id"), col("ch")).distinct()
       timed("distinct", d)(dedup.count())

@@ -63,6 +63,9 @@ object ProfileQ {
     }
 
     val cg = org.apache.spark.metrics.source.CodegenMetrics
+    // approximate: the histogram's mean comes from a decaying reservoir, so
+    // mean x count is only an estimate of total compile time; the count
+    // delta is exact
     def cgTotalMs: Long = {
       val h = cg.METRIC_COMPILATION_TIME
       (h.getSnapshot.getMean * h.getCount).toLong
@@ -94,7 +97,7 @@ object ProfileQ {
         if (jw >= 0.01 || tt >= 0.01)
           println(f"[pq] job=${r.id}%-4d at+${(r.start - t0w) / 1e3}%6.2fs wall=$jw%6.2fs task=$tt%7.2fs n=${r.tasks}%-5d ${r.desc.take(90)}")
       }
-      println(f"[pq] jobs=${snap.size} sumJobWall=$sumJob%.2fs gap=${wall - sumJob}%.2fs sumTask=$sumTask%.2fs par=${if (sumJob > 0) sumTask / sumJob else 0.0}%.1f codegen=$cgN units ~${cgMs / 1000.0}%.1fs gc=$sumGc%.1fs")
+      println(f"[pq] jobs=${snap.size} sumJobWall=$sumJob%.2fs gap=${wall - sumJob}%.2fs sumTask=$sumTask%.2fs par=${if (sumJob > 0) sumTask / sumJob else 0.0}%.1f codegen_compiles=$cgN codegen_s_approx=${cgMs / 1000.0}%.1f gc=$sumGc%.1fs")
     }
     spark.stop()
   }

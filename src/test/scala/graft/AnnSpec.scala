@@ -32,14 +32,13 @@ class AnnSpec extends AnyFunSuite {
   private def bruteTop3: Set[(Long, Long)] = {
     import org.apache.spark.sql.Row
     val e = Tables.t(spark, sf, "embeddings")
-    graft.functions.vec.register(spark)
     val q = e.filter(col("vec_id") < 5)
       .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
     e.select(col("vec_id").as("neighbor_id"), col("embedding").as("ne"))
       .crossJoin(broadcast(q))
       .filter(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"),
-        expr("cosine_sim(qe, ne)").as("cos"))
+        graft.functions.vec.cosine(col("qe"), col("ne")).as("cos"))
       .withColumn("rn", org.apache.spark.sql.functions.row_number().over(
         org.apache.spark.sql.expressions.Window.partitionBy(col("query_id"))
           .orderBy(col("cos").desc, col("neighbor_id"))))

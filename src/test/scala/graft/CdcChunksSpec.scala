@@ -68,10 +68,9 @@ class CdcChunksSpec extends AnyFunSuite {
     assert(exprChunks(bw) == naiveChunks(bw, 8))
   }
 
-  test("the registered SQL function matches compute()") {
-    CdcChunks.register(spark)
+  test("the Column builder matches compute()") {
     val got = Seq("alpha beta gamma delta epsilon zeta eta theta").toDF("text")
-      .select(expr("cdc_chunks(text, 7)")).as[Seq[Long]].head
+      .select(CdcChunks.col(col("text"), 7)).as[Seq[Long]].head
     assert(got == exprChunks("alpha beta gamma delta epsilon zeta eta theta"))
   }
 }

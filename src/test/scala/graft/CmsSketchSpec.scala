@@ -18,16 +18,15 @@ class CmsSketchSpec extends AnyFunSuite {
       (1 to 400).map(i => s"cold$i")
 
   private def sketchOf(parts: Int): Array[Byte] = {
-    cms.register(spark)
     words.toDF("w").repartition(parts)
-      .agg(expr("cms_sketch(w)")).head.getAs[Array[Byte]](0)
+      .agg(cms.sketch(col("w"))).head.getAs[Array[Byte]](0)
   }
 
   test("estimates never under-count; exact on this cardinality") {
     val sk = sketchOf(4)
     val est = words.distinct.map(w =>
       w -> spark.range(1).select(
-        call_function("cms_estimate", lit(sk), lit(w))).head.getLong(0)).toMap
+        cms.estimate(lit(sk), lit(w))).head.getLong(0)).toMap
     val truth = words.groupBy(identity).view.mapValues(_.size.toLong).toMap
     for ((w, t) <- truth) assert(est(w) >= t, s"under-estimate for $w")
     // 402 distinct keys over 4x8192 buckets: collisions are improbable
@@ -44,7 +43,7 @@ class CmsSketchSpec extends AnyFunSuite {
     val threshold = words.size / 100 // 10 occurrences
     val df = words.toDF("w")
     val cands = df.distinct()
-      .filter(call_function("cms_estimate", lit(sk), col("w")) >= threshold)
+      .filter(cms.estimate(lit(sk), col("w")) >= threshold)
     val viaSketch = df.join(broadcast(cands), Seq("w"), "leftsemi")
       .groupBy("w").agg(count(lit(1)).as("c")).filter(col("c") >= threshold)
       .collect().map(r => (r.getString(0), r.getLong(1))).toSet

@@ -55,6 +55,22 @@ class GraftExtensionsSpec extends AnyFunSuite {
         .collect().head
       assert(shred.getSeq[String](0) === Seq("a b", "b c"))
       assert(shred.getInt(1) >= 1)
+
+      // one arity and literal check: a wrong argument count or a
+      // non-literal k/mask fails with an IllegalArgumentException that
+      // names the function
+      for ((fn, sql) <- Seq(
+          "h60" -> "SELECT h60('a', 'b')",
+          "cosine_sim" -> "SELECT cosine_sim(CAST(array(1.0) AS ARRAY<FLOAT>))",
+          "hll_distinct" -> "SELECT hll_distinct(v, v) FROM VALUES (1L) t(v)",
+          "kgrams" -> "SELECT kgrams('a b c')",
+          "kgrams" -> "SELECT kgrams(t, k) FROM VALUES ('a b c', 2) v(t, k)",
+          "cdc_chunks" -> "SELECT cdc_chunks(t, m) FROM VALUES ('a b', 7) v(t, m)")) {
+        val e = intercept[Exception](extended.sql(sql).collect())
+        val iae = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+          .collectFirst { case i: IllegalArgumentException => i }
+        assert(iae.exists(_.getMessage.startsWith(fn)), s"$sql: $e")
+      }
     } finally {
       SparkSession.setActiveSession(base)
       SparkSession.setDefaultSession(base)

@@ -12,11 +12,9 @@ class HllSketchSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
   import spark.implicits._
 
-  hll.register(spark)
-
   private def estimate(values: Seq[Long], parts: Int): Long =
     values.toDF("v").repartition(parts)
-      .agg(expr("hll_distinct(v)").as("e")).as[Long].collect().head
+      .agg(hll.distinct(col("v")).as("e")).as[Long].collect().head
 
   test("small cardinalities are near-exact (linear-counting range)") {
     // tiny n: no register collisions for these fixed inputs -> exact
@@ -44,7 +42,7 @@ class HllSketchSpec extends AnyFunSuite {
 
   test("null inputs are ignored") {
     val e = Seq[java.lang.Long](1L, 2L, null, 2L, null).toDF("v")
-      .agg(expr("hll_distinct(v)").as("e")).as[Long].collect().head
+      .agg(hll.distinct(col("v")).as("e")).as[Long].collect().head
     assert(e === 2L)
   }
 
@@ -60,7 +58,7 @@ class HllSketchSpec extends AnyFunSuite {
         (("c", java.lang.Long.valueOf(42L)) +:
           Seq.fill(2)(("c", null.asInstanceOf[java.lang.Long]))))
       .toDF("g", "v")
-      .groupBy(col("g")).agg(expr("hll_distinct(v)").as("e"))
+      .groupBy(col("g")).agg(hll.distinct(col("v")).as("e"))
       .orderBy(col("g")).as[(String, Long)].collect()
     assert(rows === Array(("a", 96L), ("b", 0L), ("c", 1L)))
   }

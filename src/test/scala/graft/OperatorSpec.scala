@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions.{array, lit}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Hand-computed golden results on MiniData for representative operators —
@@ -311,15 +313,14 @@ class OperatorSpec extends AnyFunSuite {
     assert(rows(5L) === ((1L, 1L, 0.0, 1.0)))
   }
 
+  private def floats(xs: Float*): Column = array(xs.map(x => lit(x)): _*)
+
   test("native cosine_sim expression: null and zero-norm edges") {
-    graft.functions.vec.register(spark)
-    val out = spark.sql(
-      """SELECT cosine_sim(CAST(array(0.0, 0.0) AS ARRAY<FLOAT>),
-        |                  CAST(array(1.0, 2.0) AS ARRAY<FLOAT>)) AS zero_norm,
-        |       cosine_sim(CAST(NULL AS ARRAY<FLOAT>),
-        |                  CAST(array(1.0) AS ARRAY<FLOAT>)) AS null_in,
-        |       cosine_sim(CAST(array(1.0, 2.0) AS ARRAY<FLOAT>),
-        |                  CAST(array(1.0, 2.0) AS ARRAY<FLOAT>)) AS same""".stripMargin)
+    import graft.functions.vec
+    val out = spark.range(1).select(
+      vec.cosine(floats(0f, 0f), floats(1f, 2f)).as("zero_norm"),
+      vec.cosine(lit(null).cast("array<float>"), floats(1f)).as("null_in"),
+      vec.cosine(floats(1f, 2f), floats(1f, 2f)).as("same"))
       .collect().head
     assert(out.getDouble(0) === 0.0)
     assert(out.isNullAt(1))
@@ -327,14 +328,11 @@ class OperatorSpec extends AnyFunSuite {
   }
 
   test("cosine_sim yields NULL for mismatched lengths (round-3 ADVICE fix)") {
-    graft.functions.vec.register(spark)
     // round 2 scored the common prefix (this pair evaluated to exactly 1.0
     // — a plausible-looking wrong answer); mismatched dims now surface as
     // NULL so external SQL callers can't silently mix 64-dim and 128-dim
-    val out = spark.sql(
-      """SELECT cosine_sim(CAST(array(1.0, 0.0) AS ARRAY<FLOAT>),
-        |                  CAST(array(1.0, 0.0, 7.0) AS ARRAY<FLOAT>)) AS mismatch""".stripMargin)
-      .collect().head
+    val out = spark.range(1).select(graft.functions.vec.cosine(
+      floats(1f, 0f), floats(1f, 0f, 7f)).as("mismatch")).collect().head
     assert(out.isNullAt(0))
   }
 

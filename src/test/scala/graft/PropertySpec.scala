@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.{Column, NativeColumn}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -14,6 +16,10 @@ import org.scalatest.funsuite.AnyFunSuite
 class PropertySpec extends AnyFunSuite {
   private val spark = TestSpark.spark
   import spark.implicits._
+
+  /** A native expression over the `embedding` column, as a Column. */
+  private def onEmbedding(build: Expression => Expression): Column =
+    NativeColumn(build(NativeColumn.expression(col("embedding"))))
 
   private def samples[A](g: Gen[A], n: Int): Seq[A] =
     (1 to n).flatMap(i => g.apply(Gen.Parameters.default, Seed(42L + i)))
@@ -148,16 +154,14 @@ class PropertySpec extends AnyFunSuite {
     // the generated Java and nullSafeEval must run the identical op
     // sequence. Random float vectors + a random codebook; the DataFrame
     // path (whole-stage codegen) must agree with direct interpreted eval.
-    import graft.functions.{pq, PqEncode}
+    import graft.functions.PqEncode
     import org.apache.spark.sql.catalyst.util.GenericArrayData
     val vecGen = Gen.listOfN(16, Gen.chooseNum(-1.0f, 1.0f))
     val cb: Vector[Vector[Float]] =
       samples(vecGen, 8).map(_.toVector).toVector
     val rows: Seq[Seq[Float]] = samples(vecGen, 40).map(_.toSeq)
-    pq.register(spark, "pq_encode_prop",
-      exprs => PqEncode(exprs.head, cb, 4, 1e12))
     val viaCodegen = rows.toDF("embedding")
-      .select(call_function("pq_encode_prop", col("embedding")).as("c"))
+      .select(onEmbedding(PqEncode(_, cb, 4, 1e12)).as("c"))
       .collect().map(_.getSeq[Int](0).toVector).toSeq
     val direct = rows.map { v =>
       PqEncode(org.apache.spark.sql.catalyst.expressions.Literal(0), cb, 4, 1e12)
@@ -343,14 +347,13 @@ class PropertySpec extends AnyFunSuite {
     // with N — the banned unbounded-driver-artifact shape. The broadcast
     // form must print/carry an opaque handle: a 32x-larger codebook may not
     // grow the analyzed plan text beyond incidental id-width noise.
-    import graft.functions.{pq, TopCells}
+    import graft.functions.TopCells
     val vecGen = Gen.listOfN(8, Gen.chooseNum(-1.0f, 1.0f))
     def planLen(k: Int): Int = {
       val cents = samples(vecGen, k).map(_.toVector).toVector
       val factory = TopCells.broadcastOf(spark, cents, 3, 1e12)
-      pq.register(spark, s"top_cells_sz_$k", exprs => factory(exprs.head))
       Seq(Seq.fill(8)(0.1f)).toDF("embedding")
-        .select(call_function(s"top_cells_sz_$k", col("embedding")).as("c"))
+        .select(onEmbedding(factory).as("c"))
         .queryExecution.analyzed.toString.length
     }
     val small = planLen(8)
@@ -362,16 +365,15 @@ class PropertySpec extends AnyFunSuite {
   test("TopCells: interpreted eval equals the codegen path on random vectors") {
     // same dual-path law for the IVF cell selector, including the ordering
     // contract: (quantized cosine DESC, cid ASC)
-    import graft.functions.{pq, TopCells}
+    import graft.functions.TopCells
     import org.apache.spark.sql.catalyst.util.GenericArrayData
     val vecGen = Gen.listOfN(8, Gen.chooseNum(-1.0f, 1.0f))
     val cents: Vector[Vector[Float]] =
       samples(vecGen, 12).map(_.toVector).toVector
     val rows: Seq[Seq[Float]] = samples(vecGen, 40).map(_.toSeq)
     val factory = TopCells.broadcastOf(spark, cents, 3, 1e12)
-    pq.register(spark, "top_cells_prop", exprs => factory(exprs.head))
     val viaCodegen = rows.toDF("embedding")
-      .select(call_function("top_cells_prop", col("embedding")).as("c"))
+      .select(onEmbedding(factory).as("c"))
       .collect().map(_.getSeq[Int](0).toVector).toSeq
     val direct = rows.map { v =>
       factory(org.apache.spark.sql.catalyst.expressions.Literal(0))
@@ -402,15 +404,14 @@ class PropertySpec extends AnyFunSuite {
     // the round-8 product-IMI quantizer inherits the round-6 done-criterion:
     // kA·kB leaves must not grow the plan — both half-space codebooks
     // travel as broadcasts
-    import graft.functions.{pq, ProductCells}
+    import graft.functions.ProductCells
     val halfGen = Gen.listOfN(4, Gen.chooseNum(-1.0f, 1.0f))
     def planLen(kSide: Int): Int = {
       val a = samples(halfGen, kSide).map(_.toVector).toVector
       val b = samples(halfGen, kSide).map(_.toVector).toVector
       val factory = ProductCells.broadcastOf(spark, a, b, 3, 3, 1e12)
-      pq.register(spark, s"pcell_sz_$kSide", exprs => factory(exprs.head))
       Seq(Seq.fill(8)(0.1f)).toDF("embedding")
-        .select(call_function(s"pcell_sz_$kSide", col("embedding")).as("c"))
+        .select(onEmbedding(factory).as("c"))
         .queryExecution.analyzed.toString.length
     }
     val small = planLen(3)
@@ -426,7 +427,7 @@ class PropertySpec extends AnyFunSuite {
     // assignment special case (pSide = 1, topN = 1) must equal the EXACT
     // brute-force argmin over the whole kA·kB grid — the decomposition
     // property the product quantizer's correctness rests on.
-    import graft.functions.{pq, ProductCells}
+    import graft.functions.ProductCells
     import org.apache.spark.sql.catalyst.util.GenericArrayData
     val halfGen = Gen.listOfN(4, Gen.chooseNum(-1.0f, 1.0f))
     val vecGen = Gen.listOfN(8, Gen.chooseNum(-1.0f, 1.0f))
@@ -449,9 +450,8 @@ class PropertySpec extends AnyFunSuite {
         (child: org.apache.spark.sql.catalyst.expressions.Expression) =>
           ProductCells(child, aBc, bBc, kA, kB, 8, pSide, topN, 1e12)
       }
-      pq.register(spark, s"pcell_prop_${pSide}_$topN", exprs => mk(exprs.head))
       val viaCodegen = rows.toDF("embedding")
-        .select(call_function(s"pcell_prop_${pSide}_$topN", col("embedding")).as("c"))
+        .select(onEmbedding(mk).as("c"))
         .collect().map(_.getSeq[Int](0).toVector).toSeq
       val direct = rows.map { v =>
         mk(org.apache.spark.sql.catalyst.expressions.Literal(0))
@@ -569,15 +569,14 @@ class PropertySpec extends AnyFunSuite {
   test("TwoLevelCells: plan size is independent of the codebook size (two broadcast handles)") {
     // the round-7 IMI quantizer inherits TopCells' round-6 done-criterion:
     // k leaves must not grow the plan — both matrices travel as broadcasts
-    import graft.functions.{pq, TwoLevelCells}
+    import graft.functions.TwoLevelCells
     val vecGen = Gen.listOfN(8, Gen.chooseNum(-1.0f, 1.0f))
     def planLen(kTop: Int, subK: Int): Int = {
       val top = samples(vecGen, kTop).map(_.toVector).toVector
       val sub = samples(vecGen, kTop * subK).map(_.toVector).toVector
       val factory = TwoLevelCells.broadcastOf(spark, top, sub, subK, 3, 3, 1e12)
-      pq.register(spark, s"tlc_sz_${kTop}_$subK", exprs => factory(exprs.head))
       Seq(Seq.fill(8)(0.1f)).toDF("embedding")
-        .select(call_function(s"tlc_sz_${kTop}_$subK", col("embedding")).as("c"))
+        .select(onEmbedding(factory).as("c"))
         .queryExecution.analyzed.toString.length
     }
     val small = planLen(3, 3)
@@ -592,7 +591,7 @@ class PropertySpec extends AnyFunSuite {
     // (quantized cosine DESC, leaf cid ASC) — the explicit (q, cid)
     // comparator must break CROSS-top-cell ties toward the smaller cid
     // even though candidates arrive in top-cell quality order.
-    import graft.functions.{pq, TwoLevelCells}
+    import graft.functions.TwoLevelCells
     import org.apache.spark.sql.catalyst.util.GenericArrayData
     val vecGen = Gen.listOfN(8, Gen.chooseNum(-1.0f, 1.0f))
     val kTop = 4; val subK = 3; val pTop = 2; val topN = 4
@@ -601,9 +600,8 @@ class PropertySpec extends AnyFunSuite {
       samples(vecGen, kTop * subK).map(_.toVector).toVector
     val rows: Seq[Seq[Float]] = samples(vecGen, 40).map(_.toSeq)
     val factory = TwoLevelCells.broadcastOf(spark, top, sub, subK, pTop, topN, 1e12)
-    pq.register(spark, "tlc_prop", exprs => factory(exprs.head))
     val viaCodegen = rows.toDF("embedding")
-      .select(call_function("tlc_prop", col("embedding")).as("c"))
+      .select(onEmbedding(factory).as("c"))
       .collect().map(_.getSeq[Int](0).toVector).toSeq
     val direct = rows.map { v =>
       factory(org.apache.spark.sql.catalyst.expressions.Literal(0))

@@ -42,11 +42,17 @@ class RegistrySpec extends AnyFunSuite {
   }
 
   test("every query runs on MiniData and is deterministic across reruns") {
+    def functions: Set[String] = spark.catalog.listFunctions().collect().map(_.name).toSet
+    val before = functions
     for (gq <- Registry.all) {
       val a: Seq[Row] = gq.run(spark, dir).collect().toSeq
       val b: Seq[Row] = gq.run(spark, dir).collect().toSeq
       assert(a === b, s"${gq.name} nondeterministic")
     }
+    // native expressions travel inside the plan: building the whole
+    // declared surface leaves the session's function registry untouched
+    val added = functions -- before
+    assert(added.isEmpty, s"queries registered session functions: $added")
   }
 
   test("queries declared without oracle SQL never return empty (rows-only gate)") {

@@ -349,7 +349,7 @@ class IndexLifecycleSpec extends AnyFunSuite {
         col("cid"))
     val cand = cells.select(col("vec_id").as("neighbor_id"),
       col("embedding").as("ne"), col("cid"))
-    val want = Ann.annSearchFrom(spark, q, cand).collect().map(_.toSeq)
+    val want = Ann.annSearchFrom(q, cand).collect().map(_.toSeq)
     assert(got.toSeq === want.toSeq,
       "the codebook/cells round trip drifted the served answer")
   }
