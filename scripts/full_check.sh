@@ -1,7 +1,8 @@
 #!/usr/bin/env bash
 # One-shot local gate mirroring everything the driver checks:
-#   scalatest suite, t2 DuckDB-oracle correctness at sf0.001 + sf0.01,
-#   t1 entry smoke, and the sf0.1 steady-state bench.
+#   scalatest suite, t2 DuckDB-oracle correctness at sf0.001 + sf0.01
+#   with no temp dir left behind, t1 entry smoke, and the sf0.1
+#   steady-state bench.
 # Usage: scripts/full_check.sh [testdata-root]   (default /root/testdata)
 set -euo pipefail
 cd "$(dirname "$0")/.."
@@ -9,11 +10,24 @@ ROOT="${1:-/root/testdata}"
 
 sbt -batch test
 
+# Leak gate: every graft_* entry a Verify run creates in the JVM's temp dir
+# (java.io.tmpdir, /tmp by default) must be gone when it exits; the
+# graft_verify_* result dirs below are this script's own output.
+scratch() { ls -1 /tmp | grep '^graft_' | grep -v '^graft_verify_' | sort || true; }
+scratch_before="$(scratch)"
+
 for sf in sf0.001 sf0.01; do
   out="/tmp/graft_verify_$sf"
   sbt -batch "runMain graft.Verify $ROOT/$sf $out"
   python3 scripts/check_correctness.py "$out" "$ROOT/$sf"
 done
+
+leaked="$(comm -13 <(echo "$scratch_before") <(scratch))"
+if [ -n "$leaked" ]; then
+  echo "Verify left temp dirs behind:"
+  echo "$leaked"
+  exit 1
+fi
 
 sbt -batch "runMain graft.tools.EntrySmoke" | grep ENTRY_ROWS
 

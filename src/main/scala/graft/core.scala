@@ -16,10 +16,11 @@ final case class GQ(
     oracle: Option[String] = None) {
 
   /** Build the plan, run the caller's action(s), then release exactly the
-    * operator-internal persists THIS run created ([[Caches]] scope) — the
-    * library-user entry point that cannot leak cached relations (round-3
-    * ADVICE: `run` alone leaves any internal persist for the
-    * ContextCleaner, which under memory pressure is non-deterministic).
+    * operator-internal persists and scratch dirs THIS run created
+    * ([[Caches]] scope) — the library-user entry point that cannot leak
+    * cached relations or temp dirs (`run` alone leaves any internal persist
+    * for the ContextCleaner, which under memory pressure is
+    * non-deterministic).
     * Scoping matters (review r3): a session-global release would also drop
     * caches other components own — e.g. [[graft.sources.SpotifyPipeline]]'s
     * live-API extract caches, whose re-materialization re-fetches HTTP —
@@ -41,33 +42,37 @@ final case class GQ(
   }
 }
 
-/** Registry of operator-internal persists. Query plans that materialize an
-  * intermediate (`Dedup.blockedJaccard`, `SpotifyPipeline`) route it through
-  * [[Caches.persist]] instead of a bare `DataFrame.persist`, so release can
-  * drop exactly the engine's own cached relations — and nothing the user
-  * cached.
+/** Registry of what a run must give back: operator-internal persists and
+  * scratch directories. Query plans that materialize an intermediate
+  * (`Dedup.blockedJaccard`, `SpotifyPipeline`) route it through
+  * [[Caches.persist]] instead of a bare `DataFrame.persist`, and the
+  * streaming queries take their checkpoint, sink and source dirs from
+  * [[Caches.tempDir]], so release drops exactly the engine's own cached
+  * relations and deletes exactly its own dirs — nothing the user made.
   *
   * Two tracking levels: while a [[beginScope]] is open on the current thread
-  * (plan construction is synchronous, so `GQ.apply` sees every persist its
-  * own run creates), persists land in that scope and die with it; otherwise
-  * they land in the per-session registry drained by [[release]] — which
-  * Bench/Verify call alongside `clearCache` so loops never accumulate
-  * tracked plans (review r3).
+  * (plan construction is synchronous, so `GQ.apply` sees everything its own
+  * run creates), release actions land in that scope and run when it is
+  * released; otherwise they land in the per-session registry drained by
+  * [[release]] — which Bench/Verify call alongside `clearCache` so loops
+  * never accumulate tracked plans or dirs (review r3).
   */
 object Caches {
-  private val tracked = new java.util.concurrent.ConcurrentHashMap[
-    SparkSession, java.util.concurrent.ConcurrentLinkedQueue[DataFrame]]()
+  private type Releases = java.util.concurrent.ConcurrentLinkedQueue[() => Unit]
 
-  /** A per-run collection of persists; release drops only its own.
+  private val tracked =
+    new java.util.concurrent.ConcurrentHashMap[SparkSession, Releases]()
+
+  /** A per-run collection of release actions; release runs only its own.
     * Scopes STACK (round-4 ADVICE): `close()` restores the scope that was
     * active when this one opened, so a nested `beginScope` on the same
     * thread no longer leaks the outer scope's later persists into the
     * session registry. */
   final class Scope private[Caches] (prev: Scope) {
-    private[Caches] val dfs = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
+    private[Caches] val releases = new Releases()
 
     /** Stop capturing on this thread (restores the enclosing scope) WITHOUT
-      * dropping what was already captured. Idempotent; a no-op if another
+      * releasing what was already captured. Idempotent; a no-op if another
       * scope has since taken over. */
     def close(): Unit =
       if (current.get() eq this) {
@@ -76,20 +81,39 @@ object Caches {
 
     def release(): Unit = {
       close()
-      import scala.jdk.CollectionConverters._
-      dfs.asScala.foreach(_.unpersist(blocking = false))
-      dfs.clear()
+      runAll(releases)
     }
   }
 
   private val current = new ThreadLocal[Scope]
 
-  /** Open a scope on this thread: persists until `close()`/`release()`
-    * belong to it. */
+  /** Open a scope on this thread: persists and temp dirs until
+    * `close()`/`release()` belong to it. */
   def beginScope(): Scope = {
     val s = new Scope(current.get())
     current.set(s)
     s
+  }
+
+  /** Track `action` in the current thread's open [[Scope]] if one exists,
+    * else in `spark`'s registry. */
+  private def onRelease(spark: SparkSession, action: () => Unit): Unit = {
+    val scope = current.get()
+    if (scope != null) scope.releases.add(action)
+    else tracked.computeIfAbsent(spark, _ => new Releases()).add(action)
+  }
+
+  /** Run every action, even past a failing one; rethrow the first failure. */
+  private def runAll(q: Releases): Unit = {
+    var failure: Throwable = null
+    var a = q.poll()
+    while (a != null) {
+      try a() catch {
+        case scala.util.control.NonFatal(e) => if (failure == null) failure = e
+      }
+      a = q.poll()
+    }
+    if (failure != null) throw failure
   }
 
   /** `persist(MEMORY_AND_DISK)` + track — in the current thread's open
@@ -105,22 +129,35 @@ object Caches {
     * release drops the one entry; a later re-run simply re-persists. */
   def persist(df: DataFrame): DataFrame = {
     if (df.storageLevel != org.apache.spark.storage.StorageLevel.NONE) return df
-    val scope = current.get()
-    if (scope != null) scope.dfs.add(df)
-    else tracked.computeIfAbsent(df.sparkSession,
-      _ => new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()).add(df)
+    onRelease(df.sparkSession, () => df.unpersist(blocking = false))
     df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
   }
 
-  /** Unpersist every session-registry plan of this session (async — executors
-    * drop blocks in the background) and drop the registry entry. Safe at any
-    * time: re-running a query simply re-persists on first use. */
+  /** A fresh directory under `java.io.tmpdir`, deleted with everything in
+    * it when the current [[Scope]] — else `spark`'s registry — is released.
+    * Tracked from creation, so a run that fails midway is cleaned up too.
+    * The delete never follows a symbolic link: it removes the link, not
+    * the data it points at. */
+  def tempDir(spark: SparkSession, prefix: String): java.nio.file.Path = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix)
+    onRelease(spark, () => deleteTree(dir))
+    dir
+  }
+
+  private def deleteTree(p: java.nio.file.Path): Unit = {
+    import java.nio.file.{Files, LinkOption}
+    if (Files.isDirectory(p, LinkOption.NOFOLLOW_LINKS))
+      Option(p.toFile.listFiles()).toSeq.flatten.foreach(f => deleteTree(f.toPath))
+    Files.deleteIfExists(p)
+  }
+
+  /** Run every session-registry release action of this session — unpersist
+    * (async: executors drop blocks in the background) or delete — and drop
+    * the registry entry. Safe at any time: re-running a query simply
+    * re-persists on first use. */
   def release(spark: SparkSession): Unit = {
     val q = tracked.remove(spark)
-    if (q != null) {
-      import scala.jdk.CollectionConverters._
-      q.asScala.foreach(_.unpersist(blocking = false))
-    }
+    if (q != null) runAll(q)
   }
 }
 

@@ -43,7 +43,12 @@ class RegistrySpec extends AnyFunSuite {
 
   test("every query runs on MiniData and is deterministic across reruns") {
     def functions: Set[String] = spark.catalog.listFunctions().collect().map(_.name).toSet
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def scratch: Set[String] = tmp.list().filter(_.startsWith("graft_")).toSet
+    val eventParts = new java.io.File(s"$dir/events.parquet").listFiles()
+      .filter(_.getName.endsWith(".parquet")).toSeq
     val before = functions
+    val scratchBefore = scratch
     for (gq <- Registry.all) {
       val a: Seq[Row] = gq.run(spark, dir).collect().toSeq
       val b: Seq[Row] = gq.run(spark, dir).collect().toSeq
@@ -53,6 +58,13 @@ class RegistrySpec extends AnyFunSuite {
     // declared surface leaves the session's function registry untouched
     val added = functions -- before
     assert(added.isEmpty, s"queries registered session functions: $added")
+    // every scratch dir a run made is deleted on release — and the delete
+    // removes src/'s links without following them into the real files
+    Caches.release(spark)
+    val leaked = scratch -- scratchBefore
+    assert(leaked.isEmpty, s"runs left temp dirs behind after release: $leaked")
+    assert(eventParts.nonEmpty && eventParts.forall(_.exists),
+      "releasing a run deleted the events files its links point at")
   }
 
   test("queries declared without oracle SQL never return empty (rows-only gate)") {

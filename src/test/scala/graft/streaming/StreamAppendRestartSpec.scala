@@ -3,10 +3,11 @@ package graft.streaming
 import java.nio.file.Files
 import java.sql.Timestamp
 
-import graft.TestSpark
+import graft.{Caches, TestSpark}
 import graft.streaming.EventStreams.Event
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
+import org.scalatest.Outcome
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Append mode over a GROWING directory with a REAL checkpoint (round 5,
@@ -43,6 +44,10 @@ class StreamAppendRestartSpec extends AnyFunSuite {
 
   private def ts(s: String): Timestamp = Timestamp.valueOf(s)
 
+  // the test's root is tracked on this spec's session and deleted at its end
+  override def withFixture(test: NoArgTest): Outcome =
+    try super.withFixture(test) finally Caches.release(spark)
+
   private def writeBatch(dir: String, name: String, rows: Seq[Event]): Unit =
     rows.toDF().coalesce(1).write.mode("overwrite")
       .parquet(s"$dir/staging_$name")
@@ -55,7 +60,7 @@ class StreamAppendRestartSpec extends AnyFunSuite {
   }
 
   test("append mode + checkpoint: watermark withholds the tail; restart emits it exactly once") {
-    val root = Files.createTempDirectory("graft_append_restart").toString
+    val root = Caches.tempDir(spark, "graft_append_restart").toString
     val src = s"$root/src"; val sink = s"$root/sink"; val ckpt = s"$root/ckpt"
     new java.io.File(src).mkdirs()
 

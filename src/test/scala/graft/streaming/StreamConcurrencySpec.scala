@@ -2,10 +2,8 @@ package graft.streaming
 
 import java.util.concurrent.Executors
 
-import graft.{Registry, TestSpark}
-import org.apache.spark.sql.functions._
+import graft.{Caches, Registry, TestSpark}
 import org.apache.spark.sql.streaming.Trigger
-import org.apache.spark.sql.types.{LongType, TimestampType}
 import org.scalatest.funsuite.AnyFunSuite
 
 import scala.concurrent.duration.DurationInt
@@ -26,9 +24,9 @@ class StreamConcurrencySpec extends AnyFunSuite {
   private val sf = "/root/testdata/sf0.001"
   private val Key = "spark.sql.shuffle.partitions"
 
+  // GQ.apply: each run's scratch root is deleted once the rows are read
   private def rows(name: String): Vector[Vector[Any]] =
-    Registry.byName(name).run(spark, sf).collect()
-      .map(_.toSeq.toVector).toVector
+    Registry.byName(name)(spark, sf)(_.collect().map(_.toSeq.toVector).toVector)
 
   test("two declared streaming queries run concurrently: both correct, shared conf untouched") {
     val prev = spark.conf.get(Key)
@@ -51,16 +49,11 @@ class StreamConcurrencySpec extends AnyFunSuite {
 
   test("two concurrent streams with DIFFERENT state widths: each keeps its own, stores sized accordingly") {
     val prev = spark.conf.get(Key)
-    // mirror the declared-query body on two private sessions of widths 3/7
+    // the declared tumbling query over the harness's replay source, on two
+    // private sessions of widths 3/7
     def runTumbling(n: Int, name: String): (Int, Long) = {
       val ss = StreamQueries.stateSession(spark, n)
-      val fileSchema = ss.read.parquet(s"$sf/events.parquet").schema
-      val raw = ss.readStream.schema(fileSchema)
-        .parquet(StreamQueries.streamSourceDir(sf))
-      val ev = raw.schema("ts").dataType match {
-        case LongType => raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-        case _        => raw.withColumn("ts", col("ts").cast(TimestampType))
-      }
+      val ev = StreamQueries.replay(spark, ss, sf)
       val q = EventStreams.tumbling(ev, every = "1 hour", watermark = "10 minutes")
         .writeStream.format("memory").queryName(name)
         .outputMode("complete")
@@ -85,6 +78,9 @@ class StreamConcurrencySpec extends AnyFunSuite {
         "both widths must produce the identical complete answer")
       assert(spark.conf.get(Key) === prev,
         "a private-session stream mutated the shared conf")
-    } finally pool.shutdown()
+    } finally {
+      pool.shutdown()
+      Caches.release(spark) // the replay sources' scratch roots
+    }
   }
 }

@@ -3,11 +3,12 @@ package graft.streaming
 import java.nio.file.Files
 import java.sql.Timestamp
 
-import graft.TestSpark
+import graft.{Caches, TestSpark}
 import graft.streaming.EventStreams.Event
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
+import org.scalatest.Outcome
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Checkpoint-restart laws for the two STATEFUL shapes beyond windowed
@@ -32,15 +33,28 @@ class StreamStatefulRestartSpec extends AnyFunSuite {
     ss
   }
   import spark.implicits._
+  private val sf = "/root/testdata/sf0.001"
 
   private def ts(s: String): Timestamp = Timestamp.valueOf(s)
 
-  private def land(src: String, name: String, rows: Seq[Event]): Unit = {
-    val staging = Files.createTempDirectory("graft_land").toString
+  // every test's scratch — its own root, or a declared query's run root —
+  // is tracked on this spec's session and deleted when the test ends
+  override def withFixture(test: NoArgTest): Outcome =
+    try super.withFixture(test) finally Caches.release(spark)
+
+  private def newRoot(prefix: String): String = {
+    val root = Caches.tempDir(spark, prefix).toString
+    new java.io.File(s"$root/src").mkdirs()
+    root
+  }
+
+  // stage one batch under the root, then land its part file in root/src
+  private def land(root: String, name: String, rows: Seq[Event]): Unit = {
+    val staging = s"$root/staging_$name"
     rows.toDF().coalesce(1).write.mode("overwrite").parquet(staging)
     val part = new java.io.File(staging).listFiles()
       .find(_.getName.endsWith(".parquet")).get
-    Files.copy(part.toPath, new java.io.File(s"$src/$name.parquet").toPath)
+    Files.copy(part.toPath, new java.io.File(s"$root/src/$name.parquet").toPath)
   }
 
   private def schema = Seq.empty[Event].toDF().schema
@@ -63,8 +77,8 @@ class StreamStatefulRestartSpec extends AnyFunSuite {
       .collect().map(_.toSeq.toVector).toSeq
 
   test("stream-stream join: a click buffered before restart still matches a purchase after it") {
-    val root = Files.createTempDirectory("graft_join_restart").toString
-    val src = s"$root/src"; new java.io.File(src).mkdirs()
+    val root = newRoot("graft_join_restart")
+    val src = s"$root/src"
     val joinShape = (in: DataFrame) =>
       EventStreams.purchaseAttribution(in, lookback = "1 hour",
           watermark = "10 minutes")
@@ -74,7 +88,7 @@ class StreamStatefulRestartSpec extends AnyFunSuite {
     val outCols = Seq("user_id", "purchase_id", "click_id", "p_us", "c_us", "value")
 
     // run 1: click c1 + purchase p1 match inside the run
-    land(src, "f0", Seq(
+    land(root, "f0", Seq(
       Event(1L, ts("2024-01-01 00:05:00"), 10L, "click", 0.0),
       Event(2L, ts("2024-01-01 00:10:00"), 10L, "purchase", 5.0)))
     drain(src, s"$root/sink", s"$root/ckpt")(joinShape)
@@ -84,7 +98,7 @@ class StreamStatefulRestartSpec extends AnyFunSuite {
 
     // run 2: purchase p2 lands; its matching click c1 lives ONLY in the
     // recovered join state — the cross-boundary law. c3 has no purchase.
-    land(src, "f1", Seq(
+    land(root, "f1", Seq(
       Event(3L, ts("2024-01-01 00:30:00"), 10L, "purchase", 7.0),
       Event(4L, ts("2024-01-01 00:40:00"), 11L, "click", 0.0)))
     drain(src, s"$root/sink", s"$root/ckpt")(joinShape)
@@ -101,8 +115,8 @@ class StreamStatefulRestartSpec extends AnyFunSuite {
   }
 
   test("streaming dedup: a key seen before restart is not re-emitted after it") {
-    val root = Files.createTempDirectory("graft_dedup_restart").toString
-    val src = s"$root/src"; new java.io.File(src).mkdirs()
+    val root = newRoot("graft_dedup_restart")
+    val src = s"$root/src"
     val dedupShape = (in: DataFrame) => {
       val keyed = in.select(col("ts"), col("user_id"), col("event_type"),
         expr("unix_micros(ts) div 60000000").as("minute_id"))
@@ -113,7 +127,7 @@ class StreamStatefulRestartSpec extends AnyFunSuite {
     val outCols = Seq("user_id", "event_type", "minute_id")
 
     // run 1: two events on the same (user, type, minute) key -> ONE row
-    land(src, "f0", Seq(
+    land(root, "f0", Seq(
       Event(1L, ts("2024-01-01 00:05:10"), 10L, "play", 1.0),
       Event(2L, ts("2024-01-01 00:05:40"), 10L, "play", 2.0)))
     drain(src, s"$root/sink", s"$root/ckpt")(dedupShape)
@@ -123,7 +137,7 @@ class StreamStatefulRestartSpec extends AnyFunSuite {
     // run 2: the SAME key arrives again (in-horizon duplicate across the
     // process boundary — must be suppressed by the RECOVERED seen-key
     // state) plus one genuinely new key.
-    land(src, "f1", Seq(
+    land(root, "f1", Seq(
       Event(3L, ts("2024-01-01 00:05:55"), 10L, "play", 3.0),
       Event(4L, ts("2024-01-01 00:06:20"), 11L, "skip", 4.0)))
     drain(src, s"$root/sink", s"$root/ckpt")(dedupShape)
@@ -151,8 +165,8 @@ class StreamStatefulRestartSpec extends AnyFunSuite {
     // BEFORE a restart merge with events arriving AFTER it (a lost state
     // store would emit cnt=1, a replayed source cnt=4), and each window
     // emits exactly once when the watermark finally closes it.
-    val root = Files.createTempDirectory("graft_sliding_restart").toString
-    val src = s"$root/src"; new java.io.File(src).mkdirs()
+    val root = newRoot("graft_sliding_restart")
+    val src = s"$root/src"
     val slideShape = (in: DataFrame) =>
       EventStreams.sliding(in, length = "2 hours", slide = "1 hour",
           watermark = "10 minutes")
@@ -163,7 +177,7 @@ class StreamStatefulRestartSpec extends AnyFunSuite {
 
     // run 1: two plays open the 23:00- and 00:00-start hop windows;
     // watermark (00:20 − 10 min) closes nothing — append emits nothing
-    land(src, "f0", Seq(
+    land(root, "f0", Seq(
       Event(1L, ts("2024-01-01 00:05:00"), 10L, "play", 1.0),
       Event(2L, ts("2024-01-01 00:20:00"), 11L, "play", 2.0)))
     drain(src, s"$root/sink", s"$root/ckpt")(slideShape)
@@ -172,7 +186,7 @@ class StreamStatefulRestartSpec extends AnyFunSuite {
 
     // run 2 (restart): a third play lands in the SAME two open windows —
     // it must merge with the RECOVERED per-window counts; still no close
-    land(src, "f1", Seq(
+    land(root, "f1", Seq(
       Event(3L, ts("2024-01-01 00:40:00"), 12L, "play", 3.0)))
     drain(src, s"$root/sink", s"$root/ckpt")(slideShape)
     assert(rowsOf(s"$root/sink", outCols).isEmpty,
@@ -180,7 +194,7 @@ class StreamStatefulRestartSpec extends AnyFunSuite {
 
     // run 3 (second restart): a far event pushes the watermark past both
     // hop windows' ends; each emits ONCE with the cross-restart count 3
-    land(src, "f2", Seq(
+    land(root, "f2", Seq(
       Event(4L, ts("2024-01-01 04:10:00"), 13L, "skip", 9.0)))
     drain(src, s"$root/sink", s"$root/ckpt")(slideShape)
     val after3 = rowsOf(s"$root/sink", outCols)
@@ -204,8 +218,8 @@ class StreamStatefulRestartSpec extends AnyFunSuite {
     // in-gap event arriving after the restart EXTENDS it — a lost store
     // would emit two fragments (or n_events=1), a replayed source would
     // double-count
-    val root = Files.createTempDirectory("graft_session_restart").toString
-    val src = s"$root/src"; new java.io.File(src).mkdirs()
+    val root = newRoot("graft_session_restart")
+    val src = s"$root/src"
     val sessionShape = (in: DataFrame) =>
       EventStreams.sessions(in, gap = "30 minutes", watermark = "10 minutes")
         .select(col("user_id"),
@@ -216,7 +230,7 @@ class StreamStatefulRestartSpec extends AnyFunSuite {
     def us(t: String): Long = ts(t).getTime * 1000L
 
     // run 1: two events open user 10's session; nothing closes
-    land(src, "f0", Seq(
+    land(root, "f0", Seq(
       Event(1L, ts("2024-01-01 00:00:00"), 10L, "play", 1.0),
       Event(2L, ts("2024-01-01 00:10:00"), 10L, "play", 2.0)))
     drain(src, s"$root/sink", s"$root/ckpt")(sessionShape)
@@ -224,7 +238,7 @@ class StreamStatefulRestartSpec extends AnyFunSuite {
       "an open session must not emit before the watermark passes its end")
 
     // run 2 (restart): an in-gap event must EXTEND the recovered session
-    land(src, "f1", Seq(
+    land(root, "f1", Seq(
       Event(3L, ts("2024-01-01 00:25:00"), 10L, "play", 4.0)))
     drain(src, s"$root/sink", s"$root/ckpt")(sessionShape)
     assert(rowsOf(s"$root/sink", outCols).isEmpty,
@@ -232,7 +246,7 @@ class StreamStatefulRestartSpec extends AnyFunSuite {
 
     // run 3 (second restart): a far event closes it — ONE session of 3
     // events spanning both restarts, end = last event + gap
-    land(src, "f2", Seq(
+    land(root, "f2", Seq(
       Event(4L, ts("2024-01-01 02:00:00"), 11L, "skip", 8.0)))
     drain(src, s"$root/sink", s"$root/ckpt")(sessionShape)
     val after3 = rowsOf(s"$root/sink", outCols)
@@ -253,8 +267,8 @@ class StreamStatefulRestartSpec extends AnyFunSuite {
     // nonempty strict subset (the watermark closed early sessions), run 2
     // the recovered remainder. A protocol bug that drained everything in
     // run 1 (or nothing until the sentinel) would still pass the oracle.
-    val (sinkDf, run1Rows) =
-      StreamQueries.sessionsCkptPipeline(spark, "/root/testdata/sf0.001")
+    val (sinkDf, run1Rows, _) =
+      StreamQueries.run(spark, sf, StreamQueries.sessionsCkpt)
     val total = sinkDf.count()
     assert(run1Rows > 0, "run 1 emitted nothing — watermark never advanced")
     assert(run1Rows < total,
@@ -268,8 +282,8 @@ class StreamStatefulRestartSpec extends AnyFunSuite {
     // duplicate key: a lost seen-key store would re-emit a boundary-
     // straddling key in run 2, which the DISTINCT oracle would catch as
     // a row-count mismatch but this pins locally with the split evidence.
-    val (sinkDf, run1Rows) =
-      StreamQueries.dedupCkptPipeline(spark, "/root/testdata/sf0.001")
+    val (sinkDf, run1Rows, _) =
+      StreamQueries.run(spark, sf, StreamQueries.dedupCkpt)
     val rows = sinkDf.collect()
     assert(run1Rows > 0, "run 1 emitted nothing — empty first half")
     assert(run1Rows < rows.length,
@@ -307,8 +321,8 @@ class StreamStatefulRestartSpec extends AnyFunSuite {
       .orderBy((col("p_us") - col("c_us")).desc)
       .head()
     val split = (widest.getAs[Long]("c_us") + widest.getAs[Long]("p_us")) / 2
-    val (sinkDf, run1Rows, midUs) =
-      StreamQueries.joinCkptPipeline(spark, d, Some(split))
+    val (sinkDf, run1Rows, midUs) = StreamQueries.run(spark, d,
+      StreamQueries.joinCkpt.copy(restart = Some(StreamQueries.SplitAt(Some(split)))))
     val out = sinkDf.collect()
     assert(run1Rows > 0, "run 1 emitted nothing — no same-half matches")
     assert(run1Rows < out.length,
@@ -318,41 +332,5 @@ class StreamStatefulRestartSpec extends AnyFunSuite {
     }
     assert(cross > 0,
       "no cross-boundary match — the recovered click buffer was never exercised")
-  }
-
-  test("streamSourceDir: a corrupted link directory is detected and rebuilt") {
-    // round 6 (VERDICT r5 item 4): pin the round-5 hardening — a
-    // half-created dir (entry missing) and a wrong-target link must both
-    // be repaired, never silently streamed from.
-    import java.nio.file.Paths
-    val root = Files.createTempDirectory("graft_linkfix").toString
-    val staging = Files.createTempDirectory("graft_linkstage").toString
-    Seq(Event(1L, ts("2024-01-01 00:00:01"), 1L, "play", 1.0)).toDF()
-      .coalesce(1).write.mode("overwrite").parquet(staging)
-    val part = new java.io.File(staging).listFiles()
-      .find(_.getName.endsWith(".parquet")).get
-    Files.copy(part.toPath, Paths.get(s"$root/events.parquet"))
-    val target = Paths.get(s"$root/events.parquet").toAbsolutePath
-
-    val link = Paths.get(StreamQueries.streamSourceDir(root))
-    val entry = link.resolve("events.parquet")
-    assert(Files.isSymbolicLink(entry) &&
-      Files.readSymbolicLink(entry) == target)
-
-    // corruption A: half-created dir (the entry vanished)
-    Files.delete(entry)
-    StreamQueries.streamSourceDir(root)
-    assert(Files.isSymbolicLink(entry) &&
-      Files.readSymbolicLink(entry) == target,
-      "missing link entry must be rebuilt")
-
-    // corruption B: the entry points at the WRONG dataset
-    val decoy = Paths.get(s"$root/decoy.parquet")
-    Files.copy(part.toPath, decoy)
-    Files.delete(entry)
-    Files.createSymbolicLink(entry, decoy.toAbsolutePath)
-    StreamQueries.streamSourceDir(root)
-    assert(Files.readSymbolicLink(entry) == target,
-      "wrong-target link must be re-pointed at the requested dataset")
   }
 }
