@@ -29,10 +29,11 @@ final case class HttpResponse(
   * 429 retry honoring `Retry-After` — but NOT its bug: the reference
   * constructs its `asyncio.Semaphore(5)` inside the function
   * (spotify-etl.py:48), once per call, so its advertised 5-way cap never
-  * limits anything. Here the pacing state is instance-level and the instance
-  * is one-per-executor-JVM in practice, so a cluster-wide request budget is
-  * `perExecutorMinIntervalMs = executors * globalMinIntervalMs`
-  * (SURVEY.md §7.5).
+  * limits anything. Here the pacing state is instance-level, and each Spark
+  * task deserializes its own copy of the client, so pacing holds per task:
+  * per cursor chain or per fan-out/lookup partition, like the reference's
+  * per-call sleep. A request budget for the whole job is
+  * `minIntervalMs = concurrentTasks * globalMinIntervalMs` (SURVEY.md §7.5).
   */
 final class RateLimitedClient(
     underlying: HttpClient,

@@ -20,8 +20,11 @@ import org.apache.spark.sql.functions._
   *
   * Scale posture: pagination is inherently sequential per cursor, but
   * fan-out and lookup are `mapPartitions` over a repartitioned key set —
-  * executor-parallel, with per-executor pacing (SURVEY.md §7.5). Nothing is
-  * ever collected back to the driver except the page cursor itself.
+  * executor-parallel. Each task deserializes its own copy of the client, so
+  * pacing holds per task: per cursor chain or per fan-out/lookup partition,
+  * like the reference's per-call sleep (SURVEY.md §7.5). No request is made
+  * while the plan is built, and nothing is ever collected back to the
+  * driver.
   */
 final class SpotifySource(
     client: HttpClient,
@@ -50,8 +53,12 @@ final class SpotifySource(
     * `persist()` (or checkpoint) right after extraction — one fetch, then
     * plan-local reuse — and disable `spark.speculation` for extract stages
     * so a slow page is never double-fetched. [[SpotifyPipeline]] follows
-    * this pattern. */
-  private def pagesDF(spark: SparkSession, firstUrl: String): DataFrame = {
+    * this pattern.
+    *
+    * With `followCursor = false` the scan fetches the first page only (the
+    * reference reads one page of recent tracks and followed artists). */
+  private def pagesDF(spark: SparkSession, firstUrl: String,
+      followCursor: Boolean = true): DataFrame = {
     import spark.implicits._
     val headers = authHeaders
     val c = client
@@ -62,18 +69,12 @@ final class SpotifySource(
           Iterator.unfold(Option(first)) {
             case Some(url) =>
               val body = checkedBody(c.get(url, headers), url)
-              Some((body, nextCursor(body)))
+              Some((body, if (followCursor) nextCursor(body) else None))
             case None => None
           }
         }
       }
       .toDF("page")
-  }
-
-  /** Single-page GET, driver-side (no cursor to follow). */
-  private def singlePageDF(spark: SparkSession, url: String): DataFrame = {
-    import spark.implicits._
-    Seq(checkedBody(client.get(url, authHeaders), url)).toDF("page")
   }
 
   /** GET /me/playlists → `playlists` table (spotify-etl.py:68-89). */
@@ -138,16 +139,21 @@ final class SpotifySource(
         to_timestamp(col("it.added_at")).as("added_at"))
 
   /** Batched ID lookup (spotify-etl.py:134-173): ≤100 ids per request —
-    * semantically a join against a remote key-value source. `grouped(100)`
-    * inside `mapPartitions` handles the tail batch uniformly (the reference
-    * needs a separate branch for it, spotify-etl.py:157-166). */
+    * semantically a join against a remote key-value source. Each id is
+    * requested once (C2, spotify-etl.py:250): the ids are hash-partitioned
+    * on their column, and the `distinct` aggregate reuses that partitioning,
+    * so dedup and fan-out share one exchange (AQE does not coalesce a
+    * repartition to a given number). `grouped(100)` inside `mapPartitions`
+    * handles the tail batch uniformly (the reference needs a separate
+    * branch for it, spotify-etl.py:157-166). */
   def audioFeatures(spark: SparkSession, trackIds: Dataset[String]): DataFrame = {
     import spark.implicits._
     val base = baseUrl
     val headers = authHeaders
     val c = client
     val bodies = trackIds
-      .repartition(fanOutParallelism)
+      .repartition(fanOutParallelism, col(trackIds.columns.head))
+      .distinct()
       .mapPartitions { ids =>
         ids.grouped(100).map { batch =>
           val url = s"$base/audio-features?ids=${batch.mkString(",")}"
@@ -164,7 +170,7 @@ final class SpotifySource(
 
   /** GET /me/player/recently-played, single page (spotify-etl.py:175-190). */
   def recentTracks(spark: SparkSession): DataFrame =
-    singlePageDF(spark, s"$baseUrl/me/player/recently-played")
+    pagesDF(spark, s"$baseUrl/me/player/recently-played", followCursor = false)
       .select(explode(from_json(col("page"), SpotifySchemas.recentTracksPage)("items")).as("it"))
       .filter(col("it.track").isNotNull)
       .select(
@@ -176,7 +182,7 @@ final class SpotifySource(
 
   /** GET /me/following?type=artist, single page (spotify-etl.py:192-207). */
   def followedArtists(spark: SparkSession): DataFrame =
-    singlePageDF(spark, s"$baseUrl/me/following?type=artist")
+    pagesDF(spark, s"$baseUrl/me/following?type=artist", followCursor = false)
       .select(explode(
         from_json(col("page"), SpotifySchemas.followedArtistsPage)("artists")("items")).as("it"))
       .select(
