@@ -2,7 +2,8 @@
 # One-shot local gate mirroring everything the driver checks:
 #   scalatest suite, t2 DuckDB-oracle correctness at sf0.001 + sf0.01
 #   with no temp dir left behind, t1 entry smoke, the connector demo
-#   (all six ETL tables non-empty), and the sf0.1 steady-state bench.
+#   (all six ETL tables non-empty), the profiler smoke, and the sf0.1
+#   steady-state bench.
 # Usage: scripts/full_check.sh [testdata-root]   (default /root/testdata)
 set -euo pipefail
 cd "$(dirname "$0")/.."
@@ -40,6 +41,23 @@ for t in playlists playlists_tracks saved_tracks recent_tracks followed_artists 
     exit 1
   fi
 done
+
+# Profiler smoke: ProfileQ, the one profiler, must print a "[pq] jobs="
+# summary for each of a batch and a streaming query, and the streaming
+# query's micro-batches as "[sq] batch=" lines.
+pq="$(sbt -batch "runMain graft.tools.ProfileQ q_dedup_components,q_stream_dedup_ckpt $ROOT/sf0.001 1")"
+for q in q_dedup_components q_stream_dedup_ckpt; do
+  # a "[pq] jobs=" line inside the block that "[pq] ===== $q " opens
+  if ! awk -v h="[pq] ===== $q " '/\[pq\] =====/ { in_q = index($0, h) > 0 }
+      in_q && /\[pq\] jobs=/ { ok = 1 } END { exit !ok }' <<<"$pq"; then
+    echo "ProfileQ: no '[pq] jobs=' summary for $q"
+    exit 1
+  fi
+done
+if ! grep -q '\[sq\] batch=' <<<"$pq"; then
+  echo "ProfileQ: no '[sq] batch=' line"
+  exit 1
+fi
 
 SPARK_GRAFT_SF_DIR="$ROOT/sf0.1" sbt -batch "runMain graft.Bench" \
   | grep '"metric"' | sed 's/^\[info\] //'

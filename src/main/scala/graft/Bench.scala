@@ -118,10 +118,14 @@ object Bench {
     // Untimed warmup pass: JIT compilation + parquet footer/codegen caches,
     // so the timed loop reports steady-state per-query cost instead of
     // charging whole-JVM warmup to whichever query happens to run first.
-    SparkEntry.queries.foreach { case (_, fn) =>
-      try fn(spark, sfDir).count() catch { case _: Throwable => () }
+    // A failure here is recorded (query, exception class) in the sidecar's
+    // `warmup_failed`, so a query that fails only while warming is visible.
+    val warmupFailed = SparkEntry.queries.flatMap { case (name, fn) =>
+      val err = try { fn(spark, sfDir).count(); None }
+        catch { case e: Throwable => Some(name -> e.getClass.getName) }
       spark.catalog.clearCache()
       graft.Caches.release(spark) // drain the tracked-persist registry too
+      err
     }
     def timedPass(): (Map[String, Double], Seq[String]) = {
       val failed = Seq.newBuilder[String]
@@ -292,6 +296,9 @@ object Bench {
     val worst10 = finalMin.filterNot(kv => failed.contains(kv._1))
       .toSeq.sortBy(-_._2).take(10)
     val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val warmupFailedJson = warmupFailed
+      .map { case (q, e) => s"""{"query":"$q","error":"$e"}""" }
+      .mkString("[", ",", "]")
     val rt = Runtime.getRuntime
     val loadPost = loadAvg()
     // one post-run anchor sample (round 11): the pre-pass calibration can
@@ -337,7 +344,7 @@ object Bench {
         s""""total_min":${totalOf(finalMin)},""" +
         s""""total_preretime":$preRetime,""" +
         s""""total_fastest2":${totalOf(min2Pass)},$passTotalsJson,""" +
-        s""""failed":$failedJson,""" +
+        s""""failed":$failedJson,"warmup_failed":$warmupFailedJson,""" +
         s""""jvm_max_mem_mb":${rt.maxMemory() / 1048576},$guardJson,""" +
         s""""retimed":$retimedJson,""" +
         s""""queries_min":${fmt(finalMin)},$passQueriesJson}"""

@@ -144,7 +144,7 @@ object Caches {
     dir
   }
 
-  private def deleteTree(p: java.nio.file.Path): Unit = {
+  private[graft] def deleteTree(p: java.nio.file.Path): Unit = {
     import java.nio.file.{Files, LinkOption}
     if (Files.isDirectory(p, LinkOption.NOFOLLOW_LINKS))
       Option(p.toFile.listFiles()).toSeq.flatten.foreach(f => deleteTree(f.toPath))

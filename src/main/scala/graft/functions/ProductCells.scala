@@ -54,15 +54,15 @@ import org.apache.spark.sql.types._
   * many more, much smaller cells). Measured at the 4×4 oracle geometry:
   * a 4-cell prefix served recall@3 = 0.80 — and RE-RANKING the prefix by
   * exact centroid cosine did not move it (0.80; full-grid cosine ranking
-  * measured WORSE, 0.73, tools/PimiProbe) — while the full 9-cell
-  * frontier serves 1.00: the loss was frontier WIDTH, not ranking
-  * geometry. Round 11 widened the per-side CANDIDATE POOL to topN
+  * measured WORSE, 0.73; BASELINE.md "Retired instruments") — while the
+  * full 9-cell frontier serves 1.00: the loss was frontier WIDTH, not
+  * ranking geometry. Round 11 widened the per-side CANDIDATE POOL to topN
   * (callers pass pSide = topN = frontier size): by multi-sequence
   * exactness the t-th best grid cell has per-side rank ≤ t, so the
   * emitted frontier is the EXACT top-topN of the whole grid by summed
   * half-distance — the round-9 3-per-side pool made a cell ranked 4th on
-  * one axis unreachable, the 0.80 recall@3 plateau ProductStress
-  * recorded at the 512k/k=4096 geometry. Distance work per row is
+  * one axis unreachable, the 0.80 recall@3 plateau recorded at the
+  * 512k/k=4096 geometry (BASELINE.md round 11). Distance work per row is
   * unchanged (all kA + kB half-distances were computed regardless), but
   * the MERGE loop is not (round-11 ADVICE): with per-side pools of w
   * candidates the product merge runs w² iterations, each an O(topN)

@@ -40,7 +40,7 @@ import org.apache.spark.sql.functions._
   * ([[TwoLevelQuantizer]] / [[graft.functions.TwoLevelCells]] — √k top
   * cells, each with its own √k-entry sub-codebook, each level the same
   * broadcast+expression contract): O(√k) per row, measured 8.2× faster
-  * assignment at k=4096 and growing as √k (tools/ImiStress). Every
+  * assignment at k=4096 and growing as √k (BASELINE.md round 7). Every
   * consumer goes through [[quantizerFor]], which picks the quantizer by
   * cell count — k = 16 at all driver SFs, so every oracle replays the
   * flat path byte-identically, while the ×30 stress corpus (k = 480)
@@ -477,8 +477,8 @@ object Ann {
     * stress corpora (k ≤ ~2k) stay below this threshold, so production
     * oracles and stress paths are unchanged; `q_sim_ann_pimi` pins the
     * product contract under the DuckDB oracle at a fixed geometry, and
-    * `tools/ProductStress` measures the O(√k·dim) state bound at
-    * k ≥ 4096. */
+    * the O(√k·dim) state bound was measured at k ≥ 4096 (BASELINE.md
+    * round 8). */
   private[graft] val HierMaxCells = 65536
 
   /** Multi-probe frontier SIZE parameter for the product grid: a query
@@ -637,8 +637,8 @@ object Ann {
     // grow) and keeps the CONSUMER cost identical (same pSide² cells
     // joined). The round-9 form truncated the pool at 3/side, so a true
     // frontier cell ranked 4th on one axis was unreachable — the 0.80
-    // recall@3 plateau ProductStress recorded at the 512k/k=4096
-    // geometry. The frontier is the bounded shortlist, the consumer's
+    // recall@3 plateau recorded at the 512k/k=4096 geometry (BASELINE.md
+    // round 11). The frontier is the bounded shortlist, the consumer's
     // exact quantized-cosine top-k over its members is the rescore.
     // Assignment stays pure half-L2 argmin, so every cell-blocked
     // consumer's cells (q_knn_join, q_dedup_semantic) are byte-unchanged.
@@ -1534,8 +1534,8 @@ object Ann {
     // 100 TB this is the posture that removes the per-query training the
     // ×100 ScaleStress slopes attributed (q_knn_join 16.7×: the tier
     // switch pays two-level training per run) — training is paid at
-    // write time, serving is probe + bucketed join (tools/AnnServedStress
-    // measures the serve-only slopes).
+    // write time, serving is probe + bucketed join (serve-only slopes:
+    // BASELINE.md "Retired instruments").
     GQ(
       "q_sim_ann_served",
       (s, d) => {

@@ -364,20 +364,18 @@ object Dedup {
         (inter / (size(col("sa")) + size(col("sb")) - inter)).as("jaccard"))
   }
 
-  /** Dev-only round timing for [[componentLabels]] (ProfileCC). */
-  private[graft] var ccDebug = false
-
   /** Connected components over an undirected edge list `(a_id, b_id)` →
     * `(doc_id, comp)` with comp = min member id, via iterative min-label
     * propagation with POINTER JUMPING (round-3 verdict item 2): each round
     * every vertex takes the min of its own, its neighbors', and its
     * LABEL'S label — the `comp ← min(comp, comp[comp])` shortcut halves
     * remaining path lengths, so rounds drop from graph diameter to
-    * O(log d) (a 20-deep chain converges in ~5 rounds, not 20; measured in
-    * `Stress2.ComponentChainStress`). Per round: ONE job — the monotone
-    * label-sum aggregate both materializes the round and decides
-    * convergence (`least` only lowers labels, so Σcomp is strictly
-    * decreasing iff any vertex changed). All persists are Caches-tracked
+    * O(log d) (a 20-deep chain converges in ~5 rounds, not 20; chains of
+    * depth 8/32/128 took 4/6/8 rounds, BASELINE.md round-4 table). Per
+    * round: ONE job — the monotone label-sum aggregate both materializes
+    * the round and decides convergence (`least` only lowers labels, so
+    * Σcomp is strictly decreasing iff any vertex changed). All persists
+    * are Caches-tracked
     * (round-3 ADVICE: raw persists leaked if the 50-round `require` threw),
     * and `sym` is additionally dropped in `finally`. An EMPTY edge set
     * (no pair passes the Jaccard floor — round-3 ADVICE NPE) coalesces the
@@ -385,8 +383,6 @@ object Dedup {
     * At 100 TB: one shuffle per round keyed on doc_id/comp, nothing
     * driver-side but the O(1) convergence decimal. */
   private[graft] def componentLabels(edges: DataFrame): DataFrame = {
-    def tick(label: String, t0: Long): Unit =
-      if (ccDebug) println(f"[cc] $label ${(System.nanoTime() - t0) / 1e9}%.2fs")
     // symmetrize in ONE pass over the edge pipeline: the round-3
     // `edges.union(edges.swap)` shape put the whole LSH-candidate +
     // exact-verify lineage in the plan TWICE, and both branches executed
@@ -403,15 +399,12 @@ object Dedup {
       def labelSum(df: DataFrame): java.math.BigDecimal =
         df.agg(coalesce(sum(col("comp").cast(DecimalType(38, 0))),
           lit(0).cast(DecimalType(38, 0)))).head.getDecimal(0)
-      val tInit = System.nanoTime()
       var prevSum = labelSum(labels)
-      tick("init(edges+labels)", tInit)
       var rounds = 0
       var converged = false
       while (!converged) {
         rounds += 1
         require(rounds <= 50, "component propagation did not converge")
-        val tRound = System.nanoTime()
         val nbrMin = sym
           .join(labels.select(col("doc_id").as("dst"), col("comp")), "dst")
           .groupBy(col("src").as("doc_id"))
@@ -442,7 +435,6 @@ object Dedup {
             least(col("comp"), coalesce(col("jcomp"), col("comp"))).as("comp"))
           .localCheckpoint(false)
         val nextSum = labelSum(next)
-        tick(s"round$rounds", tRound)
         converged = nextSum.compareTo(prevSum) == 0
         prevSum = nextSum
         labels.unpersist(blocking = false)

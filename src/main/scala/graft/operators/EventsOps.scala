@@ -601,7 +601,8 @@ object EventsOps {
             C.dec2(col("value")).as("v"))
         // persisted: the calendar×type-bounded hour agg also yields the
         // grid bounds and the type list, so the corpus is scanned ONCE
-        // instead of three times (ScanAudit catch)
+        // instead of three times (the RegistrySpec scan-budget sweep
+        // gates it)
         val agg = graft.Caches.persist(ev.groupBy(col("event_type"), col("b"))
           .agg(count(lit(1)).as("cnt"), sum(col("v")).as("sv")))
         val bounds = agg.agg(min(col("b")).as("b0"), max(col("b")).as("b1"))
@@ -836,8 +837,9 @@ object EventsOps {
     // then ONE hash agg on the trigram string with map-side partial
     // aggregation; the result relation is |event-type|³-bounded (125 rows
     // here) so the final top-10 sort is free. Per-user state is the
-    // window buffer, bounded by activity (PatternSkewStress's hot-user
-    // corpus covers the same skew shape).
+    // window buffer, bounded by activity (the round-3 hot-user session
+    // probe, BASELINE.md "Retired instruments", covers the same skew
+    // shape).
     GQ(
       "q_events_ngrams",
       (s, d) => {
@@ -1166,7 +1168,8 @@ object EventsOps {
         // persisted: the session-bounded item relation feeds five
         // consumers (totals, both antecedent/consequent counts, both
         // sides of the pair self-join) — each would otherwise re-run the
-        // sessionize window over the corpus (ScanAudit catch)
+        // sessionize window over the corpus (the RegistrySpec
+        // scan-budget sweep gates it)
         val st = graft.Caches.persist(sessionEvents(s, d)
           .select(col("user_id"), col("sid"), col("event_type")).distinct())
         val tot = st.select(col("user_id"), col("sid")).distinct()

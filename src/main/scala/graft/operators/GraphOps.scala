@@ -84,12 +84,10 @@ object GraphOps {
     e
   }
 
-  /** q_graph_kcore's pre-peel state — the persisted weighted-bigram edge
-    * relation, its symmetrized view, and the adaptive k (one bounded 1-row
-    * driver fetch) — exposed for the stage profiler (round 12, VERDICT
-    * item 1: this query had never been stage-profiled). Construction is
-    * verbatim the declared query's. */
-  private[graft] final case class KcoreState(pj: org.apache.spark.sql.DataFrame,
+  /** q_graph_kcore's pre-peel state — the symmetrized view of the
+    * persisted weighted-bigram edge relation, and the adaptive k (one
+    * bounded 1-row driver fetch). */
+  private[graft] final case class KcoreState(
       sym: org.apache.spark.sql.DataFrame, k: Int)
 
   private[graft] def kcoreState(
@@ -108,7 +106,7 @@ object GraphOps {
       .head()
     val k = math.max(2L, (st.getLong(0) / math.max(1L, st.getLong(1)))
       * 2 / 3)
-    KcoreState(pj, sym, k.toInt)
+    KcoreState(sym, k.toInt)
   }
 
   val queries: Seq[GQ] = Seq(
@@ -139,7 +137,8 @@ object GraphOps {
       (s, d) => {
         // persisted: the distinct edge relation (vocab²-bounded) feeds the
         // degree agg and both withDeg joins — each consumer would re-run
-        // the corpus shingling AND the distinct shuffle (ScanAudit catch)
+        // the corpus shingling AND the distinct shuffle (the RegistrySpec
+        // scan-budget sweep gates it)
         val pj = graft.Caches.persist(
           Grams.wordPairRows(Tables.t(s, d, "documents"))
             .filter(col("w1") =!= col("w2"))

@@ -97,16 +97,15 @@ object LlmPipeline {
       .select(lit(stage).as("stage"), col("n_docs"), col("n_tokens"),
         col("membership_fp"))
 
-  /** The staged hand-off relations — exposed so the profiler
-    * (graft.tools.ProfileLlm) and specs can drive stages individually.
-    * `base`/`s1` are scan-side projections of [[incrementalExact]]'s one
-    * SHALLOW cached (doc_id, lang, text) corpus scan (round 11 — the full
-    * run shares the incremental path's machinery); `s01Rows` is the
-    * pre-assembled two-row funnel head; s3/s4/s5 are NARROW
-    * (doc_id, lang, n_tok, fp) — after s2, document text lives only in
-    * the one cached s2 relation that the shingle stages read. */
+  /** The staged hand-off relations of the full run. `s01Rows` is the
+    * pre-assembled two-row funnel head, aggregated from
+    * [[incrementalExact]]'s one SHALLOW cached (doc_id, lang, text) corpus
+    * scan (round 11 — the full run shares the incremental path's
+    * machinery); s3/s4/s5 are NARROW (doc_id, lang, n_tok, fp) — after
+    * s2, document text lives only in the one cached s2 relation that the
+    * shingle stages read. */
   private[graft] final case class Stages(
-      base: DataFrame, s1: DataFrame, s01Rows: DataFrame, s2: DataFrame,
+      s01Rows: DataFrame, s2: DataFrame,
       s3: DataFrame, s4: DataFrame, s5: DataFrame, splitRows: DataFrame)
 
   /** The post-exact-dedup SUCCESSOR stages — neardup → decontam → mix →
@@ -204,8 +203,6 @@ object LlmPipeline {
     val ex = incrementalExact(
       s, Tables.t(s, d, "documents").filter(col("doc_id") >= 4), lit(false))
     val base = ex.allBase
-    val s1 = base.filter(col("q"))
-      .select(col("doc_id"), col("lang"), col("text"), col("n_tok"), col("fp"))
 
     // funnel head: BOTH ledger rows from ONE corpus pass — a single
     // conditional aggregation, exploded into the two (stage, …) rows
@@ -236,7 +233,7 @@ object LlmPipeline {
     val suc = successorsOf(
       s2, Tables.t(s, d, "documents").filter(col("doc_id") < 4))
 
-    Stages(base, s1, s01Rows, s2, suc.s3, suc.s4, suc.s5, suc.splitRows)
+    Stages(s01Rows, s2, suc.s3, suc.s4, suc.s5, suc.splitRows)
   }
 
   /** The INCREMENTAL (daily-run) ledger (round 7, VERDICT item 4): a NEW
@@ -463,9 +460,8 @@ object LlmPipeline {
     * s2 (proved round 7), and since the successor machinery is shared,
     * m3..m6 then equal the full run's s3..s6 EXACTLY — the daily run and
     * the from-scratch run ship the identical release. */
-  /** The reconciled corpus + its successor stages, exposed for the stage
-    * profiler (round 9, VERDICT item 4 — ProfileLlm ticks each hand-off
-    * of the most expensive declared query individually). */
+  /** The reconciled corpus + its successor stages (per-stage costs:
+    * BASELINE.md "LLM-pipeline stage table at HEAD", round 12). */
   private[graft] final case class Reconciled(c2: DataFrame, suc: Successors)
 
   private[graft] def reconciledStages(

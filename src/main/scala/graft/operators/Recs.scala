@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{GQ, Tables}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -14,17 +15,10 @@ import org.apache.spark.sql.types._
   */
 object Recs {
 
-  /** q_recs_itemcf's staged hand-offs — the deduped (order, part)
-    * incidence, the co-purchase pair counts, the cosine-scored symmetric
-    * relation, and the final top-3 — exposed for the stage profiler
-    * (round 12, VERDICT item 1: this query had never been stage-profiled).
-    * Construction is verbatim the declared query's. */
-  private[graft] final case class ItemCf(
-      li: org.apache.spark.sql.DataFrame, pairs: org.apache.spark.sql.DataFrame,
-      scored: org.apache.spark.sql.DataFrame, top: org.apache.spark.sql.DataFrame)
-
-  private[graft] def itemCf(
-      s: org.apache.spark.sql.SparkSession, d: String): ItemCf = {
+  /** q_recs_itemcf: the deduped (order, part) incidence, the co-purchase
+    * pair counts, the cosine-scored symmetric relation, and the top-3
+    * recommendations per item. */
+  private[graft] def itemCf(s: SparkSession, d: String): DataFrame = {
     // ONE exchange serves the dedup, the self-join, and the margins:
     // hash(o) co-locates every (o, p) of an order, so dropDuplicates(o, p)
     // runs partition-local (ClusteredDistribution(o, p) is satisfied by
@@ -44,8 +38,9 @@ object Recs {
     // scan + ONE repartition(o) exchange (ReusedExchange over it) and
     // ONE basket self-join + pair agg (the second union branch is a
     // ReusedExchange of the agg's shuffle) — verified in the executed
-    // final plan (tools/ProfileRecsGraph dumps it). Shuffle reuse is the
-    // honest 100 TB shape: disk-backed, no executor-memory corpus cache.
+    // final plan (BASELINE.md round-12 itemcf stage profile). Shuffle
+    // reuse is the honest 100 TB shape: disk-backed, no executor-memory
+    // corpus cache.
     //
     // The explicit null-key filter is load-bearing for that reuse: the
     // join sides INFER isnotnull(o) and push it to their scans while the
@@ -78,14 +73,13 @@ object Recs {
         sqrt((col("n_i") * col("n_r")).cast(DoubleType)))
     val w = Window.partitionBy(col("item"))
       .orderBy(col("cosine").desc, col("rec"))
-    val top = scored
+    scored
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= 3)
       .select(col("item"), col("rank").cast(LongType).as("rank"),
         col("rec"), col("n_ab"),
         graft.functions.vec.roundz(col("cosine"), 6).as("cosine"))
       .orderBy(col("item"), col("rank"))
-    ItemCf(li, pairs, scored, top)
   }
 
   val queries: Seq[GQ] = Seq(
@@ -111,7 +105,7 @@ object Recs {
     // than the pair relation (≤ Σ|basket|²) ever shuffles.
     GQ(
       "q_recs_itemcf",
-      (s, d) => itemCf(s, d).top,
+      (s, d) => itemCf(s, d),
       Some("""WITH li AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
              |  FROM lineitem
              |  WHERE l_orderkey IS NOT NULL AND l_partkey IS NOT NULL),

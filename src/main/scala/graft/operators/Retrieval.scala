@@ -375,7 +375,7 @@ object Retrieval {
           .select(explode(split(col("text"), " ")).as("word"))
         // persisted: the vocab-bounded unigram relation feeds the total
         // and both sides of the bigram join — three corpus re-scans
-        // otherwise (ScanAudit catch)
+        // otherwise (the RegistrySpec scan-budget sweep gates it)
         val uni = graft.Caches.persist(
           words.groupBy(col("word")).agg(count(lit(1)).as("cx")))
         val tot = uni.agg(sum(col("cx")).as("n"))

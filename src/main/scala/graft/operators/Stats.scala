@@ -531,7 +531,8 @@ object Stats {
                 .as(s"s_${a}_$b")))
         // persisted: the 1-row moment relation projects into all six pair
         // rows — without it each union branch re-scans the corpus (the
-        // ScanAudit catch; runtime exchange reuse masked it at test scale)
+        // RegistrySpec scan-budget sweep gates it; runtime exchange reuse
+        // masked it at test scale)
         val m = graft.Caches.persist(li.agg(aggs.head, aggs.tail: _*))
         val nD = col("n").cast(DoubleType)
         val rows = for (a <- CorrCols; b <- CorrCols if a < b) yield {
@@ -1142,8 +1143,9 @@ object Stats {
     * (round 5) so the Spark side can feed a PERSISTED day-agg view: the
     * `daily` CTE is referenced four times (both pair sides, the residual
     * median, the day count) and Spark inlines CTEs, so the single text
-    * re-scanned the corpus four times (ScanAudit catch). The math tokens
-    * stay one string for both engines (anti-drift).
+    * re-scanned the corpus four times (the RegistrySpec scan-budget sweep
+    * gates it). The math tokens stay one string for both engines
+    * (anti-drift).
     */
   private def TheilSenMath(dailySrc: String): String =
     s"""WITH daily AS (SELECT day, c FROM $dailySrc),

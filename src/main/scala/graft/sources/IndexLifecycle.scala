@@ -91,7 +91,7 @@ object IndexLifecycle {
     // second write-time CORPUS pass: scan + explode + (doc, word) agg).
     // Round-9 kept the replay on a toy-geometry A/B (8 buckets capped the
     // table read at 8 tasks); round 10 re-ran the A/B at non-toy geometry
-    // (VERDICT item 6 — ×10 documents, buckets = 32, tools/DoclensAb):
+    // (VERDICT item 6 — ×10 documents, buckets = 32):
     // table-derived wins there and is the only form whose cost stays
     // index-sized as the corpus grows. Numbers in BASELINE.md.
     s.table(s"${prefix}_postings")

@@ -1,19 +1,19 @@
 package graft.tools
 
+import java.util.concurrent.ConcurrentLinkedQueue
+
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.streaming.StreamingQueryListener
 import scala.collection.mutable
 
-/** Dev-only GENERIC per-query job profiler (round 13): attach a
-  * SparkListener, run one declared query, and attribute its wall time to
-  * individual Spark jobs (with per-job task-time sums) versus the gaps
-  * between jobs (driver-side planning, AQE re-optimization, persist
-  * barriers, codegen). The round-12 profilers (ProfileRecsGraph,
-  * ProfileLlm, StreamCkptProfile) each hand-staged ONE query; this tool
-  * gives the same first-cut attribution for ANY of the 230 declared
-  * queries without writing a bespoke harness, which is what guide §1.1's
-  * empirical loop needs when the next target is a mid-band query that has
-  * never been profiled.
+/** Dev-only per-query profiler: attach a SparkListener, run one declared
+  * query, and attribute its wall time to individual Spark jobs (with
+  * per-job task-time sums) versus the gaps between jobs (driver-side
+  * planning, AQE re-optimization, persist barriers, codegen). It gives a
+  * first-cut attribution for ANY of the declared queries without a
+  * bespoke harness; the one-off stage profilers it replaced are listed in
+  * BASELINE.md "Retired instruments".
   *
   * Output per job: start offset (s, from query t0), wall (s), task-time
   * sum (s), tasks, and the job's callsite/description. Then a summary:
@@ -21,12 +21,56 @@ import scala.collection.mutable
   * task-parallelism ratio Σtask/Σjobwall (a 32-core box doing ~1 means
   * single-task stages dominate — core-count scaling will be flat).
   *
+  * Streaming queries: every micro-batch of every stream the query starts
+  * is printed after the summary as an `[sq] batch=…` line with its
+  * durationMs phases (triggerExecution / addBatch / walCommit /
+  * commitOffsets / latestOffset / queryPlanning) and each stateful
+  * operator's rows, update/removal and state-store commit times. The gap
+  * between Σ triggerExecution and the query wall is the non-batch fixed
+  * cost: query start-ups (offset-log and state recovery), the harness's
+  * staging writes and the final sink read. The [[Printer]] is registered
+  * through Spark's static `spark.sql.streaming.streamingQueryListeners`
+  * conf, which each stream's private state session (a `newSession()`
+  * clone) inherits; `spark.streams.addListener` would miss those streams.
+  *
+  * State-store A/B: `SparkConf` reads `spark.*` JVM system properties, so
+  * e.g. `-Dspark.sql.streaming.stateStore.providerClass=org.apache.spark.
+  * sql.execution.streaming.state.RocksDBStateStoreProvider` on the JVM
+  * (sbt: `set run / javaOptions += "-D…"`) profiles the RocksDB store
+  * against the default HDFS-backed one; the declared queries never set a
+  * provider.
+  *
   * Usage: runMain graft.tools.ProfileQ <name[,name...]> [sfDir] [reps]
   */
 object ProfileQ {
   final case class JobRec(id: Int, start: Long, var end: Long = -1L,
       var taskNanos: Long = 0L, var gcMs: Long = 0L, var tasks: Int = 0,
       desc: String = "")
+
+  /** Buffers each stream's start, per-batch phases and state-store times,
+    * and termination as `[sq]` lines, printed after the query's summary.
+    * Spark instantiates one per session, hence the shared buffer. */
+  final class Printer extends StreamingQueryListener {
+    import StreamingQueryListener._
+    override def onQueryStarted(e: QueryStartedEvent): Unit =
+      Printer.lines.add(s"[sq] started run=${e.runId}")
+    override def onQueryProgress(e: QueryProgressEvent): Unit = {
+      val p = e.progress
+      val st = p.stateOperators.map(o =>
+        s"${o.operatorName}:rows=${o.numRowsTotal},upd=${o.allUpdatesTimeMs}ms," +
+          s"rm=${o.allRemovalsTimeMs}ms,commit=${o.commitTimeMs}ms").mkString(" ")
+      Printer.lines.add(s"[sq] batch=${p.batchId} in=${p.numInputRows} " +
+        s"durs=${p.durationMs} $st")
+    }
+    override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
+      Printer.lines.add(s"[sq] terminated run=${e.runId}")
+  }
+
+  object Printer {
+    private val lines = new ConcurrentLinkedQueue[String]()
+    def flush(): Unit = Iterator.continually(lines.poll())
+      .takeWhile(_ != null).foreach(println)
+  }
 
   def main(args: Array[String]): Unit = {
     val names = args(0).split(",").toSeq
@@ -38,6 +82,7 @@ object ProfileQ {
         Runtime.getRuntime.availableProcessors().toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.streaming.streamingQueryListeners", classOf[Printer].getName)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val jobs = mutable.LinkedHashMap[Int, JobRec]()
@@ -72,8 +117,6 @@ object ProfileQ {
     }
     for (name <- names; rep <- 1 to reps) {
       val gq = graft.Registry.byName(name)
-      spark.catalog.clearCache()
-      graft.Caches.release(spark)
       jobs.synchronized { jobs.clear(); stageToJob.clear() }
       spark.sparkContext.addSparkListener(listener)
       val cg0n = cg.METRIC_COMPILATION_TIME.getCount
@@ -87,6 +130,10 @@ object ProfileQ {
       // drain listener-bus stragglers before reading the job map
       Thread.sleep(300)
       spark.sparkContext.removeSparkListener(listener)
+      // drop the run's persists and stream scratch dirs (a bare run keeps
+      // them until released), and the plan cache, before the next rep
+      spark.catalog.clearCache()
+      graft.Caches.release(spark)
       val snap = jobs.synchronized { jobs.values.toVector }
       println(f"[pq] ===== $name rep$rep rows=$n wall=$wall%.2fs =====")
       var sumJob = 0.0; var sumTask = 0.0; var sumGc = 0.0
@@ -98,6 +145,7 @@ object ProfileQ {
           println(f"[pq] job=${r.id}%-4d at+${(r.start - t0w) / 1e3}%6.2fs wall=$jw%6.2fs task=$tt%7.2fs n=${r.tasks}%-5d ${r.desc.take(90)}")
       }
       println(f"[pq] jobs=${snap.size} sumJobWall=$sumJob%.2fs gap=${wall - sumJob}%.2fs sumTask=$sumTask%.2fs par=${if (sumJob > 0) sumTask / sumJob else 0.0}%.1f codegen_compiles=$cgN codegen_s_approx=${cgMs / 1000.0}%.1f gc=$sumGc%.1fs")
+      Printer.flush()
     }
     spark.stop()
   }

@@ -157,14 +157,15 @@ object ScaleStress {
     // the append-mode checkpoint restart
     "q_sim_ann_pimi", "q_llm_pipeline_mix", "q_stream_sliding_ckpt",
     // round 9: the ANN write-then-serve lifecycle — per-run train+write is
-    // oracle-forced (AnnServedStress records the serve-only slopes)
+    // oracle-forced (the serve-only slopes are in BASELINE.md "Retired
+    // instruments")
     "q_sim_ann_served", "q_knn_join_served", "q_dedup_semantic_served",
     // round 9: the MAINTAIN lifecycle (delta generations) + the remaining
     // two checkpoint-restart shapes; q_dedup_upsert shares q_dedup_served's
     // verbatim-replica caveat (candidate volume is copies²·texts by
-    // construction), so like it, ×10 only — DedupServedStress carries the
-    // varied-vocab curve; the stream ckpt shapes' join/session output is
-    // replica-correlated the same way
+    // construction), so like it, ×10 only — BASELINE.md's round-9
+    // "maintain round" records its varied-vocab curve; the stream ckpt
+    // shapes' join/session output is replica-correlated the same way
     "q_retrieval_upsert", "q_dedup_upsert", "q_sim_ann_upsert",
     "q_stream_sessions_ckpt", "q_stream_join_ckpt")
 
@@ -176,8 +177,8 @@ object ScaleStress {
     * (jaccard_words/ngram, minhash_pairs, winnow_pairs, lsh_verify,
     * containment, components, dedup_incremental — ~100 identical copies
     * of every text share all bands, so candidate volume is copies²·texts
-    * BY CONSTRUCTION; tools/Stress2's varied-vocab probes are the
-    * algorithmic-curve evidence for those) and the fixed-region spatial
+    * BY CONSTRUCTION; the varied-vocab probes in BASELINE.md rounds 2-4
+    * are the algorithmic-curve evidence for those) and the fixed-region spatial
     * join (same caveat, round 5). The LLM pipelines stay IN: their
     * near-dup stages run over exact-DEDUPED survivors, which collapse
     * the replicas — the scale path a real deployment runs. */
@@ -196,8 +197,9 @@ object ScaleStress {
     "q_sim_cosine", "q_sim_ann_ivf", "q_sim_ann_centroids", "q_knn_join",
     "q_dedup_semantic", "q_sim_ann_pq", "q_sim_ann_lsh",
     // round 9: the served ANN twins — their in-run train+write is the
-    // oracle-forced term (tools/AnnServedStress separates it: serve-only
-    // ×10→×100 slopes 2.9/2.0/1.4, strongly sub-linear)
+    // oracle-forced term (a serve-only probe separated it: ×10→×100
+    // slopes 2.9/2.0/1.4, strongly sub-linear; BASELINE.md "Retired
+    // instruments")
     "q_sim_ann_served", "q_knn_join_served",
     // retrieval (the round-6 slope offender, now index-backed; round 8
     // adds the write-then-serve declared pipeline) + pipelines

@@ -221,8 +221,9 @@ class AnnSpec extends AnyFunSuite {
     // recall probe for the q_sim_ann_pimi serving shape. Round 9 (VERDICT
     // item 1): the probe consumes the FULL pSide² = 9-cell multi-sequence
     // frontier (the bounded shortlist; the exact cosine top-k is the
-    // rescore) — the r8 4-cell prefix served 0.80, and tools/PimiProbe
-    // measured the loss as frontier WIDTH, not ranking geometry (cosine
+    // rescore) — the r8 4-cell prefix served 0.80, and a driver-side
+    // replay of the grid (BASELINE.md "Retired instruments") measured the
+    // loss as frontier WIDTH, not ranking geometry (cosine
     // re-ranking of the prefix stayed 0.80; full-grid cosine ranking was
     // WORSE at 0.73). Floor restored to the ≥0.9 bar every other ANN
     // serving path holds (IVF 0.93, PQ 1.00).

@@ -253,8 +253,8 @@ class OperatorSpec extends AnyFunSuite {
     import TestSpark.spark.implicits._
     // a 21-vertex path — worst-case diameter for its size; pointer jumping
     // must still converge (plain propagation needs 20 rounds, the 50-round
-    // cap would pass either way, but Stress2.ComponentChainStress measures
-    // the round count; here we pin correctness)
+    // cap would pass either way; the round count for planted chains is
+    // recorded in BASELINE.md round 4; here we pin correctness)
     val chain = (0L until 20L).map(i => (i, i + 1)).toDF("a_id", "b_id")
     val labels = graft.operators.Dedup.componentLabels(chain).collect()
       .map(r => (r.getLong(0), r.getLong(1)))

@@ -216,7 +216,7 @@ class PlanShapeSpec extends AnyFunSuite {
     // re-exploding the text. The query row's own scans (EqualTo(doc_id,0),
     // pushdown-pruned to one document) are exempt: that is the QUERY, not
     // the corpus. Formatted mode: the simple plan string collapses reused
-    // subtrees and under-counts scan sites (ScanAudit's lesson).
+    // subtrees and under-counts scan sites (the scan sweep's lesson).
     val p = Registry.byName("q_retrieval_queryexp").run(spark, sf)
       .queryExecution.explainString(
         org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))

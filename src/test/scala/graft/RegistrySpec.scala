@@ -91,7 +91,7 @@ class RegistrySpec extends AnyFunSuite {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
-  // The lineage-recompute net (round 5, the ScanAudit catch): a relation
+  // The lineage-recompute net (round 5, found by a scan audit): a relation
   // consumed by several branches silently re-scans its source once per
   // consumer unless persisted — at 100 TB that is N corpus passes hiding
   // behind a green result. Every query may contribute at most TWO scan

@@ -16,11 +16,19 @@ object TestSpark {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        Files.createTempDirectory("graft-warehouse-").toString)
+      .config("spark.sql.warehouse.dir", jvmTempDir("graft-warehouse-"))
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
+  }
+
+  /** A fresh directory under `java.io.tmpdir`, deleted with everything in
+    * it when the test JVM exits (`File.deleteOnExit` skips a non-empty
+    * directory). The delete never follows a symbolic link. */
+  def jvmTempDir(prefix: String): String = {
+    val d = Files.createTempDirectory(prefix)
+    sys.addShutdownHook(Caches.deleteTree(d))
+    d.toString
   }
 }
 
@@ -28,7 +36,8 @@ object TestSpark {
   * schemas) with a handful of rows each, chosen to hit operator edges —
   * a region with no nations, a customer with no orders, duplicate document
   * texts, a <3-word document (shingle guard), events spanning hour buckets.
-  * Written once per JVM to a temp dir; every declared query runs against it.
+  * Written once per JVM to a temp dir that is deleted when the JVM exits;
+  * every declared query runs against it.
   */
 object MiniData {
   import TestSpark.spark
@@ -37,9 +46,7 @@ object MiniData {
   private def ts(s: String): Timestamp = Timestamp.valueOf(s)
 
   lazy val dir: String = {
-    val d = Files.createTempDirectory("graft-mini-").toFile
-    d.deleteOnExit()
-    val p = d.getAbsolutePath
+    val p = TestSpark.jvmTempDir("graft-mini-")
 
     def w(df: DataFrame, name: String): Unit =
       df.coalesce(1).write.mode("overwrite").parquet(s"$p/$name.parquet")
