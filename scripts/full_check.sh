@@ -9,6 +9,17 @@ set -euo pipefail
 cd "$(dirname "$0")/.."
 ROOT="${1:-/root/testdata}"
 
+# One session setup: graft.Session builds every session in src/main.
+# Scaladoc lines (leading `*`) may show the builder call.
+builders="$(grep -rn 'SparkSession.builder()' src/main \
+  | grep -v '^src/main/scala/graft/Session\.scala:' \
+  | grep -Ev '^[^:]+:[0-9]+:[[:space:]]*\*' || true)"
+if [ -n "$builders" ]; then
+  echo "SparkSession.builder() outside graft/Session.scala:"
+  echo "$builders"
+  exit 1
+fi
+
 sbt -batch test
 
 # Leak gate: every graft_* entry a Verify run creates in the JVM's temp dir

@@ -59,7 +59,7 @@ object Bench {
     * records whose FULL string matches. The job id itself stays pinned. */
   private val CalibAnchorJob = "4g-xxhash64-agg1024-median5-v1"
 
-  private def calibAnchorId(cpus: String): String = {
+  private def calibAnchorId(cpus: Int): String = {
     val heapGb = math.round(Runtime.getRuntime.maxMemory() / 1073741824.0)
     s"$CalibAnchorJob/heap${heapGb}g-cpu$cpus"
   }
@@ -105,16 +105,10 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
+    val cpus = Session.defaultCores
     val loadPre = loadAvg()
     val jvmsPre = otherJvms()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.start(cpus)
     // Untimed warmup pass: JIT compilation + parquet footer/codegen caches,
     // so the timed loop reports steady-state per-query cost instead of
     // charging whole-JVM warmup to whichever query happens to run first.

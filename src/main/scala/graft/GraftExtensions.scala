@@ -9,10 +9,10 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 /** The engine's public SQL integration point: a `SparkSessionExtensions`
   * installer exposing the native graft functions to plain SQL —
   *
-  *   SparkSession.builder()
-  *     .config("spark.sql.extensions", "graft.GraftExtensions")  // or
-  *     .withExtensions(new GraftExtensions)
+  *   graft.Session.start(cores, "spark.sql.extensions" -> "graft.GraftExtensions")
   *
+  * or, under `spark-submit --conf spark.sql.extensions=graft.GraftExtensions
+  * --conf spark.sql.codegen.cache.maxEntries=20000`, `graft.Session.configure(spark)`
   * — so a user (or Thrift/Connect server) gets `cosine_sim`,
   * `hll_distinct`, `h60`, `cms_sketch`/`cms_estimate`, the Bloom pair
   * (`graft_bloom_agg`/`graft_bloom_might_contain`), `kgrams` and

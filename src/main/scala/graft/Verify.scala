@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -11,25 +10,15 @@ object Verify {
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
     def keep(name: String): Boolean = only.forall(_.contains(name))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
+    val cpus = Session.defaultCores
     // Round 11 (VERDICT item 7): Verify self-describes box contention the
     // way Bench does, so a slow correctness gate can be adjudicated from
     // its own record instead of forensics. Written to guards.json below.
     val t0 = System.nanoTime()
     val loadPre = Bench.loadAvg()
     val jvmsPre = Bench.otherJvms()
-    // NOTE: Spark 4 runs with spark.sql.ansi.enabled=true by default and
-    // the builder inherits it deliberately — every Verify sweep is ALSO a
-    // strict-overflow probe (a silent Long wrap or lossy cast fails loudly
-    // instead of surfacing as a value diff)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // Spark 4's default ANSI mode stays on: each sweep is an overflow probe
+    val spark = Session.start(cpus)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(kv => keep(kv._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")

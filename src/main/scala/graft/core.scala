@@ -175,28 +175,17 @@ object Tables {
     spark.read.parquet(s"$dir/$name.parquet")
 
   /** events.parquet: epoch-nanos `ts` shim, kept in exactly one place.
-    *
-    * The driver's generator has shipped `ts` as parquet TIMESTAMP(NANOS)
-    * (rounds 1–3) and as TIMESTAMP(MICROS) (round 4+); test fixtures plant
-    * it as a raw BIGINT. All three surface here as the SAME LongType
-    * epoch-nanos column, so every downstream query keeps one time basis:
-    *   - BIGINT          → already nanos, pass through;
-    *   - TIMESTAMP(NANOS)→ `spark.sql.legacy.parquet.nanosAsLong=true`
-    *     (Spark 4.1.2 otherwise refuses nanos parquet) reads it as nanos;
-    *   - TIMESTAMP[_NTZ] → `unix_micros(ts) * 1000` — exact integer widen,
-    *     no precision games. NTZ first re-tags as UTC instant via the
-    *     session clock; every entry point (Verify/Bench/tests) pins
-    *     `spark.sql.session.timeZone=UTC`, matching DuckDB's oracle-side
-    *     `epoch_ns(ts)` on the same file.
-    *
-    * CAVEAT (round-2 ADVICE): the legacy flag is SESSION-scoped — Spark has
-    * no per-read option for it — so it leaks into every later read on this
-    * session, surfacing any other nanos-timestamp parquet as LongType too.
-    * Acceptable for this harness (every events consumer wants exactly that);
-    * a user-facing API would isolate the flag in a dedicated session via
-    * `spark.newSession()` before setting it. */
+    * The generator has shipped `ts` as TIMESTAMP(NANOS) (rounds 1–3) and
+    * TIMESTAMP(MICROS) (round 4+); test fixtures plant a raw BIGINT. All
+    * three surface as the SAME LongType epoch-nanos column:
+    *   - BIGINT           → already nanos, pass through;
+    *   - TIMESTAMP(NANOS) → nanos under the session-scoped
+    *     `spark.sql.legacy.parquet.nanosAsLong`, which [[Session]] sets at
+    *     setup; this read writes nothing into the caller's session;
+    *   - TIMESTAMP[_NTZ]  → `unix_micros(ts) * 1000`, an exact widen. NTZ
+    *     re-tags as an instant on the session clock, pinned to UTC by
+    *     [[Session]], matching DuckDB's `epoch_ns(ts)` on the same file. */
   def events(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = t(spark, dir, "events")
     raw.schema("ts").dataType match {
       case LongType => raw

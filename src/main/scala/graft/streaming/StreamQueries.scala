@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.nio.file.{Files, Path, Paths}
 
-import graft.{Caches, GQ}
+import graft.{Caches, GQ, Session}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.Aggregate
 import org.apache.spark.sql.functions._
@@ -102,13 +102,10 @@ object StreamQueries {
     * never observe each other's setting (StreamConcurrencySpec). */
   private[streaming] def stateSession(s: SparkSession, n: Int): SparkSession = {
     val ss = s.newSession()
+    Session.runtimeConfs.foreach { case (k, _) => ss.conf.set(k, s.conf.get(k)) }
     ss.conf.set("spark.sql.shuffle.partitions", n.toString)
-    // Round 11: Spark 4.1 verifies checkpoint-file
-    // checksums by default, but several checkpoint file classes are
-    // written without one, so the restart runs WARNed on every such file
-    // and buried the WARNs that matter. These checkpoints are ephemeral
-    // per-run dirs on local disk; turn verification off for the stream
-    // sessions only.
+    // Checkpoint files written without a checksum WARNed on every restart;
+    // these per-run local checkpoints are ephemeral: verification off here.
     ss.conf.set("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
     ss
   }

@@ -1,17 +1,11 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.Session
 
 /** Dev tool mirroring the driver's t1 smoke: SparkEntry.entry rows > 0. */
 object EntrySmoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.start(Session.defaultCores)
     val df = graft.SparkEntry.entry(spark)
     println(s"ENTRY_ROWS=${df.count()}")
     df.show(truncate = false)

@@ -1,7 +1,6 @@
 package graft.tools
 
-import graft.Registry
-import org.apache.spark.sql.SparkSession
+import graft.{Registry, Session}
 
 /** Dev tool: print the formatted physical plan and wall-time for one query.
   * Usage: runMain graft.tools.Explain <queryName> [sfDir] [reps]
@@ -11,14 +10,7 @@ object Explain {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 2
-    val spark = SparkSession.builder()
-      .master(s"local[${Runtime.getRuntime.availableProcessors()}]")
-      .config("spark.sql.shuffle.partitions",
-        Runtime.getRuntime.availableProcessors().toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.start(Session.defaultCores)
     val gq = Registry.byName(name)
     gq.run(spark, sfDir).explain("formatted")
     for (i <- 1 to reps) {

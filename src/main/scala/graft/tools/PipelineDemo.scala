@@ -2,8 +2,8 @@ package graft.tools
 
 import java.sql.Timestamp
 
+import graft.Session
 import graft.sources._
-import org.apache.spark.sql.SparkSession
 
 /** Usage example + smoke drive for the connector layer: wires the reference
   * ETL DAG (SpotifyPipeline) against an in-memory HTTP stub and prints the
@@ -48,13 +48,7 @@ object PipelineDemo {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.start(Session.defaultCores)
     val source = new SpotifySource(
       new RateLimitedClient(StubClient, minIntervalMs = 0), Base)
     val tables = new SpotifyPipeline(source)

@@ -2,8 +2,8 @@ package graft.tools
 
 import java.util.concurrent.ConcurrentLinkedQueue
 
+import graft.Session
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQueryListener
 import scala.collection.mutable
 
@@ -34,11 +34,9 @@ import scala.collection.mutable
   * clone) inherits; `spark.streams.addListener` would miss those streams.
   *
   * State-store A/B: `SparkConf` reads `spark.*` JVM system properties, so
-  * e.g. `-Dspark.sql.streaming.stateStore.providerClass=org.apache.spark.
-  * sql.execution.streaming.state.RocksDBStateStoreProvider` on the JVM
-  * (sbt: `set run / javaOptions += "-D…"`) profiles the RocksDB store
-  * against the default HDFS-backed one; the declared queries never set a
-  * provider.
+  * `-Dspark.sql.streaming.stateStore.providerClass=org.apache.spark.sql.
+  * execution.streaming.state.RocksDBStateStoreProvider` (sbt: `set run /
+  * javaOptions += "-D…"`) profiles RocksDB against the default store.
   *
   * Usage: runMain graft.tools.ProfileQ <name[,name...]> [sfDir] [reps]
   */
@@ -76,15 +74,8 @@ object ProfileQ {
     val names = args(0).split(",").toSeq
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 3
-    val spark = SparkSession.builder()
-      .master(s"local[${Runtime.getRuntime.availableProcessors()}]")
-      .config("spark.sql.shuffle.partitions",
-        Runtime.getRuntime.availableProcessors().toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.streaming.streamingQueryListeners", classOf[Printer].getName)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.start(Session.defaultCores,
+      "spark.sql.streaming.streamingQueryListeners" -> classOf[Printer].getName)
     val jobs = mutable.LinkedHashMap[Int, JobRec]()
     val stageToJob = mutable.HashMap[Int, Int]()
     val listener = new SparkListener {

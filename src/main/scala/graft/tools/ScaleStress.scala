@@ -2,8 +2,8 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import graft.Registry
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import graft.{Registry, Session}
+import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 
 /** Scale-up stress: replicate the sf0.1 tables 10× (keys re-offset so they
@@ -228,20 +228,7 @@ object ScaleStress {
     val stressed = if (listArg == "risky") RiskyX100 else Stressed
     val src = "/root/testdata/sf0.1"
     val dst = s"/tmp/graft_scale_x$copies"
-    val spark = SparkSession.builder()
-      .master(s"local[${Runtime.getRuntime.availableProcessors()}]")
-      .config("spark.sql.shuffle.partitions",
-        Runtime.getRuntime.availableProcessors().toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    // R5 time-basis contract: driver data is TIMESTAMP(MICROS) since round
-    // 4, so this flag is usually a no-op — kept only for legacy
-    // TIMESTAMP(NANOS) inputs (rounds 1–3), which a plain read refuses;
-    // the replication below is schema-agnostic either way
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val spark = Session.start(Session.defaultCores)
     // completion marker, not bare directory existence: a crashed build must
     // not be mistaken for a finished one on rerun
     val marker = Paths.get(dst, "_GRAFT_SCALE_COMPLETE")

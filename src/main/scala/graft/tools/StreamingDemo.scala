@@ -1,7 +1,7 @@
 package graft.tools
 
+import graft.Session
 import graft.streaming.EventStreams
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Runtime drive of the streaming surface against Spark's built-in `rate`
@@ -12,13 +12,7 @@ import org.apache.spark.sql.functions._
 object StreamingDemo {
   def main(args: Array[String]): Unit = {
     val runSeconds = if (args.nonEmpty) args(0).toInt else 20
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.start(Session.defaultCores)
 
     val events = spark.readStream
       .format("rate").option("rowsPerSecond", 50).load()

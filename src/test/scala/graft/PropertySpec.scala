@@ -107,10 +107,9 @@ class PropertySpec extends AnyFunSuite {
     // The PPJoin prefix theorem is the one piece of round-2 machinery whose
     // failure mode is a silently MISSING pair — check it against an
     // in-memory brute force on random corpora, same τ=0.5 / top-20 contract.
-    import java.nio.file.Files
     for (s <- Seq(100L, 200L, 300L)) {
       val docs = randomDocs(s, 25)
-      val dir = Files.createTempDirectory("jacprop-").toString
+      val dir = TestSpark.jvmTempDir("jacprop-")
       docs.map { case (id, t) => (id, t, "en", "src0", t.length.toLong) }
         .toDF("doc_id", "text", "lang", "source", "n_chars")
         .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -130,7 +129,6 @@ class PropertySpec extends AnyFunSuite {
   test("winnowing guarantee: any shared run of ≥ w+k-1 words yields a shared fingerprint") {
     // MOSS theorem (k=3, w=4): two documents sharing a contiguous run of at
     // least w+k-1 = 6 words must share at least one winnowed fingerprint.
-    import java.nio.file.Files
     val run = "sigma kappa delta beta gamma alpha" // 6 shared words
     for (s <- Seq(400L, 500L)) {
       val noise = randomDocs(s, 6).map(_._2)
@@ -138,7 +136,7 @@ class PropertySpec extends AnyFunSuite {
         (1L, s"${noise(0)} $run ${noise(1)}"),
         (2L, s"${noise(2)} $run"),
         (3L, noise(3)), (4L, noise(4))) // controls without the run
-      val dir = Files.createTempDirectory("winprop-").toString
+      val dir = TestSpark.jvmTempDir("winprop-")
       docs.map { case (id, t) => (id, t, "en", "src0", t.length.toLong) }
         .toDF("doc_id", "text", "lang", "source", "n_chars")
         .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -177,7 +175,6 @@ class PropertySpec extends AnyFunSuite {
     // near-duplicates indexed doc 3; doc 20 is new and unique. The query
     // must report exactly (10 -> 3) — the new doc is the one dropped, the
     // indexed corpus is never reported, and unique new docs pass through.
-    import java.nio.file.Files
     import spark.implicits._
     val shared = (1 to 30).map(i => s"w$i").mkString(" ")
     val docs = Seq(
@@ -185,7 +182,7 @@ class PropertySpec extends AnyFunSuite {
       (10L, shared + " tail", "en", "src0"),
       (20L, (1 to 30).map(i => s"u$i").mkString(" "), "en", "src0"),
       (7L, (1 to 30).map(i => s"v$i").mkString(" "), "en", "src0"))
-    val dir = Files.createTempDirectory("incprop-").toString
+    val dir = TestSpark.jvmTempDir("incprop-")
     docs.map { case (id, t, l, src) => (id, t, l, src, t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -224,14 +221,13 @@ class PropertySpec extends AnyFunSuite {
     // can't be planted), so the law this pins is the digest layer being
     // TRANSPARENT: outputs bit-equal to plain groupBy(text) on the same
     // fixture, computed here inline as the reference.
-    import java.nio.file.Files
     import spark.implicits._
     val dupA = (1 to 40).map(i => s"a$i").mkString(" ")
     val dupB = (1 to 25).map(i => s"b$i").mkString(" ")
     val docs = Seq(
       (5L, dupA), (9L, dupA), (2L, dupA), (11L, dupB), (4L, dupB),
       (7L, "solo one"), (3L, "solo two"))
-    val dir = Files.createTempDirectory("dedupexact-").toString
+    val dir = TestSpark.jvmTempDir("dedupexact-")
     docs.map { case (id, t) => (id, t, "en", "src0", t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -254,7 +250,6 @@ class PropertySpec extends AnyFunSuite {
     // partitioning the released corpus exactly (counts/tokens add up,
     // content fingerprints XOR to s5's — which holds only if every s5 doc
     // lands in EXACTLY one split).
-    import java.nio.file.Files
     import spark.implicits._
     def words(tag: String, n: Int): String =
       (1 to n).map(i => s"$tag$i").mkString(" ")
@@ -272,7 +267,7 @@ class PropertySpec extends AnyFunSuite {
       ) ++ // clean survivors: disjoint vocab, two imbalanced langs
         (9L to 16L).map(i => (i, words(s"d${i}w", 40), "en")) ++
         (17L to 20L).map(i => (i, words(s"d${i}w", 30), "xx"))
-    val dir = Files.createTempDirectory("llmpipe-").toString
+    val dir = TestSpark.jvmTempDir("llmpipe-")
     docs.map { case (id, t, l) => (id, t, l, "src0", t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -635,8 +630,7 @@ class PropertySpec extends AnyFunSuite {
   /** Write a planted documents corpus and return its dir (the
     * q_dedup_incremental pattern, shared by the round-4 planted-law tests). */
   private def plantDocs(rows: Seq[(Long, String, String, String)]): String = {
-    import java.nio.file.Files
-    val dir = Files.createTempDirectory("plantprop-").toString
+    val dir = TestSpark.jvmTempDir("plantprop-")
     rows.map { case (id, t, l, src) => (id, t, l, src, t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -730,8 +724,7 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("q_events_attribution: purchase takes the latest preceding click, else NULL") {
-    import java.nio.file.Files
-    val dir = Files.createTempDirectory("attrprop-").toString
+    val dir = TestSpark.jvmTempDir("attrprop-")
     // (event_id, ts_ns, user_id, type): user 1 has click→view→click→purchase
     // (latest click 5 wins); user 2 purchases with no prior click (NULL).
     Seq((1L, 100000L, 1L, "click", 1.0, "{}"),
@@ -769,8 +762,7 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("q_dq_checks: planted violations are counted exactly, clean checks pass") {
-    import java.nio.file.Files
-    val dir = Files.createTempDirectory("dqprop-").toString
+    val dir = TestSpark.jvmTempDir("dqprop-")
     val ts = java.sql.Timestamp.valueOf("1995-06-01 00:00:00")
     // customer 9 missing (orphan custkey), one NULL acctbal; orderkey 70
     // duplicated (PK); status 'X' out of domain; qty 99 out of range;
@@ -813,8 +805,7 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("q_embed_pca: a planted dominant axis is recovered; extremes rank by |projection|") {
-    import java.nio.file.Files
-    val dir = Files.createTempDirectory("pcaprop-").toString
+    val dir = TestSpark.jvmTempDir("pcaprop-")
     // variance lives almost entirely in dim 7: vectors are ±spread along it
     // plus per-dim noise elsewhere; the two largest-|spread| vectors must
     // top the extreme list, symmetric pairs adjacent
@@ -838,8 +829,7 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("q_events_pattern: planted journeys count the behavioral regex exactly") {
-    import java.nio.file.Files
-    val dir = Files.createTempDirectory("patprop-").toString
+    val dir = TestSpark.jvmTempDir("patprop-")
     // user 1: s c v p           -> 1 match
     // user 2: s e p             -> 0 (error breaks the pattern)
     // user 3: s p s c p         -> 2 (non-overlapping matches)
@@ -905,8 +895,7 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("q_events_ngrams: trigram counts across planted user sequences") {
-    import java.nio.file.Files
-    val dir = Files.createTempDirectory("ngramprop-").toString
+    val dir = TestSpark.jvmTempDir("ngramprop-")
     // user 1: s c v p -> s>c>v, c>v>p ; user 2: s c v -> s>c>v
     val ev = Seq(
       (1L, 1L, "signup"), (2L, 1L, "click"), (3L, 1L, "view"), (4L, 1L, "purchase"),
@@ -921,8 +910,7 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("q_time_anomaly: a planted spike hour tops; constant series degrade to NULL") {
-    import java.nio.file.Files
-    val dir = Files.createTempDirectory("anomprop-").toString
+    val dir = TestSpark.jvmTempDir("anomprop-")
     val h = 3600L * 1000000000L
     // view counts/hour: 1,2,1,2,1,2,1,2,100 -> med 2, MAD 1, spike score 98
     val viewCounts = Seq(1, 2, 1, 2, 1, 2, 1, 2, 100)
@@ -947,8 +935,7 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("q_quantile_hist: hand-computed bucket lower bounds") {
-    import java.nio.file.Files
-    val dir = Files.createTempDirectory("qhistprop-").toString
+    val dir = TestSpark.jvmTempDir("qhistprop-")
     // flag A: prices 10,110,...,910 -> buckets 0..9, one row each; n=10.
     // p50: first cum*100 >= 500 -> cum 5 -> bucket 4 -> 40000 cents.
     // p90: cum 9 -> bucket 8 -> 80000; p99: cum 10 -> bucket 9 -> 90000.
@@ -976,8 +963,7 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("q_retrieval_hybrid: RRF fuses exact integer rank reciprocals") {
-    import java.nio.file.Files
-    val dir = Files.createTempDirectory("hybridprop-").toString
+    val dir = TestSpark.jvmTempDir("hybridprop-")
     // doc 1 repeats doc 0's text (lexical rank 1); docs 2/3 share nothing.
     Seq(
       (0L, "query text about spark engines", "en", "a"),
@@ -1018,8 +1004,7 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("q_events_markov: hand-computed transition probabilities") {
-    import java.nio.file.Files
-    val dir = Files.createTempDirectory("markovprop-").toString
+    val dir = TestSpark.jvmTempDir("markovprop-")
     // user 1: s c s c  -> s>c, c>s, s>c ; user 2: s v -> s>v
     val ev = Seq(
       (1L, 1L, "signup"), (2L, 1L, "click"), (3L, 1L, "signup"), (4L, 1L, "click"),
@@ -1066,8 +1051,7 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("q_time_ewma: dyadic half-life smoothing is exact") {
-    import java.nio.file.Files
-    val dir = Files.createTempDirectory("ewmaprop-").toString
+    val dir = TestSpark.jvmTempDir("ewmaprop-")
     val h = 3600L * 1000000000L
     // view counts/hour: 4, 8, 2 -> ewma 2.0, 8/2+4/4=5.0, 2/2+8/4+4/8=3.5
     val ev = Seq((0, 4), (1, 8), (2, 2)).flatMap { case (hour, n) =>
@@ -1085,8 +1069,7 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("q_events_assoc: hand-computed session-basket support/confidence/lift") {
-    import java.nio.file.Files
-    val dir = Files.createTempDirectory("assocprop-").toString
+    val dir = TestSpark.jvmTempDir("assocprop-")
     val b = 1000000000L // 1s in ns; sessions split on >30min gaps
     // user 1 session A: signup+click+view; session B (3h later):
     // click+purchase; user 2 session C: signup+click  -> S = 3 sessions
@@ -1115,8 +1098,7 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("q_embed_norm_stats: centi-buckets catch zero, collapsed, and unnormalized vectors") {
-    import java.nio.file.Files
-    val dir = Files.createTempDirectory("normprop-").toString
+    val dir = TestSpark.jvmTempDir("normprop-")
     Seq(
       (0L, Seq(1f, 0f), 0),     // norm2 1.0   -> bucket 100 (healthy)
       (1L, Seq(0.5f, 0.5f), 0), // norm2 0.5   -> bucket 50 (collapsed)
@@ -1131,8 +1113,7 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("q_text_perplexity: dyadic-log2 surprisal matches a big-integer replay") {
-    import java.nio.file.Files
-    val dir = Files.createTempDirectory("pplprop-").toString
+    val dir = TestSpark.jvmTempDir("pplprop-")
     // bigrams: (a,b)x3, (b,a)x1, (b,c)x1; V={a,b,c,x}=4; c_a=3, c_b=2
     Seq((0L, "a b a b", "en", "s0", 7L), (1L, "a b c", "en", "s0", 5L),
       (2L, "x", "en", "s0", 1L))
@@ -1164,8 +1145,7 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("q_tokenize_bpe: five merges on a hand-traced corpus, greedy replace law") {
-    import java.nio.file.Files
-    val dir = Files.createTempDirectory("bpeprop-").toString
+    val dir = TestSpark.jvmTempDir("bpeprop-")
     // wf: aaab:2, ab:1, cde:2, fg:1. Merge trace: (a,a)w4 -> "#aa #a #b "
     // (greedy: ONE merge in aaab, third a unpaired), (a,b)w3, (aa,ab)w2
     // (tie with (c,d)/(d,e) broken on a: "aa" < "c"), (c,d)w2, (cd,e)w2
@@ -1182,8 +1162,7 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("q_join_fuzzy: blocking excludes cross-type pairs, Levenshtein verifies within") {
-    import java.nio.file.Files
-    val dir = Files.createTempDirectory("fuzzprop-").toString
+    val dir = TestSpark.jvmTempDir("fuzzprop-")
     Seq("red bolt", "rod bolt", "blue bolt", "red gear").zipWithIndex
       .map { case (n, i) => (i.toLong, n) }.toDF("p_partkey", "p_name")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/part.parquet")
@@ -1307,9 +1286,8 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("RANGE frame: exactly-30-days-ago included; same-date PEERS summed (DuckDB-replayed)") {
-    import java.nio.file.Files
     import java.sql.Timestamp
-    val dir = Files.createTempDirectory("rangeprop-").toString
+    val dir = TestSpark.jvmTempDir("rangeprop-")
     // order 2 sits EXACTLY 30 days after order 1 (inclusive bound keeps
     // it: 110); orders 3+4 share a date, so RANGE ... CURRENT ROW sums
     // BOTH peers for each (1011 = 1 + 1000 + order 2's 10; order 1 is 31
@@ -1347,8 +1325,7 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("q_join_asof: a click at EXACTLY the purchase timestamp attaches (<= semantics)") {
-    import java.nio.file.Files
-    val dir = Files.createTempDirectory("asofprop-").toString
+    val dir = TestSpark.jvmTempDir("asofprop-")
     val t = 1704067200L * 1000000000L
     // user 1: click and purchase share a timestamp -> <= includes it;
     // user 2: the only click is 1µs AFTER the purchase -> organic/NULL.
@@ -1383,8 +1360,7 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("q_stream_sessions: exactly-30:00 gaps merge (abutting windows); 30:00+1µs splits") {
-    import java.nio.file.Files
-    val dir = Files.createTempDirectory("streamsessprop-").toString
+    val dir = TestSpark.jvmTempDir("streamsessprop-")
     val t0 = 1704067200L * 1000000000L // nanos
     val m = 60L * 1000000000L
     // user 1: e2 exactly 30:00 after e1 MERGES (session_window joins
@@ -1430,8 +1406,7 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("q_join_spatial: grid-blocked pairs equal the brute-force radius join") {
-    import java.nio.file.Files
-    val dir = Files.createTempDirectory("spatialprop-").toString
+    val dir = TestSpark.jvmTempDir("spatialprop-")
     // cross-cell neighbors (p1-p6 diagonal, p2-p3 across x), a same-cell
     // pair beyond r (p2-p4: same cell is NOT within-radius proof), and an
     // isolated far point — the grid must reproduce brute force exactly
@@ -1456,8 +1431,7 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("q_entity_resolution: lev-4 chain resolves transitively; singletons absent") {
-    import java.nio.file.Files
-    val dir = Files.createTempDirectory("erprop-").toString
+    val dir = TestSpark.jvmTempDir("erprop-")
     // anvil chain: adjacent names are lev 2 apart, the endpoints lev 6 —
     // beyond the pairwise bound, same entity only via transitivity. The
     // brush pair is a second entity; the bolt name matches nothing.
@@ -1502,8 +1476,7 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("q_join_not_in: one NULL in the subquery empties the result (3VL)") {
-    import java.nio.file.Files
-    val dir = Files.createTempDirectory("notinprop-").toString
+    val dir = TestSpark.jvmTempDir("notinprop-")
     val ts = java.sql.Timestamp.valueOf("1995-06-01 00:00:00")
     Seq((1L, "a part", "Brand#1", "T", 1, 1.0), (2L, "b part", "Brand#1", "T", 1, 1.0))
       .toDF("p_partkey", "p_name", "p_brand", "p_type", "p_size", "p_retailprice")
@@ -1550,8 +1523,7 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("q_time_cusum: a symmetric series flags EVERY day attaining max |cusum|") {
-    import java.nio.file.Files
-    val dir = Files.createTempDirectory("cusumprop-").toString
+    val dir = TestSpark.jvmTempDir("cusumprop-")
     val day0 = 19723L
     // counts (1, 3, 1): scaled terms 3c−5 are (−2, +4, −2), cusum
     // (−2, 2, 0) — |max| = 2 is attained TWICE; the contract says both
@@ -1569,8 +1541,7 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("q_events_dau_mau: trailing window unions users; window edge at 28 days") {
-    import java.nio.file.Files
-    val dir = Files.createTempDirectory("dauprop-").toString
+    val dir = TestSpark.jvmTempDir("dauprop-")
     val day0 = 19723L
     // day0 users {1,2}; day1 users {2,3}; day0+28 user {9}. The trailing
     // window of day0+28 is [day0+1, day0+28]: day1's users {2,3} are IN
@@ -1623,8 +1594,7 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("q_time_seasonal: planted 3-week series backtests the lag-7 forecast") {
-    import java.nio.file.Files
-    val dir = Files.createTempDirectory("snaive-").toString
+    val dir = TestSpark.jvmTempDir("snaive-")
     val day0 = 19723L // 2024-01-01
     // day d carries (d - day0 + 1) events for 21 consecutive days, except
     // day0+10 is SKIPPED — the calendar join must forecast day0+17 from
@@ -1688,8 +1658,7 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("q_time_acf: planted alternating series gives r = -1, +1, -1") {
-    import java.nio.file.Files
-    val dir = Files.createTempDirectory("acf-").toString
+    val dir = TestSpark.jvmTempDir("acf-")
     val h0 = 1704067200L // epoch seconds, hour-aligned
     // 48 hours alternating 10/20 events: perfect period 2 -> lag-2
     // correlation exactly +1, odd lags exactly -1 (the series is its own
@@ -1799,8 +1768,7 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("q_funnel_windowed: the +24h boundary converts; +24h+1ns drops (R11)") {
-    import java.nio.file.Files
-    val dir = Files.createTempDirectory("fwin-").toString
+    val dir = TestSpark.jvmTempDir("fwin-")
     val t0 = 1704067200L * 1000000000L
     val D = 86400L * 1000000000L
     // user 1 converts three stages, each EXACTLY at the +24h edge (<= is
@@ -1835,8 +1803,7 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("q_time_theilsen: one planted outlier day cannot move the median slope") {
-    import java.nio.file.Files
-    val dir = Files.createTempDirectory("theil-").toString
+    val dir = TestSpark.jvmTempDir("theil-")
     val day0 = 19723L
     // 15 days on a perfect +2/day ramp, except day 7 spikes to 500 events:
     // 91 of 105 pairwise slopes are exactly 2.0, so the Theil-Sen median
@@ -1857,8 +1824,7 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("q_time_rolling_median: a planted spike day cannot move the median") {
-    import java.nio.file.Files
-    val dir = Files.createTempDirectory("rmed-").toString
+    val dir = TestSpark.jvmTempDir("rmed-")
     val day0 = 19723L
     // constant-10 series with day1 = 20 (pins the lower-median even-window
     // convention: sorted [10,20] picks position (2+1) div 2 = 1 -> 10) and
@@ -1992,8 +1958,7 @@ class PropertySpec extends AnyFunSuite {
     // become orphans on exactly one distinct key; every other edge stays
     // clean (the fixture and the driver corpora are referentially intact,
     // so this probe is the only coverage of the orphan branch)
-    import java.nio.file.Files
-    val dir = Files.createTempDirectory("refprop-").toString
+    val dir = TestSpark.jvmTempDir("refprop-")
     for (t <- Seq("region", "nation", "customer", "part", "orders",
         "lineitem", "events", "documents", "embeddings"))
       spark.read.parquet(s"${MiniData.dir}/$t.parquet")
@@ -2017,11 +1982,10 @@ class PropertySpec extends AnyFunSuite {
     // 00:05 while it is still open. Day 1 peak must be carry(1) +
     // in-day(1) = 2; day 0's peak sits at the session start; a
     // carry-level peak reports NULL peak_at_us by contract.
-    import java.nio.file.Files
     val t1 = 1704153000L * 1000000000L // 2024-01-01 23:50:00 UTC
     val t2 = 1704154200L * 1000000000L // 2024-01-02 00:10:00
     val t3 = 1704153900L * 1000000000L // 2024-01-02 00:05:00
-    val dir = Files.createTempDirectory("concprop-").toString
+    val dir = TestSpark.jvmTempDir("concprop-")
     Seq(
       (1L, t1, 1L, "click", 0.0, """{"k": 1}"""),
       (2L, t2, 1L, "click", 0.0, """{"k": 2}"""),
@@ -2038,8 +2002,7 @@ class PropertySpec extends AnyFunSuite {
   test("q_dq_sequence: planted holes surface as islands, missing count, first gap") {
     // ids {1,2,3, 7,8, 10}: three islands, four missing (4,5,6,9), first
     // gap starts at 4; a duplicated id (3 twice) must not double-count
-    import java.nio.file.Files
-    val dir = Files.createTempDirectory("seqprop-").toString
+    val dir = TestSpark.jvmTempDir("seqprop-")
     Seq(1L, 2L, 3L, 3L, 7L, 8L, 10L).zipWithIndex
       .map { case (id, i) =>
         (id, i.toLong, "O", 1.0, new java.sql.Timestamp(0L), "1-URGENT")
@@ -2055,8 +2018,7 @@ class PropertySpec extends AnyFunSuite {
   test("q_stats_mannwhitney: an all-tied pair reports U = n1*n2/2 and NULL z") {
     // statuses A {10.00, 10.00} vs B {10.00}: every observation ties, the
     // variance term is exactly zero, and U collapses to its null-mean
-    import java.nio.file.Files
-    val dir = Files.createTempDirectory("mwprop-").toString
+    val dir = TestSpark.jvmTempDir("mwprop-")
     Seq((1L, 1L, "A", 10.00), (2L, 2L, "A", 10.00), (3L, 3L, "B", 10.00))
       .map { case (ok, ck, st, p) =>
         (ok, ck, st, p, new java.sql.Timestamp(0L), "1-URGENT")
@@ -2070,8 +2032,7 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("q_time_holt: Brown recurrence replay equals the closed convolution form") {
-    import java.nio.file.Files
-    val dir = Files.createTempDirectory("holtprop-").toString
+    val dir = TestSpark.jvmTempDir("holtprop-")
     // a 30-day trending series with a level shift: y = 10 + 2t (+100 from
     // day 20) — long enough that the 24-lag truncation is exercised
     val ns = 86400L * 1000000000L

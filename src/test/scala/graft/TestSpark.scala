@@ -5,22 +5,13 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Shared test SparkSession (one per forked test JVM) configured exactly
-  * like Verify/Bench: UTC, small shuffle partitions, no UI.
+/** Shared test SparkSession (one per forked test JVM), started by
+  * [[Session.start]] like every main, on 4 cores, with its warehouse in a
+  * temp dir.
   */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession
-      .builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", jvmTempDir("graft-warehouse-"))
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession =
+    Session.start(4, "spark.sql.warehouse.dir" -> jvmTempDir("graft-warehouse-"))
 
   /** A fresh directory under `java.io.tmpdir`, deleted with everything in
     * it when the test JVM exits (`File.deleteOnExit` skips a non-empty

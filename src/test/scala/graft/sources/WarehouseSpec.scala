@@ -63,7 +63,7 @@ class WarehouseSpec extends AnyFunSuite {
   }
 
   test("partitioned write prunes non-matching partitions at scan") {
-    val dir = Files.createTempDirectory("wh-part-").toFile.getAbsolutePath
+    val dir = TestSpark.jvmTempDir("wh-part-")
     val df = Seq(
       ("2024-01-01", 1L, 10.0), ("2024-01-01", 2L, 20.0),
       ("2024-01-02", 3L, 30.0), ("2024-01-03", 4L, 40.0))
@@ -95,7 +95,7 @@ class WarehouseSpec extends AnyFunSuite {
 
   test("JSONL roundtrip under a pinned schema; malformed lines quarantined") {
     import org.apache.spark.sql.types._
-    val dir = java.nio.file.Files.createTempDirectory("wh-jsonl-").toString + "/docs"
+    val dir = TestSpark.jvmTempDir("wh-jsonl-") + "/docs"
     val df = Seq((1L, "hello world", "en"), (2L, "hola", "es"))
       .toDF("doc_id", "text", "lang")
     Warehouse.writeJsonl(df, dir)
@@ -109,7 +109,7 @@ class WarehouseSpec extends AnyFunSuite {
 
     // corrupt line lands in _bad with the other columns null — not dropped,
     // not fatal
-    val badFile = java.nio.file.Files.createTempDirectory("wh-jsonl-bad-").toString + "/docs"
+    val badFile = TestSpark.jvmTempDir("wh-jsonl-bad-") + "/docs"
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(badFile))
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(badFile, "part-0.json"),

@@ -83,4 +83,15 @@ class StreamConcurrencySpec extends AnyFunSuite {
       Caches.release(spark) // the replay sources' scratch roots
     }
   }
+
+  test("a stream session carries its parent's engine confs, whatever they are") {
+    val parent = spark.newSession()
+    val changed = Seq(
+      "spark.sql.session.timeZone" -> "America/Los_Angeles",
+      "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "false",
+      "spark.sql.legacy.parquet.nanosAsLong" -> "false")
+    changed.foreach { case (k, v) => parent.conf.set(k, v) }
+    val ss = StreamQueries.stateSession(parent, 3)
+    for ((k, v) <- changed) assert(ss.conf.get(k) === v, k)
+  }
 }
