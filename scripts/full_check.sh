@@ -2,7 +2,8 @@
 # One-shot local gate mirroring everything the driver checks:
 #   scalatest suite, t2 DuckDB-oracle correctness at sf0.001 + sf0.01
 #   with no temp dir left behind, t1 entry smoke, the connector demo
-#   (all six ETL tables non-empty), the profiler smoke, and the sf0.1
+#   (all six ETL tables non-empty through SpotifyPipeline.run and through
+#   runConcurrent), the profiler smoke, and the sf0.1
 #   steady-state bench.
 # Usage: scripts/full_check.sh [testdata-root]   (default /root/testdata)
 set -euo pipefail
@@ -44,13 +45,17 @@ fi
 sbt -batch "runMain graft.tools.EntrySmoke" | grep ENTRY_ROWS
 
 # Connector smoke: the ETL DAG over an in-memory stub must load every one of
-# its six tables, printed as "== <table> (N rows)", with N > 0.
+# its six tables, printed as "== <table> (N rows)" by SpotifyPipeline.run
+# and as "== runConcurrent <table> (N rows)" by the concurrent schedule,
+# with N > 0 on both paths.
 demo="$(sbt -batch "runMain graft.tools.PipelineDemo")"
 for t in playlists playlists_tracks saved_tracks recent_tracks followed_artists audio_features; do
-  if ! grep -Eq "== $t \([1-9][0-9]* rows\)" <<<"$demo"; then
-    echo "PipelineDemo: no '== $t (N rows)' line with N > 0"
-    exit 1
-  fi
+  for path in "" "runConcurrent "; do
+    if ! grep -Eq "== $path$t \([1-9][0-9]* rows\)" <<<"$demo"; then
+      echo "PipelineDemo: no '== $path$t (N rows)' line with N > 0"
+      exit 1
+    fi
+  done
 done
 
 # Profiler smoke: ProfileQ, the one profiler, must print a "[pq] jobs="

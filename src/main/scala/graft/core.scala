@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, NativeColumn, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Cast, Expression}
+import org.apache.spark.sql.classic.ClassicConversions.castToImpl
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -95,6 +96,20 @@ object Caches {
     s
   }
 
+  /** This thread's open scope, if any. Hand it to [[within]] on a worker
+    * thread, so the worker's persists and temp dirs land where they would
+    * have landed on this thread. */
+  def openScope(): Option[Scope] = Option(current.get())
+
+  /** Run `body` with `scope` (or none) as this thread's open scope, then
+    * restore the thread's own. */
+  def within[A](scope: Option[Scope])(body: => A): A = {
+    val own = current.get()
+    scope.fold(current.remove())(current.set)
+    try body
+    finally if (own != null) current.set(own) else current.remove()
+  }
+
   /** Track `action` in the current thread's open [[Scope]] if one exists,
     * else in `spark`'s registry. */
   private def onRelease(spark: SparkSession, action: () => Unit): Unit = {
@@ -132,6 +147,17 @@ object Caches {
     onRelease(df.sparkSession, () => df.unpersist(blocking = false))
     df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
   }
+
+  /** Build the cache of `df`, persisted by [[persist]], now: one job whose
+    * tasks store their partitions' batches and read nothing back. A
+    * Dataset action over the cache would add a stage that reads the
+    * batches — and under AQE, a cached plan with an exchange is built by a
+    * job of its own, then read by the action's. */
+  def fill(df: DataFrame): Unit =
+    castToImpl(df.sparkSession).sharedState.cacheManager.lookupCachedData(castToImpl(df))
+      .getOrElse(sys.error("Caches.fill: the frame is not persisted"))
+      .cachedRepresentation.cacheBuilder.cachedColumnBuffers
+      .foreachPartition(_ => ())
 
   /** A fresh directory under `java.io.tmpdir`, deleted with everything in
     * it when the current [[Scope]] — else `spark`'s registry — is released.

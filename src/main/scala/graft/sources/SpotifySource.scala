@@ -56,22 +56,25 @@ final class SpotifySource(
     * this pattern.
     *
     * With `followCursor = false` the scan fetches the first page only (the
-    * reference reads one page of recent tracks and followed artists). */
+    * reference reads one page of recent tracks and followed artists).
+    *
+    * The scan is driven by a one-row, one-partition `range`, which Spark
+    * knows to be a single partition: it runs in the stage that reads it,
+    * with no exchange before the first request, and a global sort or
+    * aggregate above it needs no exchange either (which would paginate
+    * twice: once to sample, once to shuffle). */
   private def pagesDF(spark: SparkSession, firstUrl: String,
       followCursor: Boolean = true): DataFrame = {
     import spark.implicits._
     val headers = authHeaders
     val c = client
-    spark.createDataset(Seq(firstUrl))
-      .repartition(1)
-      .mapPartitions { firsts =>
-        firsts.flatMap { first =>
-          Iterator.unfold(Option(first)) {
-            case Some(url) =>
-              val body = checkedBody(c.get(url, headers), url)
-              Some((body, if (followCursor) nextCursor(body) else None))
-            case None => None
-          }
+    spark.range(0, 1, 1, numPartitions = 1)
+      .mapPartitions { _ =>
+        Iterator.unfold(Option(firstUrl)) {
+          case Some(url) =>
+            val body = checkedBody(c.get(url, headers), url)
+            Some((body, if (followCursor) nextCursor(body) else None))
+          case None => None
         }
       }
       .toDF("page")

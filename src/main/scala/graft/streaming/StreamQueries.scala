@@ -41,10 +41,11 @@ import org.apache.spark.sql.types.{LongType, TimestampType}
   * and landed halves), `ckpt`, `sink` and landing staging — lives under one
   * per-run root from [[graft.Caches.tempDir]], deleted when `GQ.apply` ends
   * or on `Caches.release` of the caller's session (the final frame of a
-  * restart query reads `sink` lazily, so it must outlive `run`). The root
-  * exists only when the protocol needs one: for a restart query, or when
-  * `events.parquet` is a single file (the file source lists a directory);
-  * a directory input is read in place.
+  * restart query reads `sink` lazily, so it must outlive `run`). A replay
+  * query's root holds its memory sink's checkpoint, and `src` only when
+  * `events.parquet` is a single file (the file source lists a directory;
+  * a directory input is read in place); it is deleted as soon as the
+  * stream ends, since the result lives in the memory sink.
   *
   * Determinism: the aggregations are the SAME exact decimal math as their
   * batch twins (R2), window starts are exact epoch seconds, and every
@@ -140,14 +141,16 @@ object StreamQueries {
   }
 
   /** `d`'s events as a bounded stream on the private session `ss`: a
-    * directory is read in place, a single file through a link in a fresh
-    * scratch root tracked for the caller's session `s`. */
-  private[streaming] def replay(s: SparkSession, ss: SparkSession, d: String): DataFrame = {
+    * directory is read in place, a single file through a link under `root`
+    * (by default a fresh scratch root tracked for the caller's session
+    * `s`). */
+  private[streaming] def replay(s: SparkSession, ss: SparkSession, d: String,
+      root: Option[Path] = None): DataFrame = {
     val events = Paths.get(d, "events.parquet")
     val batch = ss.read.parquet(events.toString)
     stream(ss, batch,
       if (Files.isDirectory(events)) events
-      else link(events, Caches.tempDir(s, "graft_stream_").resolve("src")))
+      else link(events, root.getOrElse(Caches.tempDir(s, "graft_stream_")).resolve("src")))
   }
 
   /** Run `q` over `d`'s events to completion. Returns the result frame and,
@@ -159,12 +162,20 @@ object StreamQueries {
     val ss = stateSession(s, 4)
     q.restart match {
       case None =>
-        val out = q.op(replay(s, ss, d)).select(q.out: _*)
-        val aggregates = out.queryExecution.analyzed.exists(_.isInstanceOf[Aggregate])
-        out.writeStream.format("memory").queryName("graft_stream")
-          .outputMode(if (aggregates) "complete" else "append")
-          .trigger(Trigger.AvailableNow())
-          .start().awaitTermination()
+        // the checkpoint goes under the run's root too: with no location,
+        // Spark makes a temp one outside it, left behind when the run fails.
+        // The root is needed only while the stream runs (the result is in
+        // the memory sink), so it is deleted as soon as the stream ends.
+        val root = Caches.tempDir(s, "graft_stream_")
+        try {
+          val out = q.op(replay(s, ss, d, Some(root))).select(q.out: _*)
+          val aggregates = out.queryExecution.analyzed.exists(_.isInstanceOf[Aggregate])
+          out.writeStream.format("memory").queryName("graft_stream")
+            .option("checkpointLocation", root.resolve("ckpt").toString)
+            .outputMode(if (aggregates) "complete" else "append")
+            .trigger(Trigger.AvailableNow())
+            .start().awaitTermination()
+        } finally Caches.deleteTree(root)
         (ss.table("graft_stream").orderBy(q.order.map(col): _*), 0L, 0L)
       case Some(landing) => restart(s, ss, d, q, landing)
     }

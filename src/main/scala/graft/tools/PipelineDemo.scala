@@ -2,14 +2,19 @@ package graft.tools
 
 import java.sql.Timestamp
 
-import graft.Session
+import scala.jdk.CollectionConverters._
+
+import graft.{Caches, Session}
 import graft.sources._
+import org.apache.spark.sql.Row
 
 /** Usage example + smoke drive for the connector layer: wires the reference
   * ETL DAG (SpotifyPipeline) against an in-memory HTTP stub and prints the
-  * six staged tables. This is what a real deployment looks like with the
-  * stub swapped for a java.net.http-backed client and
-  * `JdbcReplaceSink.write` calls at the end.
+  * six staged tables, then loads them again through `runConcurrent` into
+  * an in-memory collector and prints each table's row count. This is what
+  * a real deployment looks like with the stub swapped for a
+  * java.net.http-backed client and `JdbcReplaceSink.write` as the
+  * `runConcurrent` writer.
   */
 object PipelineDemo {
   private val Base = "https://api.spotify.com/v1"
@@ -51,11 +56,21 @@ object PipelineDemo {
     val spark = Session.start(Session.defaultCores)
     val source = new SpotifySource(
       new RateLimitedClient(StubClient, minIntervalMs = 0), Base)
-    val tables = new SpotifyPipeline(source)
-      .run(spark, Timestamp.valueOf("2024-03-01 00:00:00"))
+    val pipeline = new SpotifyPipeline(source)
+    val ingest = Timestamp.valueOf("2024-03-01 00:00:00")
+    val tables = pipeline.run(spark, ingest)
     tables.toSeq.sortBy(_._1).foreach { case (name, df) =>
       println(s"== $name (${df.count()} rows)")
       df.show(5, truncate = false)
+    }
+    Caches.release(spark)
+
+    // the concurrent schedule, each table's write collected in memory
+    val collected = new java.util.concurrent.ConcurrentHashMap[String, Array[Row]]()
+    pipeline.runConcurrent(spark, ingest, (name, df) => collected.put(name, df.collect()))
+    Caches.release(spark)
+    collected.asScala.toSeq.sortBy(_._1).foreach { case (name, rows) =>
+      println(s"== runConcurrent $name (${rows.length} rows)")
     }
 
     // the same fan-out endpoint through the DataSourceV2 connector

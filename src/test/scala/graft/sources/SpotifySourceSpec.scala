@@ -11,7 +11,9 @@ import scala.util.Try
 
 import graft.TestSpark
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.classic.ClassicConversions.castToImpl
 import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.scalatest.BeforeAndAfterEach
@@ -103,12 +105,14 @@ class SpotifySourceSpec extends AnyFunSuite with BeforeAndAfterEach {
     if (t == null) Seq.empty else Option(t.getMessage).toSeq ++ messages(t.getCause)
 
   /** `runConcurrent` with a row-counting writer, bounded so that a hung
-    * scheduler fails the test instead of stalling the suite. Returns the
-    * row count of every table written and the run's outcome. */
-  private def loadAll(): (Map[String, Long], Try[Map[String, DataFrame]]) = {
+    * scheduler fails the test instead of stalling the suite. `onWrite`
+    * sees each table's name as its write starts. Returns the row count of
+    * every table written and the run's outcome. */
+  private def loadAll(onWrite: String => Unit = _ => ())
+      : (Map[String, Long], Try[Map[String, DataFrame]]) = {
     val written = new ConcurrentHashMap[String, Long]()
     val run = Future(new SpotifyPipeline(source()).runConcurrent(spark, Ingest,
-      (name, df) => written.put(name, df.count())))(ExecutionContext.global)
+      (name, df) => { onWrite(name); written.put(name, df.count()) }))(ExecutionContext.global)
     val outcome = Await.ready(run, 2.minutes).value.get
     graft.Caches.release(spark)
     (written.asScala.toMap, outcome)
@@ -324,5 +328,64 @@ class SpotifySourceSpec extends AnyFunSuite with BeforeAndAfterEach {
     assert(written2 === AllRows -- Seq("saved_tracks", "audio_features"))
     assert(outcome2.failed.toOption.exists(e => messages(e).exists(_.contains("HTTP 503"))), outcome2)
     assert(!fetched("audio-features"), FakeHttp.requested)
+  }
+
+  test("runConcurrent: a shared extract's first page is fetched before its table is written") {
+    // each extract another table reads is filled by its own job first, so
+    // its dependents can start while its table is still being written
+    val firstPage = Map(
+      "playlists" -> s"$Base/me/playlists",
+      "saved_tracks" -> s"$Base/me/tracks",
+      "playlists_tracks" -> s"$Base/playlists/p1/tracks")
+    val fetchedFirst = new ConcurrentHashMap[String, Boolean]()
+    val (written, outcome) = loadAll(name =>
+      firstPage.get(name).foreach(u => fetchedFirst.put(name, FakeHttp.requested.contains(u))))
+    assert(outcome.isSuccess, outcome)
+    assert(written === AllRows)
+    assert(fetchedFirst.asScala.toMap === firstPage.map { case (t, _) => t -> true })
+  }
+
+  test("runConcurrent: the fan-out starts while the playlists table is being written") {
+    // the playlists write holds until the first playlist's items have been
+    // requested; a fan-out that waits for that write never sends it
+    val fanOutStarted = new CountDownLatch(1)
+    val overlapped = new AtomicBoolean(false)
+    FakeHttp.reset { url =>
+      if (url.startsWith(s"$Base/playlists/")) fanOutStarted.countDown()
+      route(url)
+    }
+    val (written, outcome) = loadAll(name =>
+      if (name == "playlists") overlapped.set(fanOutStarted.await(20, TimeUnit.SECONDS)))
+    assert(outcome.isSuccess, outcome)
+    assert(written === AllRows)
+    assert(overlapped.get, "playlists_tracks waited for the playlists write")
+  }
+
+  test("cursor scan: no shuffle exchange between the source and the pages") {
+    val saved = source().savedTracks(spark)
+    assert(saved.collect().length === 2)
+    val exec = saved.queryExecution.executedPlan
+    assert(!collectPlan(exec).exists(_.isInstanceOf[ShuffleExchangeExec]), exec)
+  }
+
+  test("runConcurrent inside an open Caches scope: the scope owns the three extracts") {
+    // the extracts are persisted on the pipeline's own threads; they must
+    // still land in the caller's scope, not in the session registry
+    def cacheEmpty = castToImpl(spark).sharedState.cacheManager.isEmpty
+    def readsCache(df: DataFrame) =
+      df.select("*").queryExecution.withCachedData.exists(_.isInstanceOf[InMemoryRelation])
+    spark.catalog.clearCache()
+    val scope = graft.Caches.beginScope()
+    val tables =
+      try {
+        val tables = new SpotifyPipeline(source()).runConcurrent(spark, Ingest, (_, df) => df.count())
+        graft.Caches.release(spark)
+        tables
+      } finally scope.close()
+    assert(Seq("playlists", "playlists_tracks", "saved_tracks").forall(t => readsCache(tables(t))),
+      "the session registry's release dropped an extract the scope owns")
+    assert(!readsCache(tables("recent_tracks")) && !readsCache(tables("followed_artists")))
+    scope.release()
+    assert(cacheEmpty, "the scope's release left an extract in the cache")
   }
 }
