@@ -47,15 +47,23 @@ sbt -batch "runMain graft.tools.EntrySmoke" | grep ENTRY_ROWS
 # Connector smoke: the ETL DAG over an in-memory stub must load every one of
 # its six tables, printed as "== <table> (N rows)" by SpotifyPipeline.run
 # and as "== runConcurrent <table> (N rows)" by the concurrent schedule,
-# with N > 0 on both paths.
+# with N > 0 on both paths and the same N on both (a fan-out or lookup lane
+# that dropped a chain's pages would load fewer rows on one path).
 demo="$(sbt -batch "runMain graft.tools.PipelineDemo")"
 for t in playlists playlists_tracks saved_tracks recent_tracks followed_artists audio_features; do
+  counts=()
   for path in "" "runConcurrent "; do
-    if ! grep -Eq "== $path$t \([1-9][0-9]* rows\)" <<<"$demo"; then
+    n="$(sed -nE "s/.*== $path$t \(([1-9][0-9]*) rows\).*/\1/p" <<<"$demo" | head -n1)"
+    if [ -z "$n" ]; then
       echo "PipelineDemo: no '== $path$t (N rows)' line with N > 0"
       exit 1
     fi
+    counts+=("$n")
   done
+  if [ "${counts[0]}" != "${counts[1]}" ]; then
+    echo "PipelineDemo: $t has ${counts[0]} rows through run but ${counts[1]} through runConcurrent"
+    exit 1
+  fi
 done
 
 # Profiler smoke: ProfileQ, the one profiler, must print a "[pq] jobs="

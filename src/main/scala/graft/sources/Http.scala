@@ -6,7 +6,7 @@ package graft.sources
   * this trait; a real deployment drops in a `java.net.http.HttpClient`-backed
   * implementation. Serializable because executor-side fan-out
   * (`SpotifySource.playlistTracks` / `audioFeatures`) ships the client inside
-  * `mapPartitions` closures.
+  * `mapPartitions` closures, and copies it once per lane.
   */
 trait HttpClient extends Serializable {
   def get(url: String, headers: Map[String, String]): HttpResponse
@@ -29,11 +29,12 @@ final case class HttpResponse(
   * 429 retry honoring `Retry-After` — but NOT its bug: the reference
   * constructs its `asyncio.Semaphore(5)` inside the function
   * (spotify-etl.py:48), once per call, so its advertised 5-way cap never
-  * limits anything. Here the pacing state is instance-level, and each Spark
-  * task deserializes its own copy of the client, so pacing holds per task:
-  * per cursor chain or per fan-out/lookup partition, like the reference's
-  * per-call sleep. A request budget for the whole job is
-  * `minIntervalMs = concurrentTasks * globalMinIntervalMs` (SURVEY.md §7.5).
+  * limits anything. Here the pacing state is instance-level, and each
+  * cursor scan's task and each fan-out or lookup lane
+  * (`SpotifySource.inLanes`) deserializes its own copy of the client, so
+  * pacing holds per lane: per cursor chain or per fan-out/lookup lane, like
+  * the reference's per-call sleep. A request budget for the whole job is
+  * `minIntervalMs = concurrentLanes * globalMinIntervalMs` (SURVEY.md §7.5).
   */
 final class RateLimitedClient(
     underlying: HttpClient,

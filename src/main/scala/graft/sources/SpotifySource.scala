@@ -1,7 +1,11 @@
 package graft.sources
 
+import java.util.concurrent.{ArrayBlockingQueue, Executors, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
 import com.fasterxml.jackson.databind.ObjectMapper
 
+import org.apache.spark.{SparkEnv, TaskContext, TaskKilledException}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -18,13 +22,17 @@ import org.apache.spark.sql.functions._
   * recentTracks=S6, followedArtists=S7. Rate limiting/retry (S8) comes from
   * wrapping the injected client in [[RateLimitedClient]].
   *
-  * Scale posture: pagination is inherently sequential per cursor, but
-  * fan-out and lookup are `mapPartitions` over a repartitioned key set —
-  * executor-parallel. Each task deserializes its own copy of the client, so
-  * pacing holds per task: per cursor chain or per fan-out/lookup partition,
-  * like the reference's per-call sleep (SURVEY.md §7.5). No request is made
-  * while the plan is built, and nothing is ever collected back to the
-  * driver.
+  * Scale posture: pagination is inherently sequential per cursor, but the
+  * keyed fetches (fan-out and lookup) run their HTTP chains as concurrent
+  * lanes inside one task ([[SpotifySource.inLanes]]), at most
+  * `fanOutParallelism` at once — the reference's `asyncio.gather` with the
+  * cap its `Semaphore(5)` meant to set. A chain mostly sleeps on pacing and
+  * `Retry-After`, so a lane is a thread, not a Spark task slot. Each lane
+  * keeps its own deserialized copy of the client, as each cursor scan's
+  * task does, so pacing holds per lane: per cursor chain or per fan-out or
+  * lookup lane, like the reference's per-call sleep (SURVEY.md §7.5). No
+  * request is made while the plan is built, and nothing is ever collected
+  * back to the driver.
   */
 final class SpotifySource(
     client: HttpClient,
@@ -94,22 +102,24 @@ final class SpotifySource(
         col("it.tracks.total").as("tracks"))
 
   /** Keyed fan-out (spotify-etl.py:91-111, gathered at :240-243): one
-    * paginated tracks fetch per playlist id, executed on executors via
-    * `mapPartitions` — the reference's asyncio.gather becomes task
-    * parallelism sized by `fanOutParallelism`. Emits (playlist_id, page). */
+    * paginated tracks fetch per playlist id. The id set is coalesced to one
+    * partition (no exchange; the playlists extract is one partition
+    * already), and its task runs one chain per playlist as a lane, at most
+    * `fanOutParallelism` at once. Emits (playlist_id, page). */
   def playlistTracks(spark: SparkSession, playlistIds: Dataset[String]): DataFrame = {
     import spark.implicits._
     val base = baseUrl
     val headers = authHeaders
     val c = client
+    val par = fanOutParallelism
     val pages = playlistIds
-      .repartition(fanOutParallelism)
+      .coalesce(1)
       .mapPartitions { ids =>
-        ids.flatMap { pid =>
+        inLanes(ids, c, par) { (lane, pid) =>
           // per-id cursor loop, inside the executor (SURVEY.md §3.2)
           Iterator.unfold(Option(s"$base/playlists/$pid/tracks")) {
             case Some(url) =>
-              val body = checkedBody(c.get(url, headers), url)
+              val body = checkedBody(lane.get(url, headers), url)
               Some(((pid, body), nextCursor(body)))
             case None => None
           }
@@ -143,24 +153,27 @@ final class SpotifySource(
 
   /** Batched ID lookup (spotify-etl.py:134-173): ≤100 ids per request —
     * semantically a join against a remote key-value source. Each id is
-    * requested once (C2, spotify-etl.py:250): the ids are hash-partitioned
-    * on their column, and the `distinct` aggregate reuses that partitioning,
-    * so dedup and fan-out share one exchange (AQE does not coalesce a
-    * repartition to a given number). `grouped(100)` inside `mapPartitions`
-    * handles the tail batch uniformly (the reference needs a separate
-    * branch for it, spotify-etl.py:157-166). */
+    * requested once (C2, spotify-etl.py:250): one exchange gathers the ids
+    * into one partition, whatever the partitioning of their inputs, and the
+    * `distinct` aggregate dedups them there without another. So the batches
+    * cover the whole deduped list, `ceil(n/100)` lookups as in the
+    * reference (spotify-etl.py:151-166). The task sends its batches as
+    * lanes, at most `fanOutParallelism` at once.
+    * `grouped(100)` handles the tail batch uniformly (the reference needs a
+    * separate branch for it, spotify-etl.py:157-166). */
   def audioFeatures(spark: SparkSession, trackIds: Dataset[String]): DataFrame = {
     import spark.implicits._
     val base = baseUrl
     val headers = authHeaders
     val c = client
+    val par = fanOutParallelism
     val bodies = trackIds
-      .repartition(fanOutParallelism, col(trackIds.columns.head))
+      .repartition(1)
       .distinct()
       .mapPartitions { ids =>
-        ids.grouped(100).map { batch =>
+        inLanes(ids.grouped(100), c, par) { (lane, batch) =>
           val url = s"$base/audio-features?ids=${batch.mkString(",")}"
-          checkedBody(c.get(url, headers), url)
+          Iterator.single(checkedBody(lane.get(url, headers), url))
         }
       }
       .toDF("batch")
@@ -214,6 +227,78 @@ object SpotifySource {
     if (r.status < 200 || r.status >= 300)
       sys.error(s"spotify connector: HTTP ${r.status} for $url: ${r.body.take(200)}")
     r.body
+  }
+
+  /** Name prefix of the lane threads [[inLanes]] starts. */
+  private[sources] val LanePrefix = "spotify-lane-"
+  private val laneIds = new AtomicInteger
+
+  /** Runs `chain` once per key as concurrent lanes inside the calling task,
+    * at most `par` at once, and streams what the chains emit as it arrives.
+    * Keys are pulled on the task thread, one as a lane frees up. Each lane
+    * is a thread with its own deserialized copy of `client`, so a
+    * [[RateLimitedClient]] paces each lane's requests as it would a task's.
+    * Items reach the task through a hand-off of `par` slots, so a lane
+    * waits for the task rather than buffer a whole chain. A chain's failure
+    * fails the task with its exception. When the task ends — exhausted,
+    * failed, killed, or cut short by a LIMIT — its lanes are interrupted
+    * and awaited. Must run inside a Spark task. */
+  private[sources] def inLanes[K, O](keys: Iterator[K], client: HttpClient, par: Int)(
+      chain: (HttpClient, K) => Iterator[O]): Iterator[O] = new Iterator[O] {
+    private val ctx = TaskContext.get()
+    private val ser = SparkEnv.get.closureSerializer.newInstance()
+    private val bytes = ser.serialize(client)
+    private val pool = Executors.newFixedThreadPool(par, { r: Runnable =>
+      val t = new Thread(r, LanePrefix + laneIds.incrementAndGet())
+      t.setDaemon(true)
+      t
+    })
+    // What a lane hands the task thread, to run there: yield an item, or
+    // end its chain (freeing its client) or rethrow its chain's failure.
+    private val out = new ArrayBlockingQueue[() => Option[O]](par)
+    private val free = new java.util.ArrayDeque[HttpClient]() // clients of idle lanes
+    private var running = 0
+    private var head: Option[O] = None
+    @volatile private var stopped = false
+    ctx.addTaskCompletionListener[Unit](_ => stop())
+
+    private def start(key: K): Unit = {
+      val lane = Option(free.poll()).getOrElse(ser.deserialize[HttpClient](bytes.duplicate()))
+      running += 1
+      pool.execute { () =>
+        val end: () => Option[O] =
+          try {
+            chain(lane, key).foreach(o => out.put(() => Some(o)))
+            () => { free.push(lane); running -= 1; None }
+          } catch { case e: Throwable => () => throw e }
+        // once stopped, nothing reads `out`: an interrupted put just ends the lane
+        if (!stopped) try out.put(end) catch { case _: InterruptedException => () }
+      }
+    }
+
+    private def stop(): Unit = if (!stopped) {
+      stopped = true
+      pool.shutdownNow()
+      pool.awaitTermination(10, TimeUnit.SECONDS)
+    }
+
+    override def hasNext: Boolean = {
+      while (head.isEmpty && (running > 0 || keys.hasNext)) {
+        while (running < par && keys.hasNext) start(keys.next())
+        val msg = out.poll(100, TimeUnit.MILLISECONDS)
+        if (msg != null) head = msg()
+        if (ctx.isInterrupted()) throw new TaskKilledException
+      }
+      if (head.isEmpty) stop()
+      head.isDefined
+    }
+
+    override def next(): O = {
+      if (!hasNext) throw new NoSuchElementException("no more lane output")
+      val o = head.get
+      head = None
+      o
+    }
   }
 
   /** Cursor extraction for the v2 connector subpackage. */

@@ -2,7 +2,7 @@ package graft.sources
 
 import java.sql.Timestamp
 import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicBoolean
+import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
 
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration._
@@ -28,6 +28,8 @@ import org.scalatest.funsuite.AnyFunSuite
 object FakeHttp {
   // static so executor-side lookups share state with the driver (local mode)
   val requests = new ConcurrentLinkedQueue[String]()
+  /** Names of the threads a test's recording sleeper ran on. */
+  val sleeps = new ConcurrentLinkedQueue[String]()
   @volatile var routes: String => HttpResponse = _ => HttpResponse(404, "{}")
 
   def reset(r: String => HttpResponse): Unit = { requests.clear(); routes = r }
@@ -121,6 +123,34 @@ class SpotifySourceSpec extends AnyFunSuite with BeforeAndAfterEach {
   private val AllRows = Map(
     "playlists" -> 2L, "playlists_tracks" -> 3L, "saved_tracks" -> 2L,
     "recent_tracks" -> 1L, "followed_artists" -> 2L, "audio_features" -> 4L)
+
+  /** One page with one track of playlist `pid`, its cursor at `next`. */
+  private def tracksPage(pid: String, next: Option[String]): HttpResponse = {
+    val cursor = next.fold("null")(u => "\"" + u + "\"")
+    ok(s"""{"items": [{"track": ${track(s"t-$pid", "S")}}], "next": $cursor}""")
+  }
+
+  /** `pages` pages of one track each for every playlist `q1..qn`, each
+    * request passed through `hook` first. */
+  private def fanOutRoute(pages: Int, hook: String => Unit = _ => ())(url: String)
+      : HttpResponse = {
+    hook(url)
+    val Tracks = s"$Base/playlists/(q[0-9]+)/tracks(?:\\?offset=([0-9]+))?".r
+    url match {
+      case Tracks(pid, off) =>
+        val k = Option(off).map(_.toInt).getOrElse(0)
+        tracksPage(pid, Option(k + 1).filter(_ < pages).map(n => s"$Base/playlists/$pid/tracks?offset=$n"))
+      case _ => route(url)
+    }
+  }
+
+  private def playlistIds(n: Int) = {
+    import spark.implicits._
+    (1 to n).map(i => s"q$i").toDS()
+  }
+
+  private def laneThreads: Int =
+    Thread.getAllStackTraces.keySet.asScala.count(_.getName.startsWith(SpotifySource.LanePrefix))
 
   /** Every operator of an executed plan, through AQE's query stages. */
   private def collectPlan(p: SparkPlan): Seq[SparkPlan] = {
@@ -387,5 +417,96 @@ class SpotifySourceSpec extends AnyFunSuite with BeforeAndAfterEach {
     assert(!readsCache(tables("recent_tracks")) && !readsCache(tables("followed_artists")))
     scope.release()
     assert(cacheEmpty, "the scope's release left an extract in the cache")
+  }
+
+  test("playlistTracks: every playlist's chain is in flight at once, in lanes of one task") {
+    // each chain's first page holds until all six have been requested; with
+    // a Spark task per chain, local[4] runs four and the await times out
+    val all = new CountDownLatch(6)
+    val met = new ConcurrentLinkedQueue[Boolean]()
+    FakeHttp.reset(fanOutRoute(pages = 1, url =>
+      if (url.endsWith("/tracks")) { all.countDown(); met.add(all.await(10, TimeUnit.SECONDS)) }))
+    val rows = source(par = 8).playlistTracks(spark, playlistIds(6)).collect()
+    assert(rows.length === 6)
+    assert(met.asScala.toSeq === Seq.fill(6)(true), "a chain waited for another's slot")
+  }
+
+  test("playlistTracks: fanOutParallelism bounds the requests in flight") {
+    val inFlight, most = new AtomicInteger
+    FakeHttp.reset { url =>
+      val n = inFlight.incrementAndGet()
+      most.accumulateAndGet(n, math.max)
+      Thread.sleep(20)
+      inFlight.decrementAndGet()
+      fanOutRoute(pages = 2)(url)
+    }
+    val rows = source(par = 2).playlistTracks(spark, playlistIds(6)).collect()
+    assert(rows.length === 12)
+    assert(most.get === 2, s"${most.get} requests in flight with par = 2")
+  }
+
+  test("playlistTracks: no exchange, and the playlists_tracks extract is one partition") {
+    import spark.implicits._
+    val df = source().playlistTracks(spark, Seq("p1", "p2").toDS())
+    assert(df.collect().length === 3)
+    val exec = df.queryExecution.executedPlan
+    assert(!collectPlan(exec).exists(_.isInstanceOf[ShuffleExchangeExec]), exec)
+
+    val extract = new SpotifyPipeline(source()).run(spark, Ingest)("playlists_tracks")
+    try {
+      assert(extract.count() === 3)
+      val parts = extract.queryExecution.withCachedData.collectFirst {
+        case r: InMemoryRelation => r.cacheBuilder.cachedColumnBuffers.getNumPartitions
+      }
+      assert(parts === Some(1))
+    } finally graft.Caches.release(spark)
+  }
+
+  test("playlistTracks: one chain's HTTP 500 fails the extract, and no lane outlives it") {
+    val before = laneThreads
+    FakeHttp.reset(url =>
+      if (url == s"$Base/playlists/q3/tracks?offset=1") HttpResponse(500, """{"error": "boom"}""")
+      else fanOutRoute(pages = 3)(url))
+    val e = intercept[Exception] {
+      source(par = 4).playlistTracks(spark, playlistIds(6)).collect()
+    }
+    assert(messages(e).exists(_.contains("spotify connector: HTTP 500")), messages(e))
+    assert(laneThreads === before)
+  }
+
+  test("playlistTracks: LIMIT 1 ends the task and stops its lanes") {
+    // every page after the first blocks until the lane is interrupted
+    val never = new CountDownLatch(1)
+    val before = laneThreads
+    FakeHttp.reset(fanOutRoute(pages = 3, url =>
+      if (url.contains("offset=")) never.await(20, TimeUnit.SECONDS)))
+    val t0 = System.nanoTime()
+    val one = source(par = 4).playlistTracks(spark, playlistIds(6)).limit(1).collect()
+    assert(one.length === 1)
+    assert(laneThreads === before)
+    assert((System.nanoTime() - t0) / 1e9 < 15, "the lanes ran until their requests timed out")
+  }
+
+  test("RateLimitedClient paces each lane on its own: chains overlap, pages keep the interval") {
+    val minIntervalMs = 60L
+    val times = new ConcurrentLinkedQueue[(String, Long)]()
+    FakeHttp.reset(fanOutRoute(pages = 3, url => times.add(url -> System.nanoTime())))
+    FakeHttp.sleeps.clear()
+    val client = new RateLimitedClient(new FakeHttpClient, minIntervalMs = minIntervalMs,
+      sleeper = ms => { FakeHttp.sleeps.add(Thread.currentThread.getName); Thread.sleep(ms) })
+    val src = new SpotifySource(client, Base, Map.empty, fanOutParallelism = 2)
+    assert(src.playlistTracks(spark, playlistIds(2)).collect().length === 6)
+
+    val byChain = times.asScala.toSeq.groupBy { case (u, _) => u.split("/playlists/")(1).take(2) }
+      .map { case (pid, hits) => pid -> hits.map(_._2).sorted }
+    assert(byChain.keySet === Set("q1", "q2") && byChain.values.forall(_.size == 3))
+    // pacing's clock is in whole milliseconds, hence the 1 ms slack
+    for ((pid, ts) <- byChain; (a, b) <- ts.zip(ts.tail))
+      assert((b - a) / 1e6 >= minIntervalMs - 1, s"$pid paged faster than its interval")
+    // one shared pacer would space the chains' first requests an interval apart
+    val (q1, q2) = (byChain("q1"), byChain("q2"))
+    assert(math.abs(q1.head - q2.head) / 1e6 < minIntervalMs / 2, "the chains were serialized")
+    assert(q1.head < q2.last && q2.head < q1.last, "the chains did not overlap")
+    assert(FakeHttp.sleeps.asScala.toSet.size === 2, "pacing did not run on two lanes")
   }
 }
