@@ -4,7 +4,8 @@
 #   with no temp dir left behind, t1 entry smoke, the connector demo
 #   (all six ETL tables non-empty through SpotifyPipeline.run and through
 #   runConcurrent), the profiler smoke, and the sf0.1
-#   steady-state bench.
+#   steady-state bench. Ends by printing the Scala line counts of src/main
+#   and of its tools/ package, the size figure the roadmap tracks.
 # Usage: scripts/full_check.sh [testdata-root]   (default /root/testdata)
 set -euo pipefail
 cd "$(dirname "$0")/.."
@@ -85,3 +86,6 @@ fi
 
 SPARK_GRAFT_SF_DIR="$ROOT/sf0.1" sbt -batch "runMain graft.Bench" \
   | grep '"metric"' | sed 's/^\[info\] //'
+
+lines() { find "$1" -name '*.scala' -exec cat {} + | wc -l; }
+echo "src_main_lines=$(lines src/main) tools_lines=$(lines src/main/scala/graft/tools)"

@@ -16,6 +16,12 @@ import org.apache.spark.sql.types.StringType
   */
 object JdbcReplaceSink {
 
+  /** Most concurrent JDBC connections of one write. */
+  private val NumPartitions = 8
+
+  /** Rows per JDBC batch insert. */
+  private val BatchSize = 10000
+
   /** P7: terminal type erasure — every column cast to string, names kept. */
   def castAllToString(df: DataFrame): DataFrame =
     df.select(df.columns.map(c => col(c).cast(StringType).as(c)): _*)
@@ -40,16 +46,14 @@ object JdbcReplaceSink {
       df: DataFrame,
       url: String,
       table: String,
-      properties: Map[String, String] = Map.empty,
-      numPartitions: Int = 8,
-      batchSize: Int = 10000): Unit =
+      properties: Map[String, String] = Map.empty): Unit =
     df.write
       .format("jdbc")
       .options(properties)
       .option("url", url)
       .option("dbtable", table)
-      .option("numPartitions", numPartitions)
-      .option("batchsize", batchSize)
+      .option("numPartitions", NumPartitions)
+      .option("batchsize", BatchSize)
       .mode(SaveMode.Overwrite)
       .save()
 }

@@ -71,12 +71,9 @@ final case class SpotifyEnvConfig(
     * 401 → refresh → retry path. */
   def source(
       transport: HttpClient,
-      baseUrl: String = "https://api.spotify.com/v1",
-      parallelism: Int = 8): SpotifySource = {
+      baseUrl: String = "https://api.spotify.com/v1"): SpotifySource = {
     val paced = new RateLimitedClient(transport)
-    new SpotifySource(
-      new OAuthClient(paced, tokenProvider(paced)), baseUrl, Map.empty,
-      parallelism)
+    new SpotifySource(new OAuthClient(paced, tokenProvider(paced)), baseUrl)
   }
 }
 

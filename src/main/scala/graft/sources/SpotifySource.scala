@@ -20,7 +20,8 @@ import org.apache.spark.sql.functions._
   * Source map (SURVEY.md §2.1): playlists=S2, playlistTracks=S3 (keyed
   * fan-out), savedTracks=S4, audioFeatures=S5 (≤100-id batched lookup),
   * recentTracks=S6, followedArtists=S7. Rate limiting/retry (S8) comes from
-  * wrapping the injected client in [[RateLimitedClient]].
+  * wrapping the injected client in [[RateLimitedClient]]; auth (a Bearer
+  * header per request, refresh on 401) from wrapping it in [[OAuthClient]].
   *
   * Scale posture: pagination is inherently sequential per cursor, but the
   * keyed fetches (fan-out and lookup) run their HTTP chains as concurrent
@@ -37,21 +38,20 @@ import org.apache.spark.sql.functions._
 final class SpotifySource(
     client: HttpClient,
     baseUrl: String = "https://api.spotify.com/v1",
-    authHeaders: Map[String, String] = Map.empty,
     fanOutParallelism: Int = 8) extends Serializable {
 
   import SpotifySource._
 
   /** Cursor pagination (spotify-etl.py:72-75): follow `next` until null.
-    * Round 2: the cursor loop runs INSIDE a one-partition `mapPartitions`
-    * as a lazy `Iterator.unfold` — pagination is inherently sequential
-    * (each page names its successor), but pages now stream one at a time
-    * through the pipelined from_json/explode stage instead of accumulating
-    * in a driver Seq (the reference holds every page in memory,
+    * Round 2: the cursor loop ([[SpotifySource.pages]]) runs INSIDE a
+    * one-partition `mapPartitions` as a lazy iterator — pagination is
+    * inherently sequential (each page names its successor), but pages stream
+    * one at a time through the pipelined from_json/explode stage instead of
+    * accumulating in a driver Seq (the reference holds every page in memory,
     * spotify-etl.py:72-75; at 100× catalog size that's a driver OOM).
     * Neither driver nor executor ever holds more than the in-flight page;
     * a downstream LIMIT stops the HTTP fetches themselves (proven in
-    * SpotifySourceSpec). Same lazy shape as the v2 TracksReader.
+    * SpotifySourceSpec). The fan-out runs the same loop per playlist.
     *
     * RE-FETCH SEMANTICS (round-3 ADVICE): unlike the old fetch-once driver
     * Seq, the DataFrame is now a RECIPE — every action (count then write, a
@@ -74,17 +74,9 @@ final class SpotifySource(
   private def pagesDF(spark: SparkSession, firstUrl: String,
       followCursor: Boolean = true): DataFrame = {
     import spark.implicits._
-    val headers = authHeaders
     val c = client
     spark.range(0, 1, 1, numPartitions = 1)
-      .mapPartitions { _ =>
-        Iterator.unfold(Option(firstUrl)) {
-          case Some(url) =>
-            val body = checkedBody(c.get(url, headers), url)
-            Some((body, if (followCursor) nextCursor(body) else None))
-          case None => None
-        }
-      }
+      .mapPartitions(_ => pages(c, firstUrl, followCursor))
       .toDF("page")
   }
 
@@ -109,24 +101,17 @@ final class SpotifySource(
   def playlistTracks(spark: SparkSession, playlistIds: Dataset[String]): DataFrame = {
     import spark.implicits._
     val base = baseUrl
-    val headers = authHeaders
     val c = client
     val par = fanOutParallelism
-    val pages = playlistIds
+    playlistIds
       .coalesce(1)
       .mapPartitions { ids =>
         inLanes(ids, c, par) { (lane, pid) =>
           // per-id cursor loop, inside the executor (SURVEY.md §3.2)
-          Iterator.unfold(Option(s"$base/playlists/$pid/tracks")) {
-            case Some(url) =>
-              val body = checkedBody(lane.get(url, headers), url)
-              Some(((pid, body), nextCursor(body)))
-            case None => None
-          }
+          pages(lane, s"$base/playlists/$pid/tracks").map(pid -> _)
         }
       }
       .toDF("playlist_id", "page")
-    pages
       .select(
         col("playlist_id"),
         explode(from_json(col("page"), SpotifySchemas.playlistTracksPage)("items")).as("it"))
@@ -164,7 +149,6 @@ final class SpotifySource(
   def audioFeatures(spark: SparkSession, trackIds: Dataset[String]): DataFrame = {
     import spark.implicits._
     val base = baseUrl
-    val headers = authHeaders
     val c = client
     val par = fanOutParallelism
     val bodies = trackIds
@@ -173,7 +157,7 @@ final class SpotifySource(
       .mapPartitions { ids =>
         inLanes(ids.grouped(100), c, par) { (lane, batch) =>
           val url = s"$base/audio-features?ids=${batch.mkString(",")}"
-          Iterator.single(checkedBody(lane.get(url, headers), url))
+          Iterator.single(checkedBody(lane.get(url, Map.empty), url))
         }
       }
       .toDF("batch")
@@ -220,14 +204,26 @@ object SpotifySource {
 
   /** Loud status guard for every connector fetch (round-2 ADVICE): parsing
     * an error body would yield `from_json` nulls — rows silently dropped and
-    * pagination silently stopped. Fail the task instead, matching the v2
-    * TracksReader. Static so `mapPartitions` closures don't capture the
-    * source instance. */
+    * pagination silently stopped. Fail the task instead. Static so
+    * `mapPartitions` closures don't capture the source instance. */
   private[sources] def checkedBody(r: HttpResponse, url: String): String = {
     if (r.status < 200 || r.status >= 300)
       sys.error(s"spotify connector: HTTP ${r.status} for $url: ${r.body.take(200)}")
     r.body
   }
+
+  /** The one cursor loop (spotify-etl.py:72-75), lazy: from `firstUrl` it
+    * fetches a page only when the previous one has been consumed, and
+    * follows `next` until null (or not at all when `followCursor` is
+    * false). Emits raw page bodies. */
+  private def pages(client: HttpClient, firstUrl: String,
+      followCursor: Boolean = true): Iterator[String] =
+    Iterator.unfold(Option(firstUrl)) {
+      case Some(url) =>
+        val body = checkedBody(client.get(url, Map.empty), url)
+        Some((body, if (followCursor) nextCursor(body) else None))
+      case None => None
+    }
 
   /** Name prefix of the lane threads [[inLanes]] starts. */
   private[sources] val LanePrefix = "spotify-lane-"
@@ -300,7 +296,4 @@ object SpotifySource {
       o
     }
   }
-
-  /** Cursor extraction for the v2 connector subpackage. */
-  def nextCursorPublic(pageBody: String): Option[String] = nextCursor(pageBody)
 }

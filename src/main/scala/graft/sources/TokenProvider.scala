@@ -60,7 +60,7 @@ final class TokenProvider(
     }
   }
 
-  /** `Authorization: Bearer …` headers for [[SpotifySource]]. */
+  /** `Authorization: Bearer …` headers for [[OAuthClient]]. */
   def authHeaders: Map[String, String] =
     Map("Authorization" -> s"Bearer $accessToken")
 
@@ -138,7 +138,7 @@ object TokenProvider {
   * 401'd POST is safe — the server rejected auth before acting on the body.
   * Compose as
   * `new SpotifySource(new OAuthClient(new RateLimitedClient(real), tokens))`
-  * — SpotifySource then needs no static `authHeaders` at all.
+  * — the one auth path: SpotifySource itself sends no headers.
   */
 final class OAuthClient(underlying: HttpClient, tokens: TokenProvider)
     extends HttpClient {

@@ -11,9 +11,11 @@ import org.apache.spark.sql.Row
 /** Usage example + smoke drive for the connector layer: wires the reference
   * ETL DAG (SpotifyPipeline) against an in-memory HTTP stub and prints the
   * six staged tables, then loads them again through `runConcurrent` into
-  * an in-memory collector and prints each table's row count. This is what
-  * a real deployment looks like with the stub swapped for a
-  * java.net.http-backed client and `JdbcReplaceSink.write` as the
+  * an in-memory collector and prints each table's row count. Every extract,
+  * the keyed fan-out included, goes through the one connector,
+  * [[graft.sources.SpotifySource]]. This is what a real deployment looks
+  * like with the stub swapped for a java.net.http-backed client under
+  * [[graft.sources.OAuthClient]] and `JdbcReplaceSink.write` as the
   * `runConcurrent` writer.
   */
 object PipelineDemo {
@@ -72,16 +74,6 @@ object PipelineDemo {
     collected.asScala.toSeq.sortBy(_._1).foreach { case (name, rows) =>
       println(s"== runConcurrent $name (${rows.length} rows)")
     }
-
-    // the same fan-out endpoint through the DataSourceV2 connector
-    graft.sources.v2.HttpClients.register("demo", StubClient)
-    val v2 = spark.read.format("spotify-tracks")
-      .option("ids", "p1")
-      .option("chunk", "1")
-      .option("client", "demo")
-      .load()
-    println(s"== v2 spotify-tracks (${v2.count()} rows, ${v2.rdd.getNumPartitions} partition(s))")
-    v2.show(5, truncate = false)
     spark.stop()
   }
 }

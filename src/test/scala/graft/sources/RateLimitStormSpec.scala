@@ -1,33 +1,40 @@
-package graft.sources.v2
+package graft.sources
 
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicInteger
 
 import graft.TestSpark
-import graft.sources.{HttpClient, HttpResponse, RateLimitedClient}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** 429 storms at PARTITION scale (round 5, VERDICT r4 item 7): the earlier
-  * specs drive the retry policy single-path; this one runs the V2 fan-out
-  * scan with 16 concurrent InputPartitions against a stub that 429s the
-  * first hit of every URL, through ONE shared [[RateLimitedClient]] — the
-  * per-executor-singleton shape SURVEY §7.5 claims (cluster budget =
-  * executors × per-instance rate, because every task on an executor JVM
-  * paces through the same instance).
+/** Always 429, with a short `Retry-After`. A top-level class so that the
+  * fan-out can ship it to its lanes without capturing a spec. */
+final class Always429Client extends HttpClient {
+  override def get(url: String, headers: Map[String, String]): HttpResponse =
+    HttpResponse(429, "", Map("Retry-After" -> "0.01"))
+}
+
+/** 429 storms against one [[RateLimitedClient]] instance. The other specs
+  * drive the retry policy from one thread; this one sends 16 callers
+  * through one instance at once, against a stub that 429s the first hit of
+  * every URL. One instance is what one cursor chain or one fan-out lane
+  * holds (`SpotifySource.inLanes` gives each lane its own copy), so these
+  * bounds are per lane: a job's request budget is the lane count times one
+  * instance's rate (SURVEY §7.5).
   *
   * Pinned behavior:
-  *   - every partition's retry succeeds (complete rows, each URL exactly
-  *     one 429 + one success — no double-retry, no give-up);
+  *   - every caller's retry succeeds (each URL exactly one 429 + one
+  *     success — no double-retry, no give-up);
   *   - the storm cannot exceed the instance budget: total wall clock ≥
-  *     (requests − 1) × minInterval, i.e. concurrent partitions serialize
+  *     (requests − 1) × minInterval, i.e. concurrent callers serialize
   *     through the pacer instead of stampeding the API;
   *   - Retry-After backoff happens OUTSIDE the pacing lock: with 16
-  *     partitions each owing one 0.2 s backoff, serialized backoffs would
+  *     callers each owing one 0.2 s backoff, serialized backoffs would
   *     cost ≥ 3.2 s — the observed wall stays far under that, proving
   *     backoffs overlap while pacing still serializes.
+  * And through the connector: a playlist whose 429s never stop fails the
+  * extract instead of dropping its tracks.
   */
 class RateLimitStormSpec extends AnyFunSuite {
-  private val spark = TestSpark.spark
   private val Base = "https://api.spotify.com/v1"
 
   /** Thread-safe storm stub: first GET of each URL → 429 (Retry-After 0.2s),
@@ -46,20 +53,20 @@ class RateLimitStormSpec extends AnyFunSuite {
     }
   }
 
-  test("16 concurrent partitions under a full 429 storm: all retried, budget enforced, backoffs overlap") {
+  test("16 concurrent callers under a full 429 storm: all retried, budget enforced, backoffs overlap") {
     val ids = (1 to 16).map(i => s"p$i")
     val stub = new StormStub
     val minIntervalMs = 25L
-    HttpClients.register("storm",
-      new RateLimitedClient(stub, minIntervalMs = minIntervalMs, maxRetries = 2))
+    val client = new RateLimitedClient(stub, minIntervalMs = minIntervalMs, maxRetries = 2)
+    val statuses = new ConcurrentHashMap[String, Integer]()
+    val callers = ids.map(pid => new Thread(() =>
+      statuses.put(pid, client.get(s"$Base/playlists/$pid/tracks", Map.empty).status)))
     val t0 = System.nanoTime()
-    val rows = spark.read.format("spotify-tracks")
-      .option("ids", ids.mkString(","))
-      .option("chunk", "1") // one partition per playlist → 16-way fan-out
-      .option("client", "storm")
-      .load().collect()
+    callers.foreach(_.start())
+    callers.foreach(_.join())
     val wallMs = (System.nanoTime() - t0) / 1e6
-    assert(rows.length == 16, s"every partition must survive its 429: ${rows.length}")
+    val ok = ids.count(pid => statuses.get(pid) == 200)
+    assert(ok == 16, s"every caller must survive its 429: $ok")
     // each URL: exactly one 429 + one successful retry
     ids.foreach { pid =>
       val n = stub.hits.get(s"$Base/playlists/$pid/tracks")
@@ -75,18 +82,13 @@ class RateLimitStormSpec extends AnyFunSuite {
       f"backoffs appear serialized through the pacing lock: $wallMs%.0f ms")
   }
 
-  test("a partition whose 429s never stop fails the scan loudly (no silent truncation)") {
-    val always429 = new HttpClient {
-      override def get(url: String, headers: Map[String, String]) =
-        HttpResponse(429, "", Map("Retry-After" -> "0.01"))
-    }
-    HttpClients.register("storm-dead",
-      new RateLimitedClient(always429, minIntervalMs = 1, maxRetries = 2))
+  test("a playlist whose 429s never stop fails the fan-out loudly (no silent truncation)") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    val source = new SpotifySource(
+      new RateLimitedClient(new Always429Client, minIntervalMs = 1, maxRetries = 2), Base)
     val e = intercept[Exception] {
-      spark.read.format("spotify-tracks")
-        .option("ids", "p1,p2").option("chunk", "1")
-        .option("client", "storm-dead")
-        .load().collect()
+      source.playlistTracks(spark, Seq("p1", "p2").toDS()).collect()
     }
     def chain(t: Throwable): Seq[String] =
       if (t == null) Nil else t.getMessage +: chain(t.getCause)

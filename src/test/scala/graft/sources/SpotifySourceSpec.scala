@@ -16,6 +16,7 @@ import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.types.StructType
 import org.scalatest.BeforeAndAfterEach
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -99,7 +100,7 @@ class SpotifySourceSpec extends AnyFunSuite with BeforeAndAfterEach {
   override def beforeEach(): Unit = FakeHttp.reset(route)
 
   private def source(par: Int = 2) =
-    new SpotifySource(new FakeHttpClient, Base, Map("Authorization" -> "Bearer x"), par)
+    new SpotifySource(new FakeHttpClient, Base, par)
 
   private val Ingest = Timestamp.valueOf("2024-03-01 00:00:00")
 
@@ -256,6 +257,21 @@ class SpotifySourceSpec extends AnyFunSuite with BeforeAndAfterEach {
     assert(SpotifySource.nextCursor("""{"next": null}""") === None)
     assert(SpotifySource.nextCursor("""{}""") === None)
     assert(SpotifySource.nextCursor("""{"next": "u2"}""") === Some("u2"))
+  }
+
+  test("each extract's schema is its pinned SpotifySchemas table type (names and types)") {
+    import spark.implicits._
+    def shape(t: StructType) = t.fields.toSeq.map(f => f.name -> f.dataType)
+    val src = source()
+    val extracts = Seq(
+      "playlists" -> (src.playlists(spark), SpotifySchemas.playlists),
+      "playlists_tracks" ->
+        (src.playlistTracks(spark, Seq("p1").toDS()), SpotifySchemas.playlistsTracks),
+      "saved_tracks" -> (src.savedTracks(spark), SpotifySchemas.savedTracks),
+      "recent_tracks" -> (src.recentTracks(spark), SpotifySchemas.recentTracks),
+      "followed_artists" -> (src.followedArtists(spark), SpotifySchemas.followedArtists))
+    for ((table, (df, pinned)) <- extracts)
+      assert(shape(df.schema) === shape(pinned), s"$table drifted from its pinned schema")
   }
 
   test("pipeline: six staged tables; union-distinct fetches each id once (C2)") {
@@ -494,7 +510,7 @@ class SpotifySourceSpec extends AnyFunSuite with BeforeAndAfterEach {
     FakeHttp.sleeps.clear()
     val client = new RateLimitedClient(new FakeHttpClient, minIntervalMs = minIntervalMs,
       sleeper = ms => { FakeHttp.sleeps.add(Thread.currentThread.getName); Thread.sleep(ms) })
-    val src = new SpotifySource(client, Base, Map.empty, fanOutParallelism = 2)
+    val src = new SpotifySource(client, Base, fanOutParallelism = 2)
     assert(src.playlistTracks(spark, playlistIds(2)).collect().length === 6)
 
     val byChain = times.asScala.toSeq.groupBy { case (u, _) => u.split("/playlists/")(1).take(2) }
