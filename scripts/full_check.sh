@@ -48,8 +48,10 @@ sbt -batch "runMain graft.tools.EntrySmoke" | grep ENTRY_ROWS
 # Connector smoke: the ETL DAG over an in-memory stub must load every one of
 # its six tables, printed as "== <table> (N rows)" by SpotifyPipeline.run
 # and as "== runConcurrent <table> (N rows)" by the concurrent schedule,
-# with N > 0 on both paths and the same N on both (a fan-out or lookup lane
-# that dropped a chain's pages would load fewer rows on one path).
+# whose N is counted back from the in-memory Derby tables that
+# JdbcReplaceSink.write loaded, with N > 0 on both paths and the same N on
+# both (a fan-out or lookup lane that dropped a chain's pages, or a sink
+# that dropped rows, would load fewer rows on one path).
 demo="$(sbt -batch "runMain graft.tools.PipelineDemo")"
 for t in playlists playlists_tracks saved_tracks recent_tracks followed_artists audio_features; do
   counts=()

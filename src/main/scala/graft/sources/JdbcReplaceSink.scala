@@ -1,7 +1,10 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.classic.ClassicConversions.castToImpl
+import org.apache.spark.sql.execution.datasources.jdbc.{JdbcOptionsInWrite, JdbcUtils}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.jdbc.JdbcDialects
 import org.apache.spark.sql.types.StringType
 
 /** The reference's load stage (spotify-etl.py:209-215, :272-280), Spark-first.
@@ -37,23 +40,38 @@ object JdbcReplaceSink {
   def stage(df: DataFrame, ingestTs: java.sql.Timestamp): DataFrame =
     castAllToString(withIngestDate(df, ingestTs))
 
-  /** Replace-mode JDBC write (spotify-etl.py:211 `if_exists='replace'`).
+  /** Replace-mode JDBC write (spotify-etl.py:211 `if_exists='replace'`):
+    * Spark's JDBC replace steps, called directly — `tableExists`, then
+    * `dropTable`, `createTable(df.schema)` and `saveTable`, in the order
+    * and with the options and case sensitivity that `JdbcRelationProvider`
+    * uses in Overwrite mode. `DataFrameWriter` would add three steps
+    * around them: a `SaveIntoDataSourceCommand` plan and a query that reads
+    * the new table's schema back, which cost planning time on every write,
+    * and a recache of the cached frames that read the table, which has
+    * nothing to do here: no cached frame in the engine reads a loaded
+    * table back. `saveTable` plans `df` through `df.rdd`, so a caller that
+    * forced `df.rdd` earlier has planned the load ahead of the write.
+    *
     * Credentials arrive as `properties` (pair with
-    * [[SpotifyEnvConfig.jdbcProperties]]) — passed as writer options so
-    * Spark's JDBC redaction applies and URL metacharacters in a password
-    * can't break parsing (round-7 ADVICE). */
+    * [[SpotifyEnvConfig.jdbcProperties]]) — passed as options so Spark's
+    * JDBC redaction applies and URL metacharacters in a password can't
+    * break parsing (round-7 ADVICE). */
   def write(
       df: DataFrame,
       url: String,
       table: String,
-      properties: Map[String, String] = Map.empty): Unit =
-    df.write
-      .format("jdbc")
-      .options(properties)
-      .option("url", url)
-      .option("dbtable", table)
-      .option("numPartitions", NumPartitions)
-      .option("batchsize", BatchSize)
-      .mode(SaveMode.Overwrite)
-      .save()
+      properties: Map[String, String] = Map.empty): Unit = {
+    val options = new JdbcOptionsInWrite(properties ++ Map(
+      "url" -> url,
+      "dbtable" -> table,
+      "numPartitions" -> NumPartitions.toString,
+      "batchsize" -> BatchSize.toString))
+    val caseSensitive = castToImpl(df.sparkSession).sessionState.conf.caseSensitiveAnalysis
+    val conn = JdbcDialects.get(url).createConnectionFactory(options)(-1)
+    try {
+      if (JdbcUtils.tableExists(conn, options)) JdbcUtils.dropTable(conn, options.table, options)
+      JdbcUtils.createTable(conn, options.table, df.schema, caseSensitive, options)
+      JdbcUtils.saveTable(df, Some(df.schema), caseSensitive, options)
+    } finally conn.close()
+  }
 }

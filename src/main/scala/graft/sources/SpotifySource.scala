@@ -138,12 +138,13 @@ final class SpotifySource(
 
   /** Batched ID lookup (spotify-etl.py:134-173): ≤100 ids per request —
     * semantically a join against a remote key-value source. Each id is
-    * requested once (C2, spotify-etl.py:250): one exchange gathers the ids
-    * into one partition, whatever the partitioning of their inputs, and the
-    * `distinct` aggregate dedups them there without another. So the batches
-    * cover the whole deduped list, `ceil(n/100)` lookups as in the
-    * reference (spotify-etl.py:151-166). The task sends its batches as
-    * lanes, at most `fanOutParallelism` at once.
+    * requested once (C2, spotify-etl.py:250): `coalesce(1)` runs the ids'
+    * upstream in one task, with no exchange (in the pipeline that upstream
+    * is two one-partition caches), and the task drops every id it has
+    * already seen before batching. So the batches cover the whole deduped
+    * list, `ceil(n/100)` lookups as in the reference
+    * (spotify-etl.py:151-166), and the lookup is one job. The task sends
+    * its batches as lanes, at most `fanOutParallelism` at once.
     * `grouped(100)` handles the tail batch uniformly (the reference needs a
     * separate branch for it, spotify-etl.py:157-166). */
   def audioFeatures(spark: SparkSession, trackIds: Dataset[String]): DataFrame = {
@@ -152,10 +153,10 @@ final class SpotifySource(
     val c = client
     val par = fanOutParallelism
     val bodies = trackIds
-      .repartition(1)
-      .distinct()
+      .coalesce(1)
       .mapPartitions { ids =>
-        inLanes(ids.grouped(100), c, par) { (lane, batch) =>
+        val seen = new java.util.HashSet[String]
+        inLanes(ids.filter(seen.add).grouped(100), c, par) { (lane, batch) =>
           val url = s"$base/audio-features?ids=${batch.mkString(",")}"
           Iterator.single(checkedBody(lane.get(url, Map.empty), url))
         }

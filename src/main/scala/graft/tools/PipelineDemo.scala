@@ -1,25 +1,24 @@
 package graft.tools
 
-import java.sql.Timestamp
-
-import scala.jdk.CollectionConverters._
+import java.sql.{DriverManager, Timestamp}
 
 import graft.{Caches, Session}
 import graft.sources._
-import org.apache.spark.sql.Row
 
 /** Usage example + smoke drive for the connector layer: wires the reference
   * ETL DAG (SpotifyPipeline) against an in-memory HTTP stub and prints the
-  * six staged tables, then loads them again through `runConcurrent` into
-  * an in-memory collector and prints each table's row count. Every extract,
+  * six staged tables, then loads them again through `runConcurrent` and
+  * `JdbcReplaceSink.write` into an in-memory Derby database and prints each
+  * table's row count, read back over plain JDBC. Every extract,
   * the keyed fan-out included, goes through the one connector,
   * [[graft.sources.SpotifySource]]. This is what a real deployment looks
   * like with the stub swapped for a java.net.http-backed client under
-  * [[graft.sources.OAuthClient]] and `JdbcReplaceSink.write` as the
-  * `runConcurrent` writer.
+  * [[graft.sources.OAuthClient]] and a real database's URL and
+  * credentials in place of Derby's.
   */
 object PipelineDemo {
   private val Base = "https://api.spotify.com/v1"
+  private val DerbyUrl = "jdbc:derby:memory:demo;create=true"
 
   private def track(id: String): String =
     s"""{"id": "$id", "name": "Song $id", "artists": [{"name": "artist-$id"}],
@@ -67,13 +66,17 @@ object PipelineDemo {
     }
     Caches.release(spark)
 
-    // the concurrent schedule, each table's write collected in memory
-    val collected = new java.util.concurrent.ConcurrentHashMap[String, Array[Row]]()
-    pipeline.runConcurrent(spark, ingest, (name, df) => collected.put(name, df.collect()))
+    // the concurrent schedule, each table loaded into in-memory Derby by
+    // the deployment writer and counted back over plain JDBC
+    val loaded = pipeline.runConcurrent(spark, ingest,
+      (name, df) => JdbcReplaceSink.write(df, DerbyUrl, name))
     Caches.release(spark)
-    collected.asScala.toSeq.sortBy(_._1).foreach { case (name, rows) =>
-      println(s"== runConcurrent $name (${rows.length} rows)")
-    }
+    val conn = DriverManager.getConnection(DerbyUrl)
+    try loaded.keys.toSeq.sorted.foreach { name =>
+      val rs = conn.createStatement().executeQuery(s"SELECT COUNT(*) FROM $name")
+      rs.next()
+      println(s"== runConcurrent $name (${rs.getLong(1)} rows)")
+    } finally conn.close()
     spark.stop()
   }
 }

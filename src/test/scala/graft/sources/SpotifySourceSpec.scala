@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.sql.Timestamp
+import java.sql.{DriverManager, Timestamp}
 import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
 
@@ -10,6 +10,7 @@ import scala.jdk.CollectionConverters._
 import scala.util.Try
 
 import graft.TestSpark
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.classic.ClassicConversions.castToImpl
 import org.apache.spark.sql.execution.SparkPlan
@@ -109,13 +110,15 @@ class SpotifySourceSpec extends AnyFunSuite with BeforeAndAfterEach {
 
   /** `runConcurrent` with a row-counting writer, bounded so that a hung
     * scheduler fails the test instead of stalling the suite. `onWrite`
-    * sees each table's name as its write starts. Returns the row count of
-    * every table written and the run's outcome. */
-  private def loadAll(onWrite: String => Unit = _ => ())
+    * sees each table's name as its write starts; `load` (a count unless
+    * given) writes the table and returns its row count. Returns the row
+    * count of every table written and the run's outcome. */
+  private def loadAll(onWrite: String => Unit = _ => (),
+      load: (String, DataFrame) => Long = (_, df) => df.count())
       : (Map[String, Long], Try[Map[String, DataFrame]]) = {
     val written = new ConcurrentHashMap[String, Long]()
     val run = Future(new SpotifyPipeline(source()).runConcurrent(spark, Ingest,
-      (name, df) => { onWrite(name); written.put(name, df.count()) }))(ExecutionContext.global)
+      (name, df) => { onWrite(name); written.put(name, load(name, df)) }))(ExecutionContext.global)
     val outcome = Await.ready(run, 2.minutes).value.get
     graft.Caches.release(spark)
     (written.asScala.toMap, outcome)
@@ -148,6 +151,28 @@ class SpotifySourceSpec extends AnyFunSuite with BeforeAndAfterEach {
   private def playlistIds(n: Int) = {
     import spark.implicits._
     (1 to n).map(i => s"q$i").toDS()
+  }
+
+  /** `body`'s result and the jobs it ran, as (job group or "", start,
+    * end) in epoch milliseconds. */
+  private def withJobs[A](body: => A): (A, Seq[(String, Long, Long)]) = {
+    val starts = new ConcurrentHashMap[Int, (String, Long)]()
+    val ends = new ConcurrentHashMap[Int, Long]()
+    val l = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = starts.put(js.jobId,
+        Option(js.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse("")
+          -> js.time)
+      override def onJobEnd(je: SparkListenerJobEnd): Unit = ends.put(je.jobId, je.time)
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val a = body
+      // the listener bus is async: wait until every job seen has ended
+      // and no more arrive
+      var last = -1
+      while (starts.size != last || ends.size != starts.size) { last = starts.size; Thread.sleep(300) }
+      (a, starts.asScala.toSeq.map { case (id, (g, t)) => (g, t, ends.get(id)) })
+    } finally spark.sparkContext.removeSparkListener(l)
   }
 
   private def laneThreads: Int =
@@ -330,14 +355,55 @@ class SpotifySourceSpec extends AnyFunSuite with BeforeAndAfterEach {
     assert(FakeHttp.requested === Seq.empty)
   }
 
-  test("audio lookup: id dedup and fan-out share one shuffle exchange") {
-    val audio = new SpotifyPipeline(source()).run(spark, Ingest)("audio_features")
-    try {
-      assert(audio.collect().length === 4)
-      val exec = audio.queryExecution.executedPlan
-      val shuffles = collectPlan(exec).count(_.isInstanceOf[ShuffleExchangeExec])
-      assert(shuffles === 1, s"expected one exchange between the id union and the lookup:\n$exec")
-    } finally graft.Caches.release(spark)
+  test("audio lookup: in-task id dedup, no exchange, one job per action") {
+    import spark.implicits._
+    // 250 distinct ids: tr151..tr200 in both inputs, tr1..tr10 twice in one
+    val first = ((1 to 200) ++ (1 to 10)).map(i => s"tr$i").toDS()
+    val second = (151 to 250).map(i => s"tr$i").toDS()
+    val audio = source(par = 1).audioFeatures(spark, first.union(second))
+    val (rows, jobs) = withJobs(audio.collect())
+    assert(rows.length === 250)
+    assert(jobs.size === 1, "the lookup is not one job")
+    val exec = audio.queryExecution.executedPlan
+    assert(!collectPlan(exec).exists(_.isInstanceOf[ShuffleExchangeExec]), exec)
+    val lookups = FakeHttp.requested.filter(_.contains("audio-features"))
+    assert(lookups.size === 3)
+    assert(lookups.flatMap(_.split("ids=")(1).split(",")).sorted ===
+      (1 to 250).map(i => s"tr$i").sorted, "an id was requested twice")
+  }
+
+  test("runConcurrent: audio_features plans its load without a job or a request") {
+    // The fan-out's first page is held, so audio_features plans its load
+    // after the saved_tracks fill and before the playlists_tracks fill
+    // ends. Each table is then loaded into Derby by one job of its own.
+    val url = "jdbc:derby:memory:spotify_source_spec;create=true"
+    val requestedAt = new ConcurrentLinkedQueue[(String, Long)]()
+    FakeHttp.reset { u =>
+      requestedAt.add(u -> System.currentTimeMillis())
+      if (u == s"$Base/playlists/p1/tracks") Thread.sleep(1500)
+      route(u)
+    }
+    def rowsIn(table: String): Long = {
+      val c = DriverManager.getConnection(url)
+      try {
+        val rs = c.createStatement().executeQuery(s"SELECT COUNT(*) FROM $table")
+        rs.next()
+        rs.getLong(1)
+      } finally c.close()
+    }
+    val ((written, outcome), jobs) = withJobs(loadAll(
+      onWrite = name => spark.sparkContext.setJobGroup(name, name),
+      load = (name, df) => { JdbcReplaceSink.write(df, url, name); rowsIn(name) }))
+    assert(outcome.isSuccess, outcome)
+    assert(written === AllRows)
+    val byGroup = jobs.groupBy(_._1)
+    assert(byGroup("").size === 3, "a job outside the writes other than the three fills")
+    assert((byGroup - "").map { case (g, js) => g -> js.size } === AllRows.map(_._1 -> 1),
+      "a load was not one job")
+    val fillsEnd = byGroup("").map(_._3).max
+    assert(byGroup("audio_features").forall(_._2 >= fillsEnd), "the lookup job ran before the fills ended")
+    val lookups = requestedAt.asScala.collect { case (u, t) if u.contains("audio-features") => t }
+    assert(lookups.nonEmpty && lookups.forall(_ >= fillsEnd), "a lookup was sent before the fills ended")
   }
 
   test("runConcurrent: the fan-out starts while saved-tracks pagination is in flight") {
