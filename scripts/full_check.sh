@@ -22,6 +22,15 @@ if [ -n "$builders" ]; then
   exit 1
 fi
 
+# One kernel per native expression: doGenCode calls the companion's static
+# kernel, so no expression under graft/functions names generated locals.
+templates="$(grep -rn freshName src/main/scala/graft/functions || true)"
+if [ -n "$templates" ]; then
+  echo "freshName under src/main/scala/graft/functions (a second, Java copy of a kernel):"
+  echo "$templates"
+  exit 1
+fi
+
 sbt -batch test
 
 # Leak gate: every graft_* entry a Verify run creates in the JVM's temp dir

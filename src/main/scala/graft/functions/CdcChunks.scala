@@ -1,7 +1,5 @@
 package graft.functions
 
-import java.security.MessageDigest
-
 import org.apache.spark.sql.{Column, NativeColumn}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
@@ -18,9 +16,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * kept), cut a chunk boundary AFTER every word whose h60 ≡ 0 (mod `mask+1`),
   * and emit `h60(chunkWords.mkString(" "))` per chunk in document order.
   * h60 is the engine-wide 60-bit digest — the first 15 hex chars of the
-  * MD5 of the UTF-8 bytes (`XHash.h60` / `sqlH60`) — reproduced here as
-  * the top 60 bits of the first 8 digest bytes (same nibbles, no hex
-  * round-trip).
+  * MD5 of the UTF-8 bytes (`XHash.h60` / `sqlH60`) — computed by
+  * [[Md5Prefix60.compute]] with no hex round-trip.
   *
   * Why an expression and not operators: the round-4 shape paid a full
   * corpus explode (1-grams), a doc-keyed window exchange to prefix-sum
@@ -59,22 +56,8 @@ object CdcChunks {
 
   private val Space = UTF8String.fromString(" ")
 
-  private val md5 = new ThreadLocal[MessageDigest] {
-    override def initialValue(): MessageDigest =
-      MessageDigest.getInstance("MD5")
-  }
-
-  /** h60 of a UTF8String: top 60 bits of the MD5 digest — bit-identical to
-    * `conv(substring(md5(x), 1, 15), 16, 10)` (first 15 hex nibbles). */
-  def h60(s: UTF8String): Long = {
-    val d = md5.get()
-    d.reset()
-    val digest = d.digest(s.getBytes)
-    var v = 0L
-    var i = 0
-    while (i < 8) { v = (v << 8) | (digest(i) & 0xffL); i += 1 }
-    v >>> 4
-  }
+  /** h60 of a UTF8String: [[Md5Prefix60.compute]] of its UTF-8 bytes. */
+  def h60(s: UTF8String): Long = Md5Prefix60.compute(s.getBytes)
 
   /** CDC chunk hashes of `text`: boundary after every word with
     * h60 % (mask+1) == 0; each chunk hashed as its space-joined words. */

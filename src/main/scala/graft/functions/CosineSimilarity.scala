@@ -12,22 +12,18 @@ import org.apache.spark.sql.types._
   * A codegen'd expression instead of a Scala UDF (SURVEY.md §7.3): no
   * Row↔Scala boxing, no Seq[Float] materialization per row, stays inside
   * whole-stage codegen. Math is done in double with strict left-to-right
-  * accumulation in element order, so the result is deterministic and
-  * identical between the interpreted and generated paths.
+  * accumulation in element order, so the result is deterministic. Both
+  * eval paths call the one kernel, [[CosineSimilarity.compute]].
   *
   * Returns 0.0 when either vector has zero norm; null on null input.
   *
-  * LENGTH SEMANTICS (round-3 ADVICE fix): vectors of DIFFERENT lengths
-  * yield NULL. The round-2 behavior scored mismatched vectors over their
-  * common prefix — plausible-looking numbers with no signal — which became
-  * a silent-wrong-result footgun once GraftExtensions exposed `cosine_sim`
-  * to arbitrary SQL (a 64-dim query against 128-dim data "worked"). NULL
-  * propagates loudly through filters/top-k, matches the null-in contract,
-  * and costs one branch. Every internal caller uses equal-length vectors
-  * (the driver tables are uniformly 64-dim; multimodal features are fixed
-  * 8-lane), and the DuckDB oracle's `list_cosine_similarity` errors on
-  * mismatch, so no oracle-checked query can rely on mixed lengths.
-  * Behavior is pinned by a spec.
+  * LENGTH SEMANTICS (round 3): vectors of DIFFERENT lengths yield NULL,
+  * not a score over their common prefix — a 64-dim query against 128-dim
+  * data through the SQL `cosine_sim` would otherwise "work" with no
+  * signal. NULL propagates loudly through filters and top-k; every
+  * internal caller uses equal-length vectors, and the DuckDB oracle's
+  * `list_cosine_similarity` errors on mismatch. Pinned by OperatorSpec and
+  * PropertySpec.
   */
 case class CosineSimilarity(left: Expression, right: Expression)
     extends BinaryExpression with ExpectsInputTypes {
@@ -42,8 +38,27 @@ case class CosineSimilarity(left: Expression, right: Expression)
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
+    if (x.numElements() != y.numElements()) null else CosineSimilarity.compute(x, y)
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    // the length guard sets NULL here, so the kernel returns an unboxed double
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"""${ev.isNull} = $a.numElements() != $b.numElements();
+         |if (!${ev.isNull}) ${ev.value} = graft.functions.CosineSimilarity.compute($a, $b);
+         |""".stripMargin)
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): CosineSimilarity =
+    copy(left = newLeft, right = newRight)
+}
+
+object CosineSimilarity {
+
+  /** Cosine of two equal-length vectors, the one kernel both eval paths
+    * call (the caller checks the lengths). */
+  def compute(x: ArrayData, y: ArrayData): Double = {
     val n = x.numElements()
-    if (n != y.numElements()) return null
     var dot = 0.0; var nx = 0.0; var ny = 0.0
     var i = 0
     while (i < n) {
@@ -55,37 +70,6 @@ case class CosineSimilarity(left: Expression, right: Expression)
     val den = math.sqrt(nx) * math.sqrt(ny)
     if (den == 0.0) 0.0 else dot / den
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val dot = ctx.freshName("dot")
-      val nx = ctx.freshName("nx")
-      val ny = ctx.freshName("ny")
-      val xv = ctx.freshName("xv")
-      val yv = ctx.freshName("yv")
-      val den = ctx.freshName("den")
-      s"""
-         |final int $n = $a.numElements();
-         |if ($n != $b.numElements()) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  double $dot = 0.0; double $nx = 0.0; double $ny = 0.0;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    final double $xv = (double) $a.getFloat($i);
-         |    final double $yv = (double) $b.getFloat($i);
-         |    $dot += $xv * $yv; $nx += $xv * $xv; $ny += $yv * $yv;
-         |  }
-         |  final double $den = java.lang.Math.sqrt($nx) * java.lang.Math.sqrt($ny);
-         |  ${ev.value} = ($den == 0.0) ? 0.0 : $dot / $den;
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): CosineSimilarity =
-    copy(left = newLeft, right = newRight)
 }
 
 object vec {

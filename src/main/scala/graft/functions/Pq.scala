@@ -22,8 +22,8 @@ import org.apache.spark.sql.types._
   * over float→double widenings (exact), is quantized
   * `floor(d² · quantScale)` to a long BEFORE comparison, and ties break
   * toward the SMALLEST codeword id (strict `<` keeps the first minimum).
-  * The interpreted and generated paths run the identical op sequence, and
-  * the DuckDB replay spells out the same left-associative term tree.
+  * Both eval paths call the one kernel, [[PqEncode.compute]], and the
+  * DuckDB replay spells out the same left-associative term tree.
   *
   * Codebook width must equal the input vector length; mismatched input
   * yields NULL (the [[CosineSimilarity]] length contract).
@@ -35,9 +35,7 @@ case class PqEncode(
     quantScale: Double)
     extends UnaryExpression with ExpectsInputTypes {
 
-  private val ks = codebook.size
   private val dim = codebook.head.size
-  private val subDim = dim / numSubspaces
 
   /** k-major flattened double codebook shared by both eval paths. */
   @transient private lazy val flat: Array[Double] =
@@ -48,9 +46,36 @@ case class PqEncode(
   override def nullable: Boolean = true
   override def prettyName: String = "pq_encode"
 
-  override def nullSafeEval(a: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
+  override def nullSafeEval(a: Any): Any =
+    PqEncode.compute(a.asInstanceOf[ArrayData], flat, dim, numSubspaces, quantScale)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val cb = ctx.addReferenceObj("pqCodebook", flat, "double[]")
+    nullSafeCodeGen(ctx, ev, a =>
+      s"""${ev.value} = graft.functions.PqEncode.compute(
+         |  $a, $cb, $dim, $numSubspaces, ${quantScale}D);
+         |${ev.isNull} = ${ev.value} == null;
+         |""".stripMargin)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): PqEncode =
+    copy(child = newChild)
+}
+
+object PqEncode {
+
+  /** The per-row kernel both eval paths call: the argmin codeword id per
+    * subspace of `x` against the k-major codebook `cb` (`dim` wide), or
+    * null when `x` is not `dim` long. The row is widened to doubles once,
+    * before the codeword loops. */
+  def compute(x: ArrayData, cb: Array[Double], dim: Int, numSubspaces: Int,
+      quantScale: Double): ArrayData = {
     if (x.numElements() != dim) return null
+    val xd = new Array[Double](dim)
+    var i = 0
+    while (i < dim) { xd(i) = x.getFloat(i).toDouble; i += 1 }
+    val ks = cb.length / dim
+    val subDim = dim / numSubspaces
     val codes = new Array[Int](numSubspaces)
     var m = 0
     while (m < numSubspaces) {
@@ -58,14 +83,7 @@ case class PqEncode(
       var bestK = 0
       var k = 0
       while (k < ks) {
-        var acc = 0.0
-        var i = m * subDim
-        while (i < (m + 1) * subDim) {
-          val diff = x.getFloat(i).toDouble - flat(k * dim + i)
-          acc += diff * diff
-          i += 1
-        }
-        val q = math.floor(acc * quantScale).toLong
+        val q = d2q(xd, m * subDim, subDim, cb, k * dim + m * subDim, quantScale)
         if (q < best) { best = q; bestK = k }
         k += 1
       }
@@ -75,43 +93,20 @@ case class PqEncode(
     new GenericArrayData(codes)
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val cb = ctx.addReferenceObj("pqCodebook", flat, "double[]")
-      val codes = ctx.freshName("codes")
-      val m = ctx.freshName("m")
-      val k = ctx.freshName("k")
-      val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc")
-      val diff = ctx.freshName("diff")
-      val q = ctx.freshName("q")
-      val best = ctx.freshName("best")
-      val bestK = ctx.freshName("bestK")
-      s"""
-         |if ($a.numElements() != $dim) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  final int[] $codes = new int[$numSubspaces];
-         |  for (int $m = 0; $m < $numSubspaces; $m++) {
-         |    long $best = Long.MAX_VALUE; int $bestK = 0;
-         |    for (int $k = 0; $k < $ks; $k++) {
-         |      double $acc = 0.0;
-         |      for (int $i = $m * $subDim; $i < ($m + 1) * $subDim; $i++) {
-         |        final double $diff = ((double) $a.getFloat($i)) - $cb[$k * $dim + $i];
-         |        $acc += $diff * $diff;
-         |      }
-         |      final long $q = (long) java.lang.Math.floor($acc * ${quantScale}D);
-         |      if ($q < $best) { $best = $q; $bestK = $k; }
-         |    }
-         |    $codes[$m] = $bestK;
-         |  }
-         |  ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($codes);
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): PqEncode =
-    copy(child = newChild)
+  /** Quantized squared L2 of `xd(off until off + len)` against
+    * `m(base until base + len)`: (x − c)² accumulates in element order,
+    * then `floor(d² · quantScale)`. Also folds the driver-side ADC LUT. */
+  private[graft] def d2q(xd: Array[Double], off: Int, len: Int, m: Array[Double],
+      base: Int, quantScale: Double): Long = {
+    var acc = 0.0
+    var j = 0
+    while (j < len) {
+      val d = xd(off + j) - m(base + j)
+      acc += d * d
+      j += 1
+    }
+    math.floor(acc * quantScale).toLong
+  }
 }
 
 /** Asymmetric-distance (ADC) scorer over PQ codes, multi-query form
@@ -142,55 +137,15 @@ case class PqAdcMulti(
   override def dataType: DataType = LongType
   override def prettyName: String = "pq_adc_multi"
 
-  // round 8 (ADVICE): a qidx outside the stacked LUT's slab range — a
-  // mis-built query relation or a stale factory paired with a
-  // wider qidx column — must fail with the CONTRACT named, not as a raw
-  // ArrayIndexOutOfBoundsException from inside generated code (or a silent
-  // wrong-slab read if negative arithmetic ever fed the index).
-  private def slabError(qidx: Int, slabs: Int): String =
-    s"pq_adc_multi: query index $qidx outside stacked LUT " +
-      s"($slabs slabs of ${numSubspaces * ks} entries)"
-
-  override def nullSafeEval(codesAny: Any, qidxAny: Any): Any = {
-    val codes = codesAny.asInstanceOf[ArrayData]
-    val qidx = qidxAny.asInstanceOf[Int]
-    val slab = numSubspaces * ks
-    if (qidx < 0 || (qidx.toLong + 1) * slab > flat.length)
-      throw new IllegalArgumentException(slabError(qidx, flat.length / slab))
-    val base = qidx * slab
-    var total = 0L
-    var m = 0
-    while (m < numSubspaces) {
-      total += flat(base + m * ks + codes.getInt(m))
-      m += 1
-    }
-    total
-  }
+  override def nullSafeEval(codes: Any, qidx: Any): Any =
+    PqAdcMulti.compute(codes.asInstanceOf[ArrayData], qidx.asInstanceOf[Int], flat,
+      numSubspaces, ks)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val bcCls = "org.apache.spark.broadcast.Broadcast"
-    val lutRef = ctx.addReferenceObj("pqLutBc", lut, bcCls)
-    val lutArr = ctx.addMutableState("long[]", "pqLutAll",
-      v => s"$v = (long[]) (($bcCls) $lutRef).value();")
-    nullSafeCodeGen(ctx, ev, (codes, qidx) => {
-      val m = ctx.freshName("m")
-      val base = ctx.freshName("base")
-      val total = ctx.freshName("total")
-      val slab = numSubspaces * ks
-      s"""
-         |if ($qidx < 0 || ((long) $qidx + 1L) * ${slab}L > $lutArr.length) {
-         |  throw new IllegalArgumentException(
-         |    "pq_adc_multi: query index " + $qidx + " outside stacked LUT (" +
-         |    ($lutArr.length / $slab) + " slabs of $slab entries)");
-         |}
-         |final int $base = $qidx * $slab;
-         |long $total = 0L;
-         |for (int $m = 0; $m < $numSubspaces; $m++) {
-         |  $total += $lutArr[$base + $m * $ks + $codes.getInt($m)];
-         |}
-         |${ev.value} = $total;
-       """.stripMargin
-    })
+    val lutArr = TopCells.broadcastState(ctx, lut, "long[]", "pqLutAll")
+    nullSafeCodeGen(ctx, ev, (codes, qidx) =>
+      s"${ev.value} = graft.functions.PqAdcMulti.compute(" +
+        s"$codes, $qidx, $lutArr, $numSubspaces, $ks);")
   }
 
   override protected def withNewChildrenInternal(
@@ -199,6 +154,32 @@ case class PqAdcMulti(
 }
 
 object PqAdcMulti {
+
+  /** The per-row kernel both eval paths call: the exact integer ADC sum of
+    * `codes` in query slab `qidx` of the stacked `lut`.
+    *
+    * Round 8 (ADVICE): a qidx outside the stacked LUT's slab range (a
+    * mis-built query relation, or a stale factory paired with a wider qidx
+    * column) fails with the contract named, not as a raw
+    * ArrayIndexOutOfBoundsException (or a silent wrong-slab read if
+    * negative arithmetic ever fed the index). */
+  def compute(codes: ArrayData, qidx: Int, lut: Array[Long], numSubspaces: Int,
+      ks: Int): Long = {
+    val slab = numSubspaces * ks
+    if (qidx < 0 || (qidx.toLong + 1) * slab > lut.length)
+      throw new IllegalArgumentException(
+        s"pq_adc_multi: query index $qidx outside stacked LUT " +
+          s"(${lut.length / slab} slabs of $slab entries)")
+    val base = qidx * slab
+    var total = 0L
+    var m = 0
+    while (m < numSubspaces) {
+      total += lut(base + m * ks + codes.getInt(m))
+      m += 1
+    }
+    total
+  }
+
   /** Broadcast the stacked LUT once and return the two-arg factory.
     * `nQueries` pins the slab count the builder intends — a LUT whose
     * length disagrees with nQueries·M·Ks slabs is a construction bug and

@@ -20,21 +20,15 @@ import org.apache.spark.sql.types._
   * [[PqEncode]] documents. One expression node holds the centroid matrix
   * and loops.
   *
-  * HOW THE MATRIX TRAVELS (round 6): as a BROADCAST variable, not a
-  * serialized expression constant. The round-4 form embedded the flattened
-  * matrix in the case class, so every task binary carried k·dim doubles
-  * and the plan size grew linearly with k = N/125 — the one unbounded
-  * driver-artifact path in the engine. Now the expression holds only the
-  * Broadcast handle (O(1) plan size at any k); executors fetch the matrix
-  * once per JVM over the torrent protocol, and codegen dereferences
+  * HOW THE MATRIX TRAVELS (round 6): as a BROADCAST, not a serialized
+  * expression constant, so the plan holds only the handle (O(1) plan size
+  * at any k; the round-4 constant put k·dim doubles in every task
+  * binary). Executors fetch the matrix once per JVM, and codegen reads
   * `.value()` ONCE per operator instance into a mutable-state `double[]`
-  * (never per row). Build via [[TopCells.broadcastOf]]. The driver still
-  * materializes the k-row codebook to create the broadcast — that is the
-  * codebook itself (k·dim·8 B ≈ 4 GB at k = 8M·64d, the standard
-  * host-trained coarse-quantizer shape); past
-  * [[graft.operators.Ann.FlatMaxCells]] cells the two-level IMI quantizer
-  * ([[TwoLevelCells]], round 7 — √k top cells, per-cell sub-codebooks)
-  * replaces this flat scan, same expression contract per level.
+  * that it hands to the kernel (never per row). Build via
+  * [[TopCells.broadcastOf]]. Past [[graft.operators.Ann.FlatMaxCells]]
+  * cells the two-level IMI quantizer ([[TwoLevelCells]]) replaces this
+  * flat scan, same expression contract per level.
   *
   * MATH CONTRACT (bit-compatible with the [[CosineSimilarity]] +
   * `array_max`-over-structs path it replaces, which the DuckDB oracles
@@ -46,7 +40,7 @@ import org.apache.spark.sql.types._
   * on equal quantized values, exactly the flipped-cid struct tie-break.
   * normX depends only on the input row, so it is hoisted out of the
   * centroid loop — same additions, same result, k× fewer of them.
-  * Interpreted and generated paths run the identical op sequence.
+  * Both eval paths call the one kernel, [[TopCells.compute]].
   *
   * Mismatched input length yields NULL (the [[CosineSimilarity]] length
   * contract); fewer centroids than topN yields the full ranking.
@@ -60,8 +54,6 @@ case class TopCells(
     quantScale: Double)
     extends UnaryExpression with ExpectsInputTypes {
 
-  private val n = math.min(topN, k)
-
   /** cid-major flattened double centroid matrix (interpreted path; the
     * codegen path dereferences the broadcast in its own init). */
   @transient private lazy val flat: Array[Double] = centroids.value
@@ -71,28 +63,40 @@ case class TopCells(
   override def nullable: Boolean = true
   override def prettyName: String = "top_cells"
 
-  override def nullSafeEval(a: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
+  override def nullSafeEval(a: Any): Any =
+    TopCells.compute(a.asInstanceOf[ArrayData], flat, k, dim, topN, quantScale)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val cm = TopCells.broadcastState(ctx, centroids, "double[]", "cellCm")
+    nullSafeCodeGen(ctx, ev, a =>
+      s"""${ev.value} = graft.functions.TopCells.compute(
+         |  $a, $cm, $k, $dim, $topN, ${quantScale}D);
+         |${ev.isNull} = ${ev.value} == null;
+         |""".stripMargin)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): TopCells =
+    copy(child = newChild)
+}
+
+object TopCells {
+
+  /** The per-row kernel both eval paths call: the ids of the `topN` best
+    * of the `k` rows of the cid-major matrix `cm`, or null when `x` is not
+    * `dim` long. The row is widened to doubles once, before the centroid
+    * loop. */
+  def compute(x: ArrayData, cm: Array[Double], k: Int, dim: Int, topN: Int,
+      quantScale: Double): ArrayData = {
     if (x.numElements() != dim) return null
-    val cm = flat
-    var nx = 0.0
-    var i = 0
-    while (i < dim) { val v = x.getFloat(i).toDouble; nx += v * v; i += 1 }
-    val bestQ = Array.fill(n)(Long.MinValue)
+    val xd = new Array[Double](dim)
+    val snx = widen(x, xd)
+    val n = math.min(topN, k)
+    val bestQ = new Array[Long](n)
+    java.util.Arrays.fill(bestQ, Long.MinValue)
     val bestC = new Array[Int](n)
     var cid = 0
     while (cid < k) {
-      var dot = 0.0; var ny = 0.0
-      var j = 0
-      while (j < dim) {
-        val xv = x.getFloat(j).toDouble
-        val yv = cm(cid * dim + j)
-        dot += xv * yv; ny += yv * yv
-        j += 1
-      }
-      val den = math.sqrt(nx) * math.sqrt(ny)
-      val cos = if (den == 0.0) 0.0 else dot / den
-      val q = math.floor(cos * quantScale).toLong
+      val q = qCos(xd, snx, cm, cid, quantScale)
       // strict > keeps the earlier (smaller) cid on equal quantized cosine
       var p = n
       while (p > 0 && q > bestQ(p - 1)) p -= 1
@@ -106,71 +110,43 @@ case class TopCells(
     new GenericArrayData(bestC)
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    // the broadcast handle is the only plan reference; the matrix itself is
-    // fetched once per generated-class instance into mutable state
-    val bcCls = "org.apache.spark.broadcast.Broadcast"
-    val bcRef = ctx.addReferenceObj("cellCentroidsBc", centroids, bcCls)
-    val cm = ctx.addMutableState("double[]", "cellCm",
-      v => s"$v = (double[]) (($bcCls) $bcRef).value();")
-    nullSafeCodeGen(ctx, ev, a => {
-      val nx = ctx.freshName("nx")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val cid = ctx.freshName("cid")
-      val dot = ctx.freshName("dot")
-      val ny = ctx.freshName("ny")
-      val xv = ctx.freshName("xv")
-      val yv = ctx.freshName("yv")
-      val den = ctx.freshName("den")
-      val cos = ctx.freshName("cos")
-      val q = ctx.freshName("q")
-      val bestQ = ctx.freshName("bestQ")
-      val bestC = ctx.freshName("bestC")
-      val p = ctx.freshName("p")
-      val sh = ctx.freshName("sh")
-      val v = ctx.freshName("v")
-      s"""
-         |if ($a.numElements() != $dim) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  double $nx = 0.0;
-         |  for (int $i = 0; $i < $dim; $i++) {
-         |    final double $v = (double) $a.getFloat($i); $nx += $v * $v;
-         |  }
-         |  final long[] $bestQ = new long[$n];
-         |  final int[] $bestC = new int[$n];
-         |  java.util.Arrays.fill($bestQ, Long.MIN_VALUE);
-         |  for (int $cid = 0; $cid < $k; $cid++) {
-         |    double $dot = 0.0; double $ny = 0.0;
-         |    for (int $j = 0; $j < $dim; $j++) {
-         |      final double $xv = (double) $a.getFloat($j);
-         |      final double $yv = $cm[$cid * $dim + $j];
-         |      $dot += $xv * $yv; $ny += $yv * $yv;
-         |    }
-         |    final double $den = java.lang.Math.sqrt($nx) * java.lang.Math.sqrt($ny);
-         |    final double $cos = ($den == 0.0) ? 0.0 : $dot / $den;
-         |    final long $q = (long) java.lang.Math.floor($cos * ${quantScale}D);
-         |    int $p = $n;
-         |    while ($p > 0 && $q > $bestQ[$p - 1]) $p--;
-         |    if ($p < $n) {
-         |      for (int $sh = $n - 1; $sh > $p; $sh--) {
-         |        $bestQ[$sh] = $bestQ[$sh - 1]; $bestC[$sh] = $bestC[$sh - 1];
-         |      }
-         |      $bestQ[$p] = $q; $bestC[$p] = $cid;
-         |    }
-         |  }
-         |  ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($bestC);
-         |}
-       """.stripMargin
-    })
+  /** The value of broadcast `bc` in generated code: the handle is the only
+    * plan reference, and its value is read into mutable state named after
+    * `name` once per operator instance, never per row. */
+  private[functions] def broadcastState(
+      ctx: CodegenContext, bc: Broadcast[_], javaType: String, name: String): String = {
+    val ref = ctx.addReferenceObj(name + "Bc", bc, classOf[Broadcast[_]].getName)
+    ctx.addMutableState(javaType, name, v => s"$v = ($javaType) $ref.value();")
   }
 
-  override protected def withNewChildInternal(newChild: Expression): TopCells =
-    copy(child = newChild)
-}
+  /** Widen `x` into `xd` and return its norm √(Σ x²), accumulated in
+    * element order. */
+  private[functions] def widen(x: ArrayData, xd: Array[Double]): Double = {
+    var nx = 0.0
+    var i = 0
+    while (i < xd.length) { val v = x.getFloat(i).toDouble; xd(i) = v; nx += v * v; i += 1 }
+    math.sqrt(nx)
+  }
 
-object TopCells {
+  /** Quantized cosine of the widened row `xd` (norm `snx`) against row
+    * `rid` of the row-major matrix `m`: dot and ny accumulate in element
+    * order, 0.0 on zero norm, `floor(cos · quantScale)`. */
+  private[functions] def qCos(xd: Array[Double], snx: Double, m: Array[Double], rid: Int,
+      quantScale: Double): Long = {
+    val dim = xd.length
+    var dot = 0.0; var ny = 0.0
+    var j = 0
+    while (j < dim) {
+      val xv = xd(j)
+      val yv = m(rid * dim + j)
+      dot += xv * yv; ny += yv * yv
+      j += 1
+    }
+    val den = snx * math.sqrt(ny)
+    val cos = if (den == 0.0) 0.0 else dot / den
+    math.floor(cos * quantScale).toLong
+  }
+
   /** Broadcast the centroid matrix ONCE and return the expression factory —
     * the only sanctioned way to build [[TopCells]]: every consumer of one
     * codebook shares one broadcast, and the plan carries a handle, not the

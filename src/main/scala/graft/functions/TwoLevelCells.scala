@@ -31,13 +31,9 @@ import org.apache.spark.sql.types._
   * JVM and codegen dereferences `.value()` once per operator instance into
   * mutable state. The driver still materializes both matrices ONCE at
   * train time — they ARE the trained model artifact — but never touches
-  * them per row or per query. If even that one-time k·dim collect must
-  * go (k beyond ~10⁸ leaves), the documented next rung is the PRODUCT
-  * decomposition (Babenko & Lempitsky's original IMI): two independent
-  * √k-entry codebooks over the two HALVES of the vector, cell =
-  * (a, b) — O(√k·dim) total codebook state for the same k leaves, at
-  * the cost of axis-aligned cell geometry; the expression contract
-  * (two broadcasts, one projection) is unchanged.
+  * them per row or per query. Past ~10⁸ leaves that one-time k·dim
+  * collect goes too: [[ProductCells]], the product decomposition, keeps
+  * O(√k·dim) codebook state under the same two-broadcast contract.
   *
   * MATH CONTRACT (the [[TopCells]] contract per candidate row): per
   * centroid, dot/normX/normY accumulate left-to-right in element order
@@ -47,7 +43,7 @@ import org.apache.spark.sql.types._
   * explicit (q, cid) comparator — level-2 candidates arrive in top-cell
   * quality order, not cid order, so the [[TopCells]] trick of relying on
   * ascending iteration + strict `>` would mis-break cross-top-cell ties.
-  * Interpreted and generated paths run the identical op sequence.
+  * Both eval paths call the one kernel, [[TwoLevelCells.compute]].
   *
   * Semantics note: two-level assignment is the standard IVF approximation
   * — a vector whose true best leaf hides under a non-top top cell gets its
@@ -72,9 +68,6 @@ case class TwoLevelCells(
     quantScale: Double)
     extends UnaryExpression with ExpectsInputTypes {
 
-  private val p = math.min(pTop, kTop)
-  private val n = math.min(topN, p * subK)
-
   @transient private lazy val topFlat: Array[Double] = top.value
   @transient private lazy val subFlat: Array[Double] = sub.value
 
@@ -83,43 +76,49 @@ case class TwoLevelCells(
   override def nullable: Boolean = true
   override def prettyName: String = "two_level_cells"
 
-  override def nullSafeEval(a: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
+  override def nullSafeEval(a: Any): Any =
+    TwoLevelCells.compute(a.asInstanceOf[ArrayData], topFlat, subFlat, kTop, subK, dim,
+      pTop, topN, quantScale)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val tm = TopCells.broadcastState(ctx, top, "double[]", "imiTop")
+    val sm = TopCells.broadcastState(ctx, sub, "double[]", "imiSub")
+    nullSafeCodeGen(ctx, ev, a =>
+      s"""${ev.value} = graft.functions.TwoLevelCells.compute(
+         |  $a, $tm, $sm, $kTop, $subK, $dim, $pTop, $topN, ${quantScale}D);
+         |${ev.isNull} = ${ev.value} == null;
+         |""".stripMargin)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): TwoLevelCells =
+    copy(child = newChild)
+}
+
+object TwoLevelCells {
+
+  /** The per-row kernel both eval paths call: the `topN` best leaf ids
+    * under the `pTop` best top cells, or null when `x` is not `dim` long.
+    * The row is widened to doubles once, before the centroid loops. */
+  def compute(x: ArrayData, tm: Array[Double], sm: Array[Double], kTop: Int, subK: Int,
+      dim: Int, pTop: Int, topN: Int, quantScale: Double): ArrayData = {
     if (x.numElements() != dim) return null
-    var nx = 0.0
-    var i = 0
-    while (i < dim) { val v = x.getFloat(i).toDouble; nx += v * v; i += 1 }
-    val snx = math.sqrt(nx)
-    // quantized cosine of the row against matrix row `rid` of `m`
-    def qCos(m: Array[Double], rid: Int): Long = {
-      var dot = 0.0; var ny = 0.0
-      var j = 0
-      while (j < dim) {
-        val xv = x.getFloat(j).toDouble
-        val yv = m(rid * dim + j)
-        dot += xv * yv; ny += yv * yv
-        j += 1
-      }
-      val den = snx * math.sqrt(ny)
-      val cos = if (den == 0.0) 0.0 else dot / den
-      math.floor(cos * quantScale).toLong
-    }
-    // (q DESC, cid ASC) insertion into parallel best arrays
-    def insert(bq: Array[Long], bc: Array[Int], len: Int, q: Long, cid: Int): Unit = {
-      var at = len
-      while (at > 0 && (q > bq(at - 1) || (q == bq(at - 1) && cid < bc(at - 1)))) at -= 1
-      if (at < len) {
-        var s = len - 1
-        while (s > at) { bq(s) = bq(s - 1); bc(s) = bc(s - 1); s -= 1 }
-        bq(at) = q; bc(at) = cid
-      }
-    }
-    val topQ = Array.fill(p)(Long.MinValue)
-    val topC = Array.fill(p)(Int.MaxValue)
+    val xd = new Array[Double](dim)
+    val snx = TopCells.widen(x, xd)
+    val p = math.min(pTop, kTop)
+    val n = math.min(topN, p * subK)
+    val topQ = new Array[Long](p)
+    val topC = new Array[Int](p)
+    java.util.Arrays.fill(topQ, Long.MinValue)
+    java.util.Arrays.fill(topC, Int.MaxValue)
     var t = 0
-    while (t < kTop) { insert(topQ, topC, p, qCos(topFlat, t), t); t += 1 }
-    val bestQ = Array.fill(n)(Long.MinValue)
-    val bestC = Array.fill(n)(Int.MaxValue)
+    while (t < kTop) {
+      insert(topQ, topC, p, TopCells.qCos(xd, snx, tm, t, quantScale), t)
+      t += 1
+    }
+    val bestQ = new Array[Long](n)
+    val bestC = new Array[Int](n)
+    java.util.Arrays.fill(bestQ, Long.MinValue)
+    java.util.Arrays.fill(bestC, Int.MaxValue)
     var pi = 0
     while (pi < p) {
       val tc = topC(pi)
@@ -127,7 +126,7 @@ case class TwoLevelCells(
         var s = 0
         while (s < subK) {
           val cid = tc * subK + s
-          insert(bestQ, bestC, n, qCos(subFlat, cid), cid)
+          insert(bestQ, bestC, n, TopCells.qCos(xd, snx, sm, cid, quantScale), cid)
           s += 1
         }
       }
@@ -136,107 +135,17 @@ case class TwoLevelCells(
     new GenericArrayData(bestC)
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val bcCls = "org.apache.spark.broadcast.Broadcast"
-    val topRef = ctx.addReferenceObj("imiTopBc", top, bcCls)
-    val subRef = ctx.addReferenceObj("imiSubBc", sub, bcCls)
-    val tm = ctx.addMutableState("double[]", "imiTop",
-      v => s"$v = (double[]) (($bcCls) $topRef).value();")
-    val sm = ctx.addMutableState("double[]", "imiSub",
-      v => s"$v = (double[]) (($bcCls) $subRef).value();")
-    nullSafeCodeGen(ctx, ev, a => {
-      val nx = ctx.freshName("nx")
-      val snx = ctx.freshName("snx")
-      val i = ctx.freshName("i")
-      val v = ctx.freshName("v")
-      val topQ = ctx.freshName("topQ")
-      val topC = ctx.freshName("topC")
-      val bestQ = ctx.freshName("bestQ")
-      val bestC = ctx.freshName("bestC")
-      val t = ctx.freshName("t")
-      val pi = ctx.freshName("pi")
-      val tc = ctx.freshName("tc")
-      val sc = ctx.freshName("sc")
-      val cid = ctx.freshName("cid")
-      val q = ctx.freshName("q")
-      val at = ctx.freshName("at")
-      val sh = ctx.freshName("sh")
-      val dot = ctx.freshName("dot")
-      val ny = ctx.freshName("ny")
-      val j = ctx.freshName("j")
-      val xv = ctx.freshName("xv")
-      val yv = ctx.freshName("yv")
-      val den = ctx.freshName("den")
-      val cos = ctx.freshName("cos")
-      // one quantized-cosine body, emitted twice (top / sub matrix): same
-      // op sequence as the interpreted qCos
-      def qCosInto(m: String, rid: String, out: String): String =
-        s"""double $dot = 0.0; double $ny = 0.0;
-           |for (int $j = 0; $j < $dim; $j++) {
-           |  final double $xv = (double) $a.getFloat($j);
-           |  final double $yv = $m[$rid * $dim + $j];
-           |  $dot += $xv * $yv; $ny += $yv * $yv;
-           |}
-           |final double $den = $snx * java.lang.Math.sqrt($ny);
-           |final double $cos = ($den == 0.0) ? 0.0 : $dot / $den;
-           |final long $out = (long) java.lang.Math.floor($cos * ${quantScale}D);
-           |""".stripMargin
-      // NOTE: the emitted snippets are re-embedded in a stripMargin'ed
-      // template, so no generated line may START with '|' (a leading `||`
-      // would be eaten as a margin marker)
-      def insertInto(bq: String, bc: String, len: Int, qv: String, cv: String): String =
-        s"""int $at = $len;
-           |while ($at > 0 && ($qv > $bq[$at - 1] ||
-           |    ($qv == $bq[$at - 1] && $cv < $bc[$at - 1]))) $at--;
-           |if ($at < $len) {
-           |  for (int $sh = $len - 1; $sh > $at; $sh--) {
-           |    $bq[$sh] = $bq[$sh - 1]; $bc[$sh] = $bc[$sh - 1];
-           |  }
-           |  $bq[$at] = $qv; $bc[$at] = $cv;
-           |}
-           |""".stripMargin
-      s"""
-         |if ($a.numElements() != $dim) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  double $nx = 0.0;
-         |  for (int $i = 0; $i < $dim; $i++) {
-         |    final double $v = (double) $a.getFloat($i); $nx += $v * $v;
-         |  }
-         |  final double $snx = java.lang.Math.sqrt($nx);
-         |  final long[] $topQ = new long[$p];
-         |  final int[] $topC = new int[$p];
-         |  java.util.Arrays.fill($topQ, Long.MIN_VALUE);
-         |  java.util.Arrays.fill($topC, Integer.MAX_VALUE);
-         |  for (int $t = 0; $t < $kTop; $t++) {
-         |    ${qCosInto(tm, t, q)}
-         |    ${insertInto(topQ, topC, p, q, t)}
-         |  }
-         |  final long[] $bestQ = new long[$n];
-         |  final int[] $bestC = new int[$n];
-         |  java.util.Arrays.fill($bestQ, Long.MIN_VALUE);
-         |  java.util.Arrays.fill($bestC, Integer.MAX_VALUE);
-         |  for (int $pi = 0; $pi < $p; $pi++) {
-         |    final int $tc = $topC[$pi];
-         |    if ($tc != Integer.MAX_VALUE) {
-         |      for (int $sc = 0; $sc < $subK; $sc++) {
-         |        final int $cid = $tc * $subK + $sc;
-         |        ${qCosInto(sm, cid, q + "2")}
-         |        ${insertInto(bestQ, bestC, n, q + "2", cid)}
-         |      }
-         |    }
-         |  }
-         |  ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($bestC);
-         |}
-       """.stripMargin
-    })
+  /** (q DESC, cid ASC) insertion into parallel best arrays of length `len`. */
+  private def insert(bq: Array[Long], bc: Array[Int], len: Int, q: Long, cid: Int): Unit = {
+    var at = len
+    while (at > 0 && (q > bq(at - 1) || (q == bq(at - 1) && cid < bc(at - 1)))) at -= 1
+    if (at < len) {
+      var s = len - 1
+      while (s > at) { bq(s) = bq(s - 1); bc(s) = bc(s - 1); s -= 1 }
+      bq(at) = q; bc(at) = cid
+    }
   }
 
-  override protected def withNewChildInternal(newChild: Expression): TwoLevelCells =
-    copy(child = newChild)
-}
-
-object TwoLevelCells {
   /** Broadcast both codebook levels ONCE and return the handles (round 8,
     * ADVICE): a quantizer instance calls this once and reuses the pair
     * across every assign/probe it builds — the per-call broadcastOf shape

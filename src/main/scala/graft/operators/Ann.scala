@@ -1327,16 +1327,6 @@ object Ann {
         // multiply-adds per row, sub-second planning
         def codesOf(cb: Vector[Vector[Float]]): Column =
           onEmbedding(PqEncode(_, cb, mCount, D2QuantScale))
-        def d2qScala(a: Array[Float], cw: Int => Double, m: Int): Long = {
-          var acc = 0.0
-          var i = m * subDim
-          while (i < (m + 1) * subDim) {
-            val diff = a(i).toDouble - cw(i)
-            acc += diff * diff
-            i += 1
-          }
-          math.floor(acc * D2QuantScale).toLong
-        }
         val cb0: Vector[Vector[Float]] = seeds.map(_._2.toVector).toVector
         val e = Tables.t(s, d, "embeddings")
         // one Lloyd iteration per subspace: explode each row into its M
@@ -1381,14 +1371,17 @@ object Ann {
           .sortBy(_._1)
         // ONE stacked ADC lookup table for ALL queries (round 7, VERDICT
         // item 7): query-major slabs of the same (m-major, Ks-entry)
-        // per-query tables, folded with the same left-assoc op tree as
-        // PqEncode and the SQL; travels as ONE broadcast behind ONE
-        // expression — plan references are constant in NumQueries
+        // per-query tables, folded by PqEncode's own d² kernel (the SQL
+        // spells out the same left-assoc op tree); travels as ONE
+        // broadcast behind ONE expression — plan references are constant
+        // in NumQueries
+        val cb1d = cb1.map(_.map(_.toDouble).toArray)
         val lutAll: Vector[Long] = (for {
           (_, qe) <- qvecs.toVector
+          qd = qe.map(_.toDouble)
           m <- 0 until mCount
           k <- seeds.indices
-        } yield d2qScala(qe, i => cb1(k)(i).toDouble, m)).toVector
+        } yield PqEncode.d2q(qd, m * subDim, subDim, cb1d(k), m * subDim, D2QuantScale)).toVector
         val adcFactory = graft.functions.PqAdcMulti.broadcastOf(
           s, lutAll, mCount, seeds.size, qvecs.length)
         // queries as a broadcast RELATION: (query_id, qidx slab key, qe)

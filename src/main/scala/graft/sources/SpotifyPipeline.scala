@@ -93,14 +93,12 @@ final class SpotifyPipeline(source: SpotifySource) {
     * stage that fetches the pages. A dependent runs no job before the fill
     * of the extract it reads is done, so no extract is paginated twice.
     * No table waits on another table's JDBC write. A table that reads
-    * several extracts (audio_features) also plans its load while it waits:
-    * once the first of them is filled, it forces its staged frame's `rdd`,
-    * which the sink's `saveTable` reuses, so its write starts its one job
-    * without planning first. Planning runs no job and sends no request,
-    * since no ETL plan has an exchange. It waits for a fill so that the
-    * planning stays clear of the plan builds and the first fills at the
-    * start. Past the plan builds at the start and the last writes at the
-    * end, the critical path is HTTP.
+    * other extracts (playlists_tracks, audio_features) also plans its load
+    * while it waits: once its plan is built, it forces its staged frame's
+    * `rdd`, which the sink's `saveTable` reuses, so its write starts its
+    * one job without planning first. Planning runs no job and sends no
+    * request, since no ETL plan has an exchange. Past the plan builds at
+    * the start and the last writes at the end, the critical path is HTTP.
     *
     * The extracts land in the caller's open Caches scope if it has one,
     * else in the session registry, as they do with [[run]].
@@ -128,22 +126,20 @@ final class SpotifyPipeline(source: SpotifySource) {
         Future(graft.Caches.within(scope) {
           val df = Try(extract(nodes, n, await(built, n.inputs)))
           built(n.name).complete(df)
-          // a table that reads several extracts plans its load once the
-          // first is filled, while it waits for the rest
-          val early = df.toOption.filter(_ => n.inputs.size > 1).map { df =>
-            val first = Future.firstCompletedOf(n.inputs.map(filled(_).future))(ExecutionContext.parasitic)
-            Await.ready(first, Duration.Inf)
+          // a table that reads other extracts plans its load while it
+          // waits for their fills
+          val plan = df.flatMap(df => Try {
             val staged = JdbcReplaceSink.stage(df, ingestTs)
-            staged.rdd
+            if (n.inputs.nonEmpty) staged.rdd
             staged
-          }
+          })
           val ready = df.map { df =>
             await(filled, n.inputs)
             if (shared(nodes, n)) graft.Caches.fill(df)
             df
           }
           filled(n.name).complete(ready)
-          val staged = ready.map(df => early.getOrElse(JdbcReplaceSink.stage(df, ingestTs))).get
+          val staged = ready.flatMap(_ => plan).get
           write(n.name, staged)
           n.name -> staged
         })

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, NativeColumn}
+import org.apache.spark.sql.{Column, DataFrame, NativeColumn, Row}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
@@ -23,6 +23,32 @@ class PropertySpec extends AnyFunSuite {
 
   private def samples[A](g: Gen[A], n: Int): Seq[A] =
     (1 to n).flatMap(i => g.apply(Gen.Parameters.default, Seed(42L + i)))
+
+  /** `in` projected onto `c` (as column `c`) and collected through
+    * whole-stage generated code. A local `toDF` input would otherwise be
+    * folded by `ConvertToLocalRelation`, which evaluates the projection on
+    * the driver with the interpreted path, so that rule is excluded here;
+    * codegen fallback is off, so a generated class that does not compile
+    * fails the test instead of running interpreted; and the executed plan
+    * must hold the projection inside a `*(n)` codegen span. */
+  private def generated(in: => DataFrame, c: Column): Array[Row] = {
+    val confs = Seq(
+      "spark.sql.optimizer.excludedRules" ->
+        "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation",
+      "spark.sql.codegen.fallback" -> "false")
+    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      val df = in.select(c.as("c"))
+      val plan = df.queryExecution.executedPlan.toString
+      assert("""(?m)^\*\(\d+\) Project \[""".r.findFirstIn(plan).nonEmpty,
+        s"the projection is not in a whole-stage codegen span:\n$plan")
+      df.collect()
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 
   test("union-distinct is idempotent and commutative (reference C2 law)") {
     val lists = Gen.listOfN(30, Gen.chooseNum(-5, 5))
@@ -148,25 +174,76 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("PqEncode: interpreted eval equals the codegen path on random vectors") {
-    // the dual-path contract every native expression owes (SURVEY §7.3):
-    // the generated Java and nullSafeEval must run the identical op
-    // sequence. Random float vectors + a random codebook; the DataFrame
-    // path (whole-stage codegen) must agree with direct interpreted eval.
+    // the one-kernel rule every native expression follows (SURVEY §7.3):
+    // nullSafeEval and the generated code both call the companion's static
+    // kernel, so the two paths must agree. Random float vectors + a random
+    // codebook; the generated path must agree with direct interpreted eval.
     import graft.functions.PqEncode
     import org.apache.spark.sql.catalyst.util.GenericArrayData
     val vecGen = Gen.listOfN(16, Gen.chooseNum(-1.0f, 1.0f))
     val cb: Vector[Vector[Float]] =
       samples(vecGen, 8).map(_.toVector).toVector
     val rows: Seq[Seq[Float]] = samples(vecGen, 40).map(_.toSeq)
-    val viaCodegen = rows.toDF("embedding")
-      .select(onEmbedding(PqEncode(_, cb, 4, 1e12)).as("c"))
-      .collect().map(_.getSeq[Int](0).toVector).toSeq
+    val viaCodegen = generated(rows.toDF("embedding"), onEmbedding(PqEncode(_, cb, 4, 1e12)))
+      .map(_.getSeq[Int](0).toVector).toSeq
     val direct = rows.map { v =>
       PqEncode(org.apache.spark.sql.catalyst.expressions.Literal(0), cb, 4, 1e12)
         .nullSafeEval(new GenericArrayData(v.toArray))
         .asInstanceOf[GenericArrayData].toIntArray().toVector
     }
     assert(viaCodegen === direct)
+  }
+
+  test("CosineSimilarity: interpreted eval equals the codegen path; mismatched lengths are NULL") {
+    import graft.functions.CosineSimilarity
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    val vs = samples(Gen.listOfN(8, Gen.chooseNum(-1.0f, 1.0f)), 40)
+    // every 5th pair has a 7-long right side; a zero vector scores 0.0
+    val rows: Seq[(Seq[Float], Seq[Float])] =
+      vs.zip(vs.reverse).zipWithIndex.map { case ((x, y), i) =>
+        if (i % 5 == 0) (x, y.take(7)) else (x, y)
+      } :+ ((Seq.fill(8)(0.0f), vs.head))
+    val cos = NativeColumn(CosineSimilarity(
+      NativeColumn.expression(col("x")), NativeColumn.expression(col("y"))))
+    val viaCodegen = generated(rows.toDF("x", "y"), cos)
+      .map(r => if (r.isNullAt(0)) None else Some(r.getDouble(0))).toSeq
+    val direct = rows.map { case (x, y) =>
+      Option(CosineSimilarity(Literal(0), Literal(0))
+        .nullSafeEval(new GenericArrayData(x.toArray), new GenericArrayData(y.toArray)))
+        .map(_.asInstanceOf[Double])
+    }
+    assert(viaCodegen === direct)
+    assert(rows.zip(viaCodegen).forall { case ((x, y), got) => got.isEmpty == (x.size != y.size) })
+    assert(viaCodegen.last === Some(0.0))
+  }
+
+  test("PqAdcMulti: interpreted eval equals the codegen path; an out-of-range qidx fails alike") {
+    import graft.functions.PqAdcMulti
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    val m = 4; val ks = 6; val nQ = 3
+    val lut = samples(Gen.chooseNum(0L, 1L << 40), nQ * m * ks).toVector
+    val rows: Seq[(Seq[Int], Int)] =
+      samples(Gen.listOfN(m, Gen.chooseNum(0, ks - 1)), 40).zipWithIndex
+        .map { case (codes, i) => (codes, i % nQ) }
+    val factory = PqAdcMulti.broadcastOf(spark, lut, m, ks, nQ)
+    val adc = NativeColumn(factory(
+      NativeColumn.expression(col("codes")), NativeColumn.expression(col("qidx"))))
+    def direct(codes: Seq[Int], qidx: Int): Any =
+      factory(Literal(0), Literal(0)).nullSafeEval(new GenericArrayData(codes.toArray), qidx)
+    val viaCodegen = generated(rows.toDF("codes", "qidx"), adc).map(_.getLong(0)).toSeq
+    assert(viaCodegen === rows.map { case (codes, q) => direct(codes, q) })
+    assert(viaCodegen === rows.map { case (codes, q) =>
+      codes.indices.map(i => lut(q * m * ks + i * ks + codes(i))).sum
+    })
+    for (bad <- Seq(nQ, -1)) {
+      val want = intercept[IllegalArgumentException](direct(rows.head._1, bad)).getMessage
+      assert(want === s"pq_adc_multi: query index $bad outside stacked LUT ($nQ slabs of ${m * ks} entries)")
+      val e = intercept[Exception](generated(Seq((rows.head._1, bad)).toDF("codes", "qidx"), adc))
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => Option(t.getMessage).exists(_.contains(want))), e)
+    }
   }
 
   test("q_dedup_incremental: planted near-dup reports new->index, never the reverse") {
@@ -367,9 +444,8 @@ class PropertySpec extends AnyFunSuite {
       samples(vecGen, 12).map(_.toVector).toVector
     val rows: Seq[Seq[Float]] = samples(vecGen, 40).map(_.toSeq)
     val factory = TopCells.broadcastOf(spark, cents, 3, 1e12)
-    val viaCodegen = rows.toDF("embedding")
-      .select(onEmbedding(factory).as("c"))
-      .collect().map(_.getSeq[Int](0).toVector).toSeq
+    val viaCodegen = generated(rows.toDF("embedding"), onEmbedding(factory))
+      .map(_.getSeq[Int](0).toVector).toSeq
     val direct = rows.map { v =>
       factory(org.apache.spark.sql.catalyst.expressions.Literal(0))
         .nullSafeEval(new GenericArrayData(v.toArray))
@@ -445,9 +521,8 @@ class PropertySpec extends AnyFunSuite {
         (child: org.apache.spark.sql.catalyst.expressions.Expression) =>
           ProductCells(child, aBc, bBc, kA, kB, 8, pSide, topN, 1e12)
       }
-      val viaCodegen = rows.toDF("embedding")
-        .select(onEmbedding(mk).as("c"))
-        .collect().map(_.getSeq[Int](0).toVector).toSeq
+      val viaCodegen = generated(rows.toDF("embedding"), onEmbedding(mk))
+        .map(_.getSeq[Int](0).toVector).toSeq
       val direct = rows.map { v =>
         mk(org.apache.spark.sql.catalyst.expressions.Literal(0))
           .nullSafeEval(new GenericArrayData(v.toArray))
@@ -595,9 +670,8 @@ class PropertySpec extends AnyFunSuite {
       samples(vecGen, kTop * subK).map(_.toVector).toVector
     val rows: Seq[Seq[Float]] = samples(vecGen, 40).map(_.toSeq)
     val factory = TwoLevelCells.broadcastOf(spark, top, sub, subK, pTop, topN, 1e12)
-    val viaCodegen = rows.toDF("embedding")
-      .select(onEmbedding(factory).as("c"))
-      .collect().map(_.getSeq[Int](0).toVector).toSeq
+    val viaCodegen = generated(rows.toDF("embedding"), onEmbedding(factory))
+      .map(_.getSeq[Int](0).toVector).toSeq
     val direct = rows.map { v =>
       factory(org.apache.spark.sql.catalyst.expressions.Literal(0))
         .nullSafeEval(new GenericArrayData(v.toArray))

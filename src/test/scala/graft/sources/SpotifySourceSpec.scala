@@ -373,9 +373,9 @@ class SpotifySourceSpec extends AnyFunSuite with BeforeAndAfterEach {
   }
 
   test("runConcurrent: audio_features plans its load without a job or a request") {
-    // The fan-out's first page is held, so audio_features plans its load
-    // after the saved_tracks fill and before the playlists_tracks fill
-    // ends. Each table is then loaded into Derby by one job of its own.
+    // The fan-out's first page is held. audio_features plans its load as
+    // soon as its plan is built, before the playlists_tracks fill ends.
+    // Each table is then loaded into Derby by one job of its own.
     val url = "jdbc:derby:memory:spotify_source_spec;create=true"
     val requestedAt = new ConcurrentLinkedQueue[(String, Long)]()
     FakeHttp.reset { u =>
