@@ -31,6 +31,15 @@ if [ -n "$templates" ]; then
   exit 1
 fi
 
+# One exact dyadic log2: its squaring recurrence lives only in
+# graft/functions/Log2Q.scala; operators call log2q (Log2Q.col / Log2Q.sql).
+squaring="$(grep -rnE 'm2 >= |\(m\*m\)//' src/main/scala/graft/operators || true)"
+if [ -n "$squaring" ]; then
+  echo "dyadic-log2 squaring step under src/main/scala/graft/operators (use Log2Q):"
+  echo "$squaring"
+  exit 1
+fi
+
 sbt -batch test
 
 # Leak gate: every graft_* entry a Verify run creates in the JVM's temp dir

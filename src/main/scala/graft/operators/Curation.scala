@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{GQ, Tables, XHash}
-import graft.functions.cms
+import graft.functions.{Log2Q, cms}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -889,76 +889,36 @@ object Curation {
     // Determinism (R3: no rand()): u = (h+1)/2^60 with h = h60(doc_id) —
     // pure data math, identical on any engine/cluster. The key is carried
     // EXACTLY: -log2(u) = 60 - log2(h+1), where log2(h+1) is the dyadic
-    // log2 (e = bitlen(h+1)-1; 10 mantissa bits via m ← m² div 2^30).
-    // Unlike the perplexity/BM25 chains, the operand here reaches 2^60, so
-    // the mantissa normalization n·2^30 div 2^e is rewritten shift-safe as
-    // n div 2^(e-30) for e ≥ 30 (n·2^30 has 30 zero low bits — floor-div
-    // by 2^e discards exactly e of them, so the forms are EQUAL, and no
-    // intermediate exceeds 2^60) and n·2^(30-e) otherwise. key_q =
+    // log2 `log2q(h+1, 1)` ([[graft.functions.Log2Q]]; its operand here
+    // reaches 2^60, inside the kernel's range). key_q =
     // (L << 20) div w keeps 2^20 sub-unit resolution before the weight
     // division so distinct (L, w) pairs stay distinct; ties → doc_id (R1).
     //
-    // Plan shape (100 TB): ONE scan-side integer projection (hash + two
-    // CASE shifts + 10 squaring steps, all codegen'd, no shuffle) into
+    // Plan shape (100 TB): ONE scan-side integer projection (hash +
+    // log2q, all codegen'd, no shuffle) into
     // TakeOrderedAndProject(20) — the corpus is scanned once and only 20
     // rows ever leave an executor. The classic alternative (global sort by
     // rand()) is a full shuffle AND non-reproducible; this is neither.
     GQ(
       "q_sample_weighted",
       (s, d) => {
-        val M = 1L << 30
-        val H = 1L << 31
-        var df = Tables.t(s, d, "documents")
+        Tables.t(s, d, "documents")
           .select(col("doc_id"), col("n_chars"),
             greatest(col("n_chars"), lit(1L)).as("w"),
-            (XHash.h60(concat(lit("wsample:"), col("doc_id").cast(StringType)))
-              + 1L).as("n"))
-          .withColumn("e", (length(bin(col("n"))) - 1).cast(IntegerType))
-          .withColumn("m", expr(
-            s"CASE WHEN e >= 30 THEN n div shiftleft(1L, e - 30) " +
-              s"ELSE n * shiftleft(1L, 30 - e) END"))
-          .withColumn("f", lit(0L))
-        for (_ <- 1 to 10) {
-          df = df
-            .withColumn("m2", expr(s"(m * m) div ${M}L"))
-            .withColumn("f",
-              expr(s"f * 2 + (CASE WHEN m2 >= ${H}L THEN 1 ELSE 0 END)"))
-            .withColumn("m",
-              expr(s"CASE WHEN m2 >= ${H}L THEN m2 div 2 ELSE m2 END"))
-        }
-        df.select(col("doc_id"), col("n_chars"),
-            expr(s"shiftleft(${60L * 1024}L - (CAST(e AS BIGINT) * 1024 + f), 20) div w")
-              .as("key_q"))
+            Log2Q.col(XHash.h60(concat(lit("wsample:"),
+              col("doc_id").cast(StringType))) + 1L, lit(1L)).as("l"))
+          .select(col("doc_id"), col("n_chars"),
+            expr(s"shiftleft(${60L * 1024}L - l, 20) div w").as("key_q"))
           .orderBy(col("key_q"), col("doc_id"))
           .limit(20)
       },
-      Some {
-        val M = 1L << 30
-        val H = 1L << 31
-        def step(j: Int): String = {
-          val prev = if (j == 1) "i0" else s"s${j - 1}"
-          s"""s$j AS (SELECT doc_id, n_chars, w, e,
-             |    CASE WHEN (m*m)//$M >= $H THEN ((m*m)//$M)//2
-             |         ELSE (m*m)//$M END AS m,
-             |    f*2 + CASE WHEN (m*m)//$M >= $H THEN 1 ELSE 0 END AS f
-             |  FROM $prev)"""
-        }
-        s"""WITH d0 AS (SELECT doc_id, n_chars,
+      Some(s"""WITH d0 AS (SELECT doc_id, n_chars,
            |    GREATEST(n_chars, 1) AS w,
            |    ${XHash.sqlH60("'wsample:' || CAST(doc_id AS VARCHAR)")} + 1
-           |      AS n FROM documents),
-           |i0 AS (SELECT doc_id, n_chars, w,
-           |    CAST(length(bin(n)) - 1 AS BIGINT) AS e,
-           |    CASE WHEN length(bin(n)) - 1 >= 30
-           |      THEN n // (1::BIGINT << CAST(length(bin(n)) - 31 AS INTEGER))
-           |      ELSE n * (1::BIGINT << CAST(31 - length(bin(n)) AS INTEGER))
-           |    END AS m,
-           |    0::BIGINT AS f FROM d0),
-           |${(1 to 10).map(step).mkString(",\n")}
+           |      AS n FROM documents)
            |SELECT doc_id, n_chars,
-           |  ((${60L * 1024} - (e * 1024 + f)) << 20) // w AS key_q
-           |FROM s10 ORDER BY key_q, doc_id LIMIT 20""".stripMargin
-      }
+           |  ((${60L * 1024} - ${Log2Q.sql("n", "1")}) << 20) // w AS key_q
+           |FROM d0 ORDER BY key_q, doc_id LIMIT 20""".stripMargin)
     ),
     // Mergeable sketch tiles + rollup (round 4) — THE precomputed-
     // aggregate pattern at warehouse scale: per-(lang, source) HLL
@@ -979,7 +939,8 @@ object Curation {
     // runs in DECIMAL(38)/HUGEINT (4.2e27 > 2^63), floor-div identical
     // both engines; small-range linear counting m·ln(m/z) carries
     // ln(m/z) = log2(m/z)·ln2 via the SAME dyadic log2 as
-    // q_text_perplexity and ln2 = 693147/10^6 — every step integer.
+    // q_text_perplexity (`log2q`) and ln2 = 693147/10^6 — every step
+    // integer.
     //
     // Plan shape (100 TB): ONE corpus-scale agg (the tile build — keyed
     // (lang, source, idx), map-side combinable); everything downstream is
@@ -989,8 +950,6 @@ object Curation {
     GQ(
       "q_sketch_rollup",
       (s, d) => {
-        val M = 1L << 30
-        val H = 1L << 31
         val m = 256
         val words = Tables.t(s, d, "documents")
           .select(col("lang"), col("source"),
@@ -1014,7 +973,7 @@ object Curation {
         def estimate(regs: org.apache.spark.sql.DataFrame, out: String) = {
           val grid = regs.select(col("lang")).distinct()
             .crossJoin(broadcast(s.range(m).select(col("id").as("idx"))))
-          var est = grid.join(regs, Seq("lang", "idx"), "left")
+          grid.join(regs, Seq("lang", "idx"), "left")
             .select(col("lang"), coalesce(col("r"), lit(0L)).as("r"))
             .groupBy(col("lang"))
             .agg(
@@ -1023,24 +982,12 @@ object Curation {
             .withColumn("raw", expr(
               s"CAST((CAST(7182726 AS DECIMAL(38,0)) * $m * $m * ${1L << 53}L)" +
                 s" div (CAST(10000000 AS DECIMAL(38,0)) * sreg) AS BIGINT)"))
-            .withColumn("e",
-              when(col("z") > 0, length(bin(expr(s"$m div z"))) - 1))
-            .withColumn("mm", when(col("z") > 0,
-              expr(s"($m * ${M}L) div (z * shiftleft(1L, e))")))
-            .withColumn("f", when(col("z") > 0, lit(0L)))
-          for (_ <- 1 to 10) {
-            est = est
-              .withColumn("m2", expr(s"(mm * mm) div ${M}L"))
-              .withColumn("f",
-                expr(s"f * 2 + (CASE WHEN m2 >= ${H}L THEN 1 ELSE 0 END)"))
-              .withColumn("mm",
-                expr(s"CASE WHEN m2 >= ${H}L THEN m2 div 2 ELSE m2 END"))
-          }
-          est.select(col("lang"),
-            when(col("z") > 0 && col("raw") <= lit(5L * m / 2),
-              expr(s"($m * (CAST(e AS BIGINT) * 1024 + f) * 693147)" +
-                s" div ${1024L * 1000000}L"))
-              .otherwise(col("raw")).as(out))
+            .withColumn("lq",
+              when(col("z") > 0, Log2Q.col(lit(m.toLong), col("z"))))
+            .select(col("lang"),
+              when(col("z") > 0 && col("raw") <= lit(5L * m / 2),
+                expr(s"($m * lq * 693147) div ${1024L * 1000000}L"))
+                .otherwise(col("raw")).as(out))
         }
         val exact = words.select(col("lang"), col("word")).distinct()
           .groupBy(col("lang")).agg(count(lit(1)).as("n_exact"))
@@ -1055,17 +1002,7 @@ object Curation {
           .orderBy(col("lang"))
       },
       Some {
-        val M = 1L << 30
-        val H = 1L << 31
-        def estSql(src: String, tag: String): String = {
-          def step(j: Int): String = {
-            val prev = if (j == 1) s"lc0_$tag" else s"ch${j - 1}_$tag"
-            s"""ch${j}_$tag AS (SELECT lang, raw, z, e,
-               |    CASE WHEN (mm*mm)//$M >= $H THEN ((mm*mm)//$M)//2
-               |         ELSE (mm*mm)//$M END AS mm,
-               |    f*2 + CASE WHEN (mm*mm)//$M >= $H THEN 1 ELSE 0 END AS f
-               |  FROM $prev)"""
-          }
+        def estSql(src: String, tag: String): String =
           s"""grid_$tag AS (SELECT l.lang, g.idx
              |  FROM (SELECT DISTINCT lang FROM $src) l, range(256) g(idx)),
              |rr_$tag AS (SELECT gx.lang, COALESCE(t.r, 0) AS r
@@ -1075,21 +1012,15 @@ object Curation {
              |    CAST(SUM(1::BIGINT << CAST(53 - r AS INTEGER)) AS BIGINT) AS sreg,
              |    CAST(COUNT(*) FILTER (WHERE r = 0) AS BIGINT) AS z
              |  FROM rr_$tag GROUP BY 1),
-             |lc0_$tag AS (SELECT lang, z,
+             |lc_$tag AS (SELECT lang, z,
              |    CAST((7182726::HUGEINT * 256 * 256 * ${1L << 53})
              |      // (10000000::HUGEINT * sreg) AS BIGINT) AS raw,
-             |    CASE WHEN z > 0
-             |      THEN CAST(length(bin(256 // z)) - 1 AS BIGINT) END AS e,
-             |    CASE WHEN z > 0 THEN (256::BIGINT * $M) //
-             |      (z * (1::BIGINT << CAST(length(bin(256 // z)) - 1 AS INTEGER)))
-             |      END AS mm,
-             |    CASE WHEN z > 0 THEN 0::BIGINT END AS f FROM sz_$tag),
-             |${(1 to 10).map(step).mkString(",\n")},
+             |    CASE WHEN z > 0 THEN ${Log2Q.sql("256", "z")} END AS lq
+             |  FROM sz_$tag),
              |est_$tag AS (SELECT lang,
              |  CASE WHEN z > 0 AND raw <= 640
-             |    THEN (256 * (e * 1024 + f) * 693147) // ${1024L * 1000000}
-             |    ELSE raw END AS est FROM ch10_$tag)"""
-        }
+             |    THEN (256 * lq * 693147) // ${1024L * 1000000}
+             |    ELSE raw END AS est FROM lc_$tag)"""
         s"""WITH w AS (SELECT lang, source,
            |    unnest(string_split(text, ' ')) AS word FROM documents),
            |hh AS (SELECT lang, source, ${XHash.sqlH60("word")} AS h FROM w),

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{C, GQ, Tables}
+import graft.functions.Log2Q
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -414,46 +415,25 @@ object DataQuality {
     // drift); uniform k-value columns read log2(k), constants read 0.
     //
     // Determinism: each value's surprisal log2(N/c) is the EXACT DYADIC
-    // LOG2 of the ≥ 1 rational (the q_text_perplexity recurrence —
-    // characteristic from integer floor-division bit length, 10
-    // mantissa-squaring fractional bits, all BIGINT); H_q = Σ c·q sums
-    // order-free in BIGINT, and the bits figure is ONE IEEE division
-    // H_q/(N·1024) (R7, non-negative). Overflow budget (R10): the BINDING
-    // limit is the mantissa seed n·2^30 of the log2 chain, which needs
-    // n = N div c < 2^33 (≈8.6·10⁹ — the q_text_perplexity bound; ANSI
-    // mode fails loudly past it); the Σ c·q ≤ N·64·1024 < 2^63 sum bound
-    // only binds at N < 1.4·10¹⁴. Beyond 2^33, pre-shift n and d together
-    // (deterministic, ≤2^-10-bit error) as the perplexity/zipf comments
-    // prescribe. ORDER BY column name (R1).
+    // LOG2 of the ≥ 1 rational (`log2q`, as in q_text_perplexity);
+    // H_q = Σ c·q sums order-free in BIGINT, and the bits figure is ONE
+    // IEEE division H_q/(N·1024) (R7, non-negative). Overflow budget (R10): the
+    // Σ c·q ≤ N·64·1024 < 2^63 sum bound holds while N < 1.4·10¹⁴.
+    // ORDER BY column name (R1).
     //
     // Plan shape (100 TB): each column is ONE pruned 1-column scan →
     // value-keyed hash agg (map-side combine; output value-domain-
-    // bounded); the log2 chain and the 1-row reduce run on that
+    // bounded); the log2 and the 1-row reduce run on that
     // model-sized relation; four 1-row results union.
     GQ(
       "q_dq_entropy",
       (s, d) => {
-        val M = 1L << 30
-        val H = 1L << 31
         def colEntropy(df: DataFrame, name: String, c: String): DataFrame = {
           val cnt = df.groupBy(col(c).as("v")).agg(count(lit(1)).as("c"))
           val tot = cnt.agg(sum(col("c")).as("nn"), count(lit(1)).as("nd"))
-          var cur = cnt.crossJoin(broadcast(tot))
-            .withColumn("e", length(bin(expr("nn div c"))) - 1)
-            .withColumn("m", expr(s"(nn * ${M}L) div (c * shiftleft(1L, e))"))
-            .withColumn("f", lit(0L))
-          for (_ <- 1 to 10) {
-            cur = cur
-              .withColumn("m2", expr(s"(m * m) div ${M}L"))
-              .withColumn("f",
-                expr(s"f * 2 + (CASE WHEN m2 >= ${H}L THEN 1 ELSE 0 END)"))
-              .withColumn("m",
-                expr(s"CASE WHEN m2 >= ${H}L THEN m2 div 2 ELSE m2 END"))
-          }
-          cur
+          cnt.crossJoin(broadcast(tot))
             .select(col("nn"), col("nd"),
-              (col("c") * (col("e").cast(LongType) * 1024 + col("f")))
-                .as("cq"))
+              (col("c") * Log2Q.col(col("nn"), col("c"))).as("cq"))
             .groupBy(col("nn"), col("nd")).agg(sum(col("cq")).as("hq"))
             .select(lit(name).as("column_name"), col("nn").as("n_rows"),
               col("nd").as("n_distinct"),
@@ -470,33 +450,15 @@ object DataQuality {
           .orderBy(col("column_name"))
       },
       Some {
-        val M = 1L << 30
-        val H = 1L << 31
-        def ent(tag: String, src: String, c: String, name: String): String = {
-          def step(j: Int): String = {
-            val prev = if (j == 1) s"${tag}i" else s"$tag${j - 1}"
-            s"""$tag$j AS (SELECT c, nn, nd, e,
-               |    CASE WHEN (m*m)//$M >= $H THEN ((m*m)//$M)//2
-               |         ELSE (m*m)//$M END AS m,
-               |    f*2 + CASE WHEN (m*m)//$M >= $H THEN 1 ELSE 0 END AS f
-               |  FROM $prev)"""
-          }
+        def ent(tag: String, src: String, c: String, name: String): String =
           s"""${tag}c AS (SELECT $c AS v, CAST(COUNT(*) AS BIGINT) AS c
              |  FROM $src GROUP BY 1),
              |${tag}t AS (SELECT CAST(SUM(c) AS BIGINT) AS nn,
              |    CAST(COUNT(*) AS BIGINT) AS nd FROM ${tag}c),
-             |${tag}i AS (SELECT c, nn, nd,
-             |    CAST(length(bin(nn // c)) - 1 AS BIGINT) AS e,
-             |    (nn * $M) // (c * (1::BIGINT <<
-             |      CAST(length(bin(nn // c)) - 1 AS INTEGER))) AS m,
-             |    0::BIGINT AS f
-             |  FROM ${tag}c CROSS JOIN ${tag}t),
-             |${(1 to 10).map(step).mkString(",\n")},
              |${tag}h AS (SELECT '$name' AS column_name, MIN(nn) AS n_rows,
              |    MIN(nd) AS n_distinct,
-             |    CAST(SUM(c * (e * 1024 + f)) AS BIGINT) AS hq
-             |  FROM ${tag}10)"""
-        }
+             |    CAST(SUM(c * ${Log2Q.sql("nn", "c")}) AS BIGINT) AS hq
+             |  FROM ${tag}c CROSS JOIN ${tag}t)"""
         s"""WITH ${ent("la", "documents", "lang", "documents.lang")},
            |${ent("so", "documents", "source", "documents.source")},
            |${ent("ev", "events", "event_type", "events.event_type")},

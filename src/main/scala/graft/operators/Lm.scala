@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{GQ, Tables}
+import graft.functions.Log2Q
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -12,18 +13,10 @@ import org.apache.spark.sql.types._
   *
   * Both are transcendental-free by construction: ln()/log2()/pow() are
   * last-ulp engine-specific (the q_text_tfidf precedent), so surprisal is
-  * carried in EXACT DYADIC LOG2 units — integer bit-length for the
-  * characteristic plus an unrolled mantissa-squaring chain for 10
-  * fractional bits, every step a BIGINT multiply/compare/floor-divide that
-  * is bit-identical in Spark and DuckDB.
+  * carried in EXACT DYADIC LOG2 units ([[graft.functions.Log2Q]]), whose
+  * integer recurrence is bit-identical in Spark and DuckDB.
   */
 object Lm {
-
-  /** 2^30 mantissa scale and the 2^31 overflow bit of the squaring chain. */
-  private val M = 1L << 30
-  private val H = 1L << 31
-  /** Fractional bits of the dyadic log2 (resolution 2^-10 ≈ 0.001 bits). */
-  private val FracBits = 10
 
   val queries: Seq[GQ] = Seq(
     // Bigram-LM perplexity scoring (CCNet's quality signal, Wenzek et al.
@@ -34,30 +27,21 @@ object Lm {
     // language / boilerplate-shuffled text; the LM-based complement of
     // q_text_quality's surface gates and q_text_gini's concentration.
     //
-    // Determinism: surprisal is an EXACT DYADIC LOG2 — for the rational
-    // (c_a+V)/(c_ab+1) ≥ 1, the characteristic e = bitlen(n div d) - 1
-    // (provably floor(log2(n/d)): 2^e ≤ n div d ≤ n/d < 2^(e+1)), then 10
-    // fractional bits from the classic mantissa-squaring recurrence
-    // m ← m² div 2^30 (halved when ≥ 2^31) — every step BIGINT multiply /
-    // compare / truncating-divide, identical in both engines (values > 0
-    // so floor ≡ trunc), pinned to a big-integer replay in the spec.
-    // Per-transition units of 2^-10 bits sum EXACTLY (order-free BIGINT
-    // Σ); the mean is ONE fixed IEEE tree sq_sum/(n_trans·1024) (R7).
-    // Overflow budget: m < 2^31 so m² < 2^62; n·2^30 < 2^63 needs
-    // n = c_a+V < 2^33 — 8.6 B occurrences of one leading word; beyond,
-    // pre-shift n and d right together (deterministic, ≤2^-10-bit error).
-    // Sub-2-word docs have no transition and drop out by contract; ties →
-    // doc_id (R1).
+    // Determinism: surprisal is the EXACT DYADIC LOG2 of the rational
+    // (c_a+V)/(c_ab+1) ≥ 1 (`log2q`, [[graft.functions.Log2Q]]), pinned to
+    // a big-integer replay in the spec. Per-transition units of 2^-10 bits
+    // sum EXACTLY (order-free BIGINT Σ); the mean is ONE fixed IEEE tree
+    // sq_sum/(n_trans·1024) (R7). Sub-2-word docs have no transition and
+    // drop out by contract; ties → doc_id (R1).
     //
     // Plan shape (100 TB): the corpus bigram relation persists once (one
     // KGrams scan-side pass, zero shuffles to build); the model is TWO
     // hash aggs over it ((a,b) then a — vocab²-bounded outputs); the
-    // 30-column log2 chain runs on the vocab²-bounded dim table only,
-    // never on the corpus; scoring is ONE (a,b)-keyed join (broadcast
-    // here — at web scale the dim outgrows the threshold and AQE falls
-    // back to a shuffle join keyed on the same columns) + ONE doc_id agg +
-    // TakeOrderedAndProject(20). The corpus is scanned once and shuffled
-    // once (the scoring agg).
+    // log2 runs on the vocab²-bounded dim table only, never on the corpus;
+    // scoring is ONE (a,b)-keyed join (broadcast here — at web scale the
+    // dim outgrows the threshold and AQE falls back to a shuffle join keyed
+    // on the same columns) + ONE doc_id agg + TakeOrderedAndProject(20).
+    // The corpus is scanned once and shuffled once (the scoring agg).
     GQ(
       "q_text_perplexity",
       (s, d) => {
@@ -71,26 +55,9 @@ object Lm {
           .agg(count_distinct(col("w")).as("v"))
         val cab = bg.groupBy(col("a"), col("b")).agg(count(lit(1)).as("cab"))
         val ca = cab.groupBy(col("a")).agg(sum(col("cab")).as("ca"))
-        // 30-step withColumn chain, NOT one expression: m is referenced
-        // twice per step, so a single collapsed tree would double per step
-        // (the 2^10 blowup CollapseProject's multi-reference guard and
-        // this shape both avoid — see the PqEncode planning-cost note).
-        var dim = cab.join(ca, "a").crossJoin(broadcast(v))
+        val sdim = cab.join(ca, "a").crossJoin(broadcast(v))
           .select(col("a"), col("b"),
-            (col("ca") + col("v")).as("nn"), (col("cab") + lit(1L)).as("dd"))
-          .withColumn("e", length(bin(expr("nn div dd"))) - 1)
-          .withColumn("m", expr(s"(nn * ${M}L) div (dd * shiftleft(1L, e))"))
-          .withColumn("f", lit(0L))
-        for (_ <- 1 to FracBits) {
-          dim = dim
-            .withColumn("m2", expr(s"(m * m) div ${M}L"))
-            .withColumn("f",
-              expr(s"f * 2 + (CASE WHEN m2 >= ${H}L THEN 1 ELSE 0 END)"))
-            .withColumn("m",
-              expr(s"CASE WHEN m2 >= ${H}L THEN m2 div 2 ELSE m2 END"))
-        }
-        val sdim = dim.select(col("a"), col("b"),
-          (col("e").cast(LongType) * 1024 + col("f")).as("sq"))
+            Log2Q.col(col("ca") + col("v"), col("cab") + lit(1L)).as("sq"))
         bg.join(broadcast(sdim), Seq("a", "b"))
           .groupBy(col("doc_id"))
           .agg(count(lit(1)).as("n_trans"), sum(col("sq")).as("sq_sum"))
@@ -101,14 +68,6 @@ object Lm {
           .limit(20)
       },
       Some {
-        def step(j: Int): String = {
-          val prev = if (j == 1) "i0" else s"s${j - 1}"
-          s"""s$j AS (SELECT a, b, e,
-             |    CASE WHEN (m*m)//$M >= $H THEN ((m*m)//$M)//2
-             |         ELSE (m*m)//$M END AS m,
-             |    f*2 + CASE WHEN (m*m)//$M >= $H THEN 1 ELSE 0 END AS f
-             |  FROM $prev)"""
-        }
         s"""WITH dd AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
            |bg AS MATERIALIZED (SELECT doc_id,
            |    string_split(p, ' ')[1] AS a, string_split(p, ' ')[2] AS b
@@ -122,13 +81,7 @@ object Lm {
            |ca AS (SELECT a, CAST(SUM(cab) AS BIGINT) AS ca FROM cab GROUP BY 1),
            |d0 AS (SELECT cab.a, cab.b, ca.ca + (SELECT v FROM vv) AS nn,
            |    cab.cab + 1 AS dd FROM cab JOIN ca ON cab.a = ca.a),
-           |i0 AS (SELECT a, b, nn, dd,
-           |    CAST(length(bin(nn // dd)) - 1 AS BIGINT) AS e,
-           |    (nn * $M) // (dd * (1::BIGINT <<
-           |      CAST(length(bin(nn // dd)) - 1 AS INTEGER))) AS m,
-           |    0::BIGINT AS f FROM d0),
-           |${(1 to FracBits).map(step).mkString(",\n")},
-           |dim AS (SELECT a, b, e * 1024 + f AS sq FROM s$FracBits),
+           |dim AS (SELECT a, b, ${Log2Q.sql("nn", "dd")} AS sq FROM d0),
            |pp AS (SELECT bg.doc_id, CAST(COUNT(*) AS BIGINT) AS n_trans,
            |    CAST(SUM(dim.sq) AS BIGINT) AS sq_sum
            |  FROM bg JOIN dim ON bg.a = dim.a AND bg.b = dim.b
@@ -350,15 +303,11 @@ object Lm {
     // near-uniform and reports slope ≈ −0.04: the detector detecting).
     //
     // Determinism: both logs are the EXACT DYADIC LOG2 of the file
-    // header — characteristic from integer bit length, 10 fractional
-    // bits from the mantissa-squaring chain, every step BIGINT — the
-    // same recurrence q_text_perplexity's spec pins to a BigInt replay,
-    // applied to TWO values (rank, freq) in one pass. The slope is the
-    // q_stats_linreg moment tree over the quantized integers: the 2^-10
-    // unit cancels in the ratio; the intercept divides once by 1024 to
-    // report bits. roundz(6) + R8 (slope reaches 0 from below on
-    // anti-Zipfian corpora). Overflow budget (R10): freq·2^30 needs
-    // freq < 2^33 — the q_text_perplexity bound; beyond, pre-shift.
+    // header (`log2q(v, 1)`), applied to TWO values (rank, freq) in one
+    // pass. The slope is the q_stats_linreg moment tree over the quantized
+    // integers: the 2^-10 unit cancels in the ratio; the intercept divides
+    // once by 1024 to report bits. roundz(6) + R8 (slope reaches 0 from
+    // below on anti-Zipfian corpora).
     //
     // Plan shape (100 TB): ONE corpus scan → vocab-keyed hash agg
     // (map-side combine). Ranking NEVER sorts the vocabulary globally
@@ -376,7 +325,7 @@ object Lm {
     // corpus size), and the blocks explode back to V rank rows in
     // 4096-sized chunks (two bounded `sequence` generates with a chunk
     // repartition between them, so the hapax block — half the vocab —
-    // spreads across the cluster instead of one task). The log2 chain
+    // spreads across the cluster instead of one task). The two log2s
     // and the 1-row moment agg run on the generated rows: BIGINT sums
     // are order-free, so the output is bit-identical to the old global
     // rank. Linear in corpus, forever — and no single-partition anything.
@@ -411,29 +360,9 @@ object Lm {
           .select(col("c"),
             expr(s"explode(sequence(base + ch * $chunk + 1," +
               s" base + least((ch + 1) * $chunk, k)))").as("r"))
-        var cur = rk
-          .withColumn("xe", (length(bin(col("r"))) - 1).cast(LongType))
-          .withColumn("xm", expr(s"(r * ${M}L) div shiftleft(1L, CAST(xe AS INT))"))
-          .withColumn("xf", lit(0L))
-          .withColumn("ye", (length(bin(col("c"))) - 1).cast(LongType))
-          .withColumn("ym", expr(s"(c * ${M}L) div shiftleft(1L, CAST(ye AS INT))"))
-          .withColumn("yf", lit(0L))
-        for (_ <- 1 to FracBits) {
-          cur = cur
-            .withColumn("xm2", expr(s"(xm * xm) div ${M}L"))
-            .withColumn("xf",
-              expr(s"xf * 2 + (CASE WHEN xm2 >= ${H}L THEN 1 ELSE 0 END)"))
-            .withColumn("xm",
-              expr(s"CASE WHEN xm2 >= ${H}L THEN xm2 div 2 ELSE xm2 END"))
-            .withColumn("ym2", expr(s"(ym * ym) div ${M}L"))
-            .withColumn("yf",
-              expr(s"yf * 2 + (CASE WHEN ym2 >= ${H}L THEN 1 ELSE 0 END)"))
-            .withColumn("ym",
-              expr(s"CASE WHEN ym2 >= ${H}L THEN ym2 div 2 ELSE ym2 END"))
-        }
-        val m = cur
-          .select((col("xe") * 1024 + col("xf")).as("xq"),
-            (col("ye") * 1024 + col("yf")).as("yq"))
+        val m = rk
+          .select(Log2Q.col(col("r"), lit(1L)).as("xq"),
+            Log2Q.col(col("c"), lit(1L)).as("yq"))
           .agg(count(lit(1)).as("n"),
             sum(col("xq")).as("sx"), sum(col("yq")).as("sy"),
             sum(col("xq") * col("yq")).as("sxy"),
@@ -450,17 +379,6 @@ object Lm {
             .as("intercept_bits"))
       },
       Some {
-        def zstep(j: Int): String = {
-          val prev = if (j == 1) "z0" else s"z${j - 1}"
-          s"""z$j AS (SELECT xe, ye,
-             |    CASE WHEN (xm*xm)//$M >= $H THEN ((xm*xm)//$M)//2
-             |         ELSE (xm*xm)//$M END AS xm,
-             |    xf*2 + CASE WHEN (xm*xm)//$M >= $H THEN 1 ELSE 0 END AS xf,
-             |    CASE WHEN (ym*ym)//$M >= $H THEN ((ym*ym)//$M)//2
-             |         ELSE (ym*ym)//$M END AS ym,
-             |    yf*2 + CASE WHEN (ym*ym)//$M >= $H THEN 1 ELSE 0 END AS yf
-             |  FROM $prev)"""
-        }
         s"""WITH wf AS (SELECT w, CAST(COUNT(*) AS BIGINT) AS c
            |  FROM (SELECT unnest(string_split(text, ' ')) AS w FROM documents)
            |  GROUP BY w),
@@ -483,19 +401,8 @@ object Lm {
            |    unnest(generate_series(base + ch * 4096 + 1,
            |      base + least((ch + 1) * 4096, k))) AS r
            |  FROM ck),
-           |z0 AS (SELECT
-           |    CAST(length(bin(r)) - 1 AS BIGINT) AS xe,
-           |    (r * $M) // (1::BIGINT <<
-           |      CAST(length(bin(r)) - 1 AS INTEGER)) AS xm,
-           |    0::BIGINT AS xf,
-           |    CAST(length(bin(c)) - 1 AS BIGINT) AS ye,
-           |    (c * $M) // (1::BIGINT <<
-           |      CAST(length(bin(c)) - 1 AS INTEGER)) AS ym,
-           |    0::BIGINT AS yf
-           |  FROM rk),
-           |${(1 to FracBits).map(zstep).mkString(",\n")},
-           |q AS (SELECT xe * 1024 + xf AS xq, ye * 1024 + yf AS yq
-           |  FROM z$FracBits),
+           |q AS (SELECT ${Log2Q.sql("r", "1")} AS xq,
+           |    ${Log2Q.sql("c", "1")} AS yq FROM rk),
            |m AS (SELECT COUNT(*) AS n,
            |    CAST(SUM(xq) AS DOUBLE) AS sx, CAST(SUM(yq) AS DOUBLE) AS sy,
            |    CAST(SUM(xq * yq) AS DOUBLE) AS sxy,

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{GQ, Tables}
-import graft.functions.vec
+import graft.functions.{Log2Q, vec}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -60,26 +60,11 @@ object Retrieval {
       dl: org.apache.spark.sql.DataFrame,
       stats: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
-    val M = 1L << 30
-    val H = 1L << 31
-    var idf = tf.groupBy(col("word")).agg(count(lit(1)).as("df"))
+    val sidf = tf.groupBy(col("word")).agg(count(lit(1)).as("df"))
       .crossJoin(broadcast(stats))
-      .select(col("word"), col("df"),
-        (col("n_docs") * 2 + lit(2L)).as("nn"),
-        (col("df") * 2 + lit(1L)).as("dd"))
-      .withColumn("e", length(bin(expr("nn div dd"))) - 1)
-      .withColumn("m", expr(s"(nn * ${M}L) div (dd * shiftleft(1L, e))"))
-      .withColumn("f", lit(0L))
-    for (_ <- 1 to 10) {
-      idf = idf
-        .withColumn("m2", expr(s"(m * m) div ${M}L"))
-        .withColumn("f",
-          expr(s"f * 2 + (CASE WHEN m2 >= ${H}L THEN 1 ELSE 0 END)"))
-        .withColumn("m",
-          expr(s"CASE WHEN m2 >= ${H}L THEN m2 div 2 ELSE m2 END"))
-    }
-    val sidf = idf.select(col("word"),
-      (col("e").cast(LongType) * 1024 + col("f")).as("idf_q"))
+      .select(col("word"),
+        Log2Q.col(col("n_docs") * 2 + lit(2L), col("df") * 2 + lit(1L))
+          .as("idf_q"))
     tf.join(broadcast(sidf), "word")
       .join(dl, "doc_id")
       .crossJoin(broadcast(stats))
@@ -130,17 +115,7 @@ object Retrieval {
        |FROM ysc GROUP BY doc_id
        |ORDER BY score_q DESC, doc_id LIMIT 10""".stripMargin
 
-  private def bm25SqlChain(p: String, q: String): String = {
-    val M = 1L << 30
-    val H = 1L << 31
-    def step(j: Int): String = {
-      val prev = if (j == 1) s"${p}i0" else s"${p}s${j - 1}"
-      s"""${p}s$j AS (SELECT word,
-         |    CASE WHEN (m*m)//$M >= $H THEN ((m*m)//$M)//2
-         |         ELSE (m*m)//$M END AS m,
-         |    f*2 + CASE WHEN (m*m)//$M >= $H THEN 1 ELSE 0 END AS f,
-         |    e FROM $prev)"""
-    }
+  private def bm25SqlChain(p: String, q: String): String =
     s"""${p}tf AS (SELECT w.doc_id, w.word, CAST(COUNT(*) AS BIGINT) AS tf
        |  FROM w JOIN $q ON w.word = $q.word GROUP BY 1, 2),
        |${p}dfr AS (SELECT word, CAST(COUNT(*) AS BIGINT) AS df
@@ -148,13 +123,8 @@ object Retrieval {
        |${p}d0 AS (SELECT word,
        |    2 * (SELECT n_docs FROM st) + 2 AS nn, 2 * df + 1 AS dd
        |  FROM ${p}dfr),
-       |${p}i0 AS (SELECT word,
-       |    CAST(length(bin(nn // dd)) - 1 AS BIGINT) AS e,
-       |    (nn * $M) // (dd * (1::BIGINT <<
-       |      CAST(length(bin(nn // dd)) - 1 AS INTEGER))) AS m,
-       |    0::BIGINT AS f FROM ${p}d0),
-       |${(1 to 10).map(step).mkString(",\n")},
-       |${p}sidf AS (SELECT word, e * 1024 + f AS idf_q FROM ${p}s10),
+       |${p}sidf AS (SELECT word, ${Log2Q.sql("nn", "dd")} AS idf_q
+       |  FROM ${p}d0),
        |${p}sc AS (SELECT tf.doc_id,
        |    (sidf.idf_q * 22 * (SELECT s_tok FROM st) * tf.tf) //
        |    (10 * (SELECT s_tok FROM st) * tf.tf
@@ -163,7 +133,6 @@ object Retrieval {
        |  FROM ${p}tf tf
        |  JOIN ${p}sidf sidf ON sidf.word = tf.word
        |  JOIN dl ON dl.doc_id = tf.doc_id)""".stripMargin
-  }
 
   val queries: Seq[GQ] = Seq(
     // Per-doc top-3 salient terms by tf/df — the rank-equivalent core of
@@ -517,10 +486,8 @@ object Retrieval {
     // Determinism: BOTH factors are transcendental-free. idf uses the
     // Lucene-style always-positive form log2(1 + (N-df+1/2)/(df+1/2)) =
     // log2((2N+2)/(2df+1)) — a rational ≥ 1 of exact BIGINTs, evaluated
-    // by the SAME exact dyadic log2 as q_text_perplexity (characteristic
-    // e = bitlen(n div d) - 1, then 10 fractional bits from the
-    // mantissa-squaring recurrence m ← m² div 2^30, every step BIGINT
-    // multiply/compare/floor-div, identical in both engines) in units of
+    // by the SAME exact dyadic log2 as q_text_perplexity (`log2q`,
+    // [[graft.functions.Log2Q]], identical in both engines) in units of
     // 2^-10 bits. The tf saturation with k1 = 6/5 and b = 3/4 clears to
     // the integer rational tf·(k1+1)/(tf + k1·(1-b+b·dl·N/S)) =
     // 22·S·tf / (10·S·tf + 3·S + 9·dl·N) over exact corpus stats
@@ -536,7 +503,7 @@ object Retrieval {
     // semi-join on the exploded corpus BEFORE the (doc, word) agg — only
     // matching postings are ever aggregated, never the full vocabulary;
     // df folds from that bounded tf relation (every doc holding a query
-    // term is in it by construction); the 10-step log2 chain runs on the
+    // term is in it by construction); the log2 runs on the
     // |query-term|-bounded df table; corpus stats are a 1-row broadcast.
     // The one corpus-sized exchange is the doc_id join attaching dl to
     // matched postings — keyed, narrow (two longs), AQE-broadcastable
@@ -545,7 +512,7 @@ object Retrieval {
     GQ(
       "q_retrieval_bm25",
       (s, d) => {
-        // the dyadic-log2 idf chain and tf saturation live in bm25Rank
+        // the dyadic-log2 idf and tf saturation live in bm25Rank
         // (shared with q_retrieval_queryexp's two rounds)
         val docs = Tables.t(s, d, "documents")
         val corpus = docs.filter(col("doc_id") =!= 0)
@@ -603,7 +570,7 @@ object Retrieval {
     // written index). Everything downstream derives from the index:
     // per-doc length dl = Σ tf (exact — every token is counted), corpus
     // stats from dl, BOTH BM25 rounds via bm25FromIdx (the tf rows are
-    // pre-counted, so a round is semi-join + idf chain + score agg — no
+    // pre-counted, so a round is semi-join + idf + score agg — no
     // re-explode), and the feedback vote reads index rows for the 10
     // feedback docs (already distinct per (doc, word) by construction).
     // The round-6 shape re-exploded the corpus per pass — 3.1× for 10×
@@ -831,24 +798,21 @@ object Retrieval {
     // Σ_rows r·log2(N/r) + Σ_cols c·log2(N/c) − Σ_cells k·log2(N/k).
     //
     // Determinism: every log2 is the EXACT DYADIC LOG2 of an N/k ≥ 1
-    // rational (the q_text_perplexity recurrence), run ONCE over a tall
+    // rational (`log2q`, as in q_text_perplexity), run ONCE over a tall
     // (pair × 8 signed entries) relation; G² accumulates as a signed
     // BIGINT in 2^-10-bit units — order-free — with zero cells
     // contributing zero by construction; ONE IEEE division renders bits
     // (R7). Ties → (w1, w2) (R1). Overflow (R10): k·q ≤ N·2^16 needs
-    // N < 2^47 bigrams; the chain's n·2^30 needs N < 2^33 first — the
-    // shared perplexity bound; beyond, pre-shift.
+    // N < 2^47 bigrams.
     //
     // Plan shape (100 TB): corpus scanned once into the vocab²-bounded
     // bigram agg; margins are two aggs OVER that relation; the ×8 tall
-    // explode, the log2 chain, and the G² re-agg all run on candidate
+    // explode, the log2, and the G² re-agg all run on candidate
     // pairs (k11 ≥ 5 — vocab²-bounded, corpus-size-independent); top-k
     // is TakeOrderedAndProject.
     GQ(
       "q_text_llr",
       (s, d) => {
-        val M = 1L << 30
-        val Hb = 1L << 31
         val bg = Grams.wordPairRows(Tables.t(s, d, "documents"))
         val cxy = graft.Caches.persist(
           bg.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("k11")))
@@ -872,23 +836,9 @@ object Retrieval {
           .select(col("w1"), col("w2"), col("k11"), col("nb"),
             col("e.s").as("sg"), col("e.k").as("k"))
           .filter(col("k") >= 1)
-        var cur = tall
-          .withColumn("xe", length(bin(expr("nb div k"))) - 1)
-          .withColumn("m",
-            expr(s"(nb * ${M}L) div (k * shiftleft(1L, xe))"))
-          .withColumn("f", lit(0L))
-        for (_ <- 1 to 10) {
-          cur = cur
-            .withColumn("m2", expr(s"(m * m) div ${M}L"))
-            .withColumn("f",
-              expr(s"f * 2 + (CASE WHEN m2 >= ${Hb}L THEN 1 ELSE 0 END)"))
-            .withColumn("m",
-              expr(s"CASE WHEN m2 >= ${Hb}L THEN m2 div 2 ELSE m2 END"))
-        }
-        cur
+        tall
           .select(col("w1"), col("w2"), col("k11"),
-            (col("sg") * col("k") *
-              (col("xe").cast(LongType) * 1024 + col("f"))).as("t"))
+            (col("sg") * col("k") * Log2Q.col(col("nb"), col("k"))).as("t"))
           .groupBy(col("w1"), col("w2"), col("k11"))
           .agg((sum(col("t")) * 2).as("llr_q"))
           .select(col("w1"), col("w2"), col("k11").as("cxy"), col("llr_q"),
@@ -897,16 +847,6 @@ object Retrieval {
           .limit(20)
       },
       Some {
-        val M = 1L << 30
-        val Hb = 1L << 31
-        def step(j: Int): String = {
-          val prev = if (j == 1) "i0" else s"s${j - 1}"
-          s"""s$j AS (SELECT w1, w2, k11, sg, k, xe,
-             |    CASE WHEN (m*m)//$M >= $Hb THEN ((m*m)//$M)//2
-             |         ELSE (m*m)//$M END AS m,
-             |    f*2 + CASE WHEN (m*m)//$M >= $Hb THEN 1 ELSE 0 END AS f
-             |  FROM $prev)"""
-        }
         s"""WITH dd AS (SELECT string_split(text, ' ') AS ws FROM documents),
            |pj AS (SELECT unnest(list_transform(range(1, len(ws)),
            |    i -> ws[i] || ' ' || ws[i+1])) AS p FROM dd WHERE len(ws) >= 2),
@@ -928,15 +868,10 @@ object Retrieval {
            |      {'s': 1, 'k': ca}, {'s': 1, 'k': nb - ca},
            |      {'s': 1, 'k': cb}, {'s': 1, 'k': nb - cb}]) AS e
            |    FROM cand) WHERE e.k >= 1),
-           |i0 AS (SELECT w1, w2, k11, sg, k,
-           |    CAST(length(bin(nb // k)) - 1 AS BIGINT) AS xe,
-           |    (nb * $M) // (k * (1::BIGINT <<
-           |      CAST(length(bin(nb // k)) - 1 AS INTEGER))) AS m,
-           |    0::BIGINT AS f FROM tall),
-           |${(1 to 10).map(step).mkString(",\n")},
            |q AS (SELECT w1, w2, k11,
-           |    CAST(SUM(sg * k * (xe * 1024 + f)) * 2 AS BIGINT) AS llr_q
-           |  FROM s10 GROUP BY 1, 2, 3)
+           |    CAST(SUM(sg * k * ${Log2Q.sql("nb", "k")}) * 2 AS BIGINT)
+           |      AS llr_q
+           |  FROM tall GROUP BY 1, 2, 3)
            |SELECT w1, w2, k11 AS cxy, llr_q,
            |  CAST(llr_q AS DOUBLE) / 1024.0 AS llr_bits
            |FROM q ORDER BY llr_q DESC, w1, w2 LIMIT 20""".stripMargin

@@ -20,8 +20,8 @@ class CdcChunksSpec extends AnyFunSuite {
   test("JVM h60 is bit-identical to the column h60 (md5-prefix digest)") {
     val samples = Seq("", " ", "a", "hello world", "naïve café — ünïcode",
       "日本語テキスト", "x" * 500, "tab\tand\nnewline")
-    val viaColumn = samples.toDF("s")
-      .select(XHash.h60(col("s"))).as[Long].collect()
+    val viaColumn = TestSpark.generated(samples.toDF("s"), XHash.h60(col("s")))
+      .map(_.getLong(0))
     samples.zip(viaColumn).foreach { case (s, expected) =>
       assert(jvmH60(s) == expected, s"h60 mismatch for '$s'")
     }
@@ -69,8 +69,10 @@ class CdcChunksSpec extends AnyFunSuite {
   }
 
   test("the Column builder matches compute()") {
-    val got = Seq("alpha beta gamma delta epsilon zeta eta theta").toDF("text")
-      .select(CdcChunks.col(col("text"), 7)).as[Seq[Long]].head
+    // through generated code, so CdcChunks.doGenCode is compiled and run
+    val got = TestSpark.generated(
+      Seq("alpha beta gamma delta epsilon zeta eta theta").toDF("text"),
+      CdcChunks.col(col("text"), 7)).head.getSeq[Long](0)
     assert(got == exprChunks("alpha beta gamma delta epsilon zeta eta theta"))
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, NativeColumn, Row}
+import org.apache.spark.sql.{Column, NativeColumn}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
@@ -16,6 +16,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class PropertySpec extends AnyFunSuite {
   private val spark = TestSpark.spark
   import spark.implicits._
+  import TestSpark.generated
 
   /** A native expression over the `embedding` column, as a Column. */
   private def onEmbedding(build: Expression => Expression): Column =
@@ -23,32 +24,6 @@ class PropertySpec extends AnyFunSuite {
 
   private def samples[A](g: Gen[A], n: Int): Seq[A] =
     (1 to n).flatMap(i => g.apply(Gen.Parameters.default, Seed(42L + i)))
-
-  /** `in` projected onto `c` (as column `c`) and collected through
-    * whole-stage generated code. A local `toDF` input would otherwise be
-    * folded by `ConvertToLocalRelation`, which evaluates the projection on
-    * the driver with the interpreted path, so that rule is excluded here;
-    * codegen fallback is off, so a generated class that does not compile
-    * fails the test instead of running interpreted; and the executed plan
-    * must hold the projection inside a `*(n)` codegen span. */
-  private def generated(in: => DataFrame, c: Column): Array[Row] = {
-    val confs = Seq(
-      "spark.sql.optimizer.excludedRules" ->
-        "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation",
-      "spark.sql.codegen.fallback" -> "false")
-    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
-      val df = in.select(c.as("c"))
-      val plan = df.queryExecution.executedPlan.toString
-      assert("""(?m)^\*\(\d+\) Project \[""".r.findFirstIn(plan).nonEmpty,
-        s"the projection is not in a whole-stage codegen span:\n$plan")
-      df.collect()
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
 
   test("union-distinct is idempotent and commutative (reference C2 law)") {
     val lists = Gen.listOfN(30, Gen.chooseNum(-5, 5))
@@ -1186,6 +1161,50 @@ class PropertySpec extends AnyFunSuite {
       (1, 2500L, 1L)))
   }
 
+  test("Log2Q: the kernel equals the BigInt reference on edge inputs and a seeded sweep") {
+    import graft.functions.Log2Q
+    val ds = Seq(1L, 2L, 3L, 7L, 1000L, (1L << 31) - 1, 1L << 32)
+    val edges =
+      ds.map(d => (d, d)) ++ // n = d: exactly 0 bits
+        (0 to 62).flatMap { k =>
+          val p = 1L << k
+          Seq(p, p - 1, p + 1).filter(_ >= 1).flatMap(n => Seq((n, 1L), (n, 3L)))
+        } ++
+        (0 to 30).flatMap(k => ds.map(d => ((d << k) + (if (k % 2 == 0) 1 else -1), d))) ++
+        Seq((1L << 60) - 1, 1L << 60, (1L << 60) + 1, Long.MaxValue).map((_, 1L)) ++
+        Seq((Long.MaxValue, 1L << 32), ((1L << 32) + 1, 1L << 32))
+    val rnd = new scala.util.Random(20261021L)
+    val sweep = Seq.fill(100000) {
+      val d = 1L + (rnd.nextLong() >>> (32 + rnd.nextInt(32))) // 1 ≤ d ≤ 2^32
+      (d + ((rnd.nextLong() >>> 1) >>> rnd.nextInt(63)), d) // n wraps below d past 2^63
+    }
+    for ((n, d) <- edges ++ sweep if n >= d && d >= 1)
+      assert(Log2Q.compute(n, d) === Log2Ref.log2q(n, d), s"log2q($n, $d)")
+    assert(Log2Q.compute(1L << 60, 1L) === 60L * 1024)
+    assert(Log2Q.compute(3L, 1L) === 1623L) // log2(3) = 1.58496… → 1623/1024
+  }
+
+  test("Log2Q: interpreted eval equals the codegen path; NULL in gives NULL out") {
+    import graft.functions.Log2Q
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    val rows: Seq[(Option[Long], Option[Long])] =
+      samples(Gen.zip(Gen.chooseNum(1L, 1L << 32), Gen.chooseNum(0L, Long.MaxValue)), 60)
+        .map { case (d, x) => (Some(d + x % (Long.MaxValue - d)), Some(d)) } ++
+        Seq((Some(1L << 60), Some(1L)), (None, Some(1L)), (Some(5L), None))
+    val viaCodegen = generated(rows.toDF("n", "d"), Log2Q.col(col("n"), col("d")))
+      .map(r => if (r.isNullAt(0)) None else Some(r.getLong(0))).toSeq
+    val direct = rows.map {
+      case (Some(n), Some(d)) =>
+        Some(Log2Q(Literal(0L), Literal(0L)).nullSafeEval(n, d).asInstanceOf[Long])
+      case _ => None
+    }
+    assert(viaCodegen === direct)
+    assert(rows.zip(viaCodegen).forall {
+      case ((Some(n), Some(d)), got) => got === Some(Log2Ref.log2q(n, d))
+      case (_, got) => got.isEmpty
+    })
+  }
+
   test("q_text_perplexity: dyadic-log2 surprisal matches a big-integer replay") {
     val dir = TestSpark.jvmTempDir("pplprop-")
     // bigrams: (a,b)x3, (b,a)x1, (b,c)x1; V={a,b,c,x}=4; c_a=3, c_b=2
@@ -1194,20 +1213,8 @@ class PropertySpec extends AnyFunSuite {
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
     // reference dyadic log2: exact BigInt replay of the 10-step recurrence
-    def dy(n: Long, d: Long): Long = {
-      val e = java.lang.Long.numberOfTrailingZeros(
-        java.lang.Long.highestOneBit(n / d))
-      var m = (BigInt(n) << 30) / (BigInt(d) << e)
-      var f = 0L
-      for (_ <- 1 to 10) {
-        val m2 = (m * m) >> 30
-        if (m2 >= (BigInt(1) << 31)) { f = f * 2 + 1; m = m2 / 2 }
-        else { f = f * 2; m = m2 }
-      }
-      e.toLong * 1024 + f
-    }
-    val ab = dy(3 + 4, 3 + 1) // c_a+V=7, c_ab+1=4
-    val ba = dy(2 + 4, 1 + 1) // 6/2 = 3.0 -> ~1.585 bits
+    val ab = Log2Ref.log2q(3 + 4, 3 + 1) // c_a+V=7, c_ab+1=4
+    val ba = Log2Ref.log2q(2 + 4, 1 + 1) // 6/2 = 3.0 -> ~1.585 bits
     assert(ab === 826L && ba === 1623L)
     val out = Registry.byName("q_text_perplexity").run(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
@@ -1338,20 +1345,9 @@ class PropertySpec extends AnyFunSuite {
       val hex = md.digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
       java.lang.Long.parseLong(hex.take(15), 16)
     }
-    def log2q(n: BigInt): Long = {
-      val e = n.bitLength - 1
-      var m = if (e >= 30) n >> (e - 30) else n << (30 - e)
-      var f = 0L
-      for (_ <- 1 to 10) {
-        val m2 = (m * m) >> 30
-        if (m2 >= (BigInt(1) << 31)) { f = f * 2 + 1; m = m2 >> 1 }
-        else { f = f * 2; m = m2 }
-      }
-      e.toLong * 1024 + f
-    }
     val expect = rows.map { case (id, text, _, _) =>
       val w = math.max(text.length.toLong, 1L)
-      val l = 61440L - log2q(BigInt(h60(s"wsample:$id") + 1L))
+      val l = 61440L - Log2Ref.log2q(h60(s"wsample:$id") + 1L, 1)
       (id, (l << 20) / w)
     }.sortBy { case (id, k) => (k, id) }.take(20)
     val out = Registry.byName("q_sample_weighted").run(spark, dir).collect()
@@ -1771,24 +1767,13 @@ class PropertySpec extends AnyFunSuite {
     // the full dyadic-log2 + OLS pipeline recomputed OUTSIDE Spark from
     // raw word counts (the q_text_perplexity BigInt-replay discipline)
     val d = "/root/testdata/sf0.001"
-    def log2q(v: Long): Long = {
-      val e = 63 - java.lang.Long.numberOfLeadingZeros(v)
-      var m = (v * (1L << 30)) / (1L << e)
-      var f = 0L
-      for (_ <- 1 to 10) {
-        val m2 = (m * m) / (1L << 30)
-        f = f * 2 + (if (m2 >= (1L << 31)) 1 else 0)
-        m = if (m2 >= (1L << 31)) m2 / 2 else m2
-      }
-      e * 1024L + f
-    }
     val freqs = Tables.t(spark, d, "documents")
       .select(explode(split(col("text"), " ")).as("w"))
       .groupBy(col("w")).count().collect()
       .map(r => (r.getString(0), r.getLong(1)))
       .sortBy { case (w, c) => (-c, w) }
     val pts = freqs.zipWithIndex.map { case ((_, c), i) =>
-      (log2q(i + 1L), log2q(c))
+      (Log2Ref.log2q(i + 1L, 1), Log2Ref.log2q(c, 1))
     }
     val n = pts.length.toDouble
     val sx = pts.map(_._1).sum.toDouble
@@ -1923,17 +1908,7 @@ class PropertySpec extends AnyFunSuite {
     // recompute G2 from raw bigram counts with the identical dyadic
     // recurrence outside Spark (the q_text_zipf replay discipline)
     val d = "/root/testdata/sf0.001"
-    def log2q(nn: Long, c: Long): Long = {
-      val e = 63 - java.lang.Long.numberOfLeadingZeros(nn / c)
-      var m = (nn * (1L << 30)) / (c * (1L << e))
-      var f = 0L
-      for (_ <- 1 to 10) {
-        val m2 = (m * m) / (1L << 30)
-        f = f * 2 + (if (m2 >= (1L << 31)) 1 else 0)
-        m = if (m2 >= (1L << 31)) m2 / 2 else m2
-      }
-      e * 1024L + f
-    }
+    import Log2Ref.log2q
     val bgs = Tables.t(spark, d, "documents").collect()
       .map(_.getAs[String]("text")).flatMap { t =>
         val ws = t.split(" ")
@@ -1991,17 +1966,7 @@ class PropertySpec extends AnyFunSuite {
     // with the recurrence outside Spark; the 20-source uniform column must
     // read the quantized log2(20) exactly
     val d = "/root/testdata/sf0.01"
-    def log2q(nn: Long, c: Long): Long = {
-      val e = 63 - java.lang.Long.numberOfLeadingZeros(nn / c)
-      var m = (nn * (1L << 30)) / (c * (1L << e))
-      var f = 0L
-      for (_ <- 1 to 10) {
-        val m2 = (m * m) / (1L << 30)
-        f = f * 2 + (if (m2 >= (1L << 31)) 1 else 0)
-        m = if (m2 >= (1L << 31)) m2 / 2 else m2
-      }
-      e * 1024L + f
-    }
+    import Log2Ref.log2q
     def expected(counts: Seq[Long]): (Long, Long, Double) = {
       val nn = counts.sum
       val hq = counts.map(c => c * log2q(nn, c)).sum

@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 
 /** Shared test SparkSession (one per forked test JVM), started by
   * [[Session.start]] like every main, on 4 cores, with its warehouse in a
@@ -20,6 +20,51 @@ object TestSpark {
     val d = Files.createTempDirectory(prefix)
     sys.addShutdownHook(Caches.deleteTree(d))
     d.toString
+  }
+
+  /** `in` projected onto `c` (as column `c`) and collected through
+    * whole-stage generated code. A local `toDF` input would otherwise be
+    * folded by `ConvertToLocalRelation`, which evaluates the projection on
+    * the driver with the interpreted path, so that rule is excluded here;
+    * codegen fallback is off, so a generated class that does not compile
+    * fails the test instead of running interpreted; and the executed plan
+    * must hold the projection inside a `*(n)` codegen span. */
+  def generated(in: => DataFrame, c: Column): Array[Row] = {
+    val confs = Seq(
+      "spark.sql.optimizer.excludedRules" ->
+        "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation",
+      "spark.sql.codegen.fallback" -> "false")
+    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      val df = in.select(c.as("c"))
+      val plan = df.queryExecution.executedPlan.toString
+      assert("""(?m)^\*\(\d+\) Project \[""".r.findFirstIn(plan).nonEmpty,
+        s"the projection is not in a whole-stage codegen span:\n$plan")
+      df.collect()
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+}
+
+/** The exact dyadic log2 of n/d in 2^-10-bit units, `e*1024 + f`, replayed
+  * in BigInt from its definition: e = bitlen(n div d) - 1, the seed
+  * (n·2^30) div (d·2^e), then 10 squaring steps m2 = m² div 2^30 (bit 1 and
+  * m = m2 div 2 when m2 ≥ 2^31). The one reference every log2 test reads.
+  */
+object Log2Ref {
+  def log2q(n: BigInt, d: BigInt): Long = {
+    val e = (n / d).bitLength - 1
+    var m = (n << 30) / (d << e)
+    var f = 0L
+    for (_ <- 1 to 10) {
+      val m2 = (m * m) >> 30
+      if (m2 >= (BigInt(1) << 31)) { f = f * 2 + 1; m = m2 >> 1 }
+      else { f = f * 2; m = m2 }
+    }
+    e.toLong * 1024 + f
   }
 }
 
